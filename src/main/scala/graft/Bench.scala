@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -14,7 +16,7 @@ object Bench {
     Seq("q_a3_conditional_agg", "q_txt3_fingerprint", "q_sim1_cosine_topk")
       .foreach { name =>
         SparkEntry.queries.get(name).foreach { fn =>
-          try fn(spark, sfDir).limit(1).count() catch { case _: Throwable => () }
+          try fn(spark, sfDir).limit(1).count() catch { case NonFatal(_) => () }
         }
       }
     // Deterministic (sorted) execution order so per-query timings are
@@ -84,7 +86,7 @@ object Bench {
           // NonFatal only: an OOM/VM error must crash the bench, not
           // publish gold_gate_build_sec:null beside sub-second cached
           // q_gold_* rows — the exact confusion this field prevents.
-          case scala.util.control.NonFatal(e) =>
+          case NonFatal(e) =>
             println(s"[bench] gold gate build failed: ${e.getMessage}")
             None
         }
@@ -116,7 +118,7 @@ object Bench {
         }
         Some(java.security.MessageDigest.getInstance("MD5")
           .digest(p.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12))
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
     val results = selected.map { case (name, fn) =>
       var err: Option[String] = None
       var fp: Option[String] = None
@@ -146,7 +148,7 @@ object Bench {
           if (fp.isEmpty) fp = fingerprintOf(df, name)
           df.count()
           Some((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           // strip quotes, backslashes and ALL control chars (\b, \f,
           // U+0000-001F would otherwise still produce invalid JSON)
           err = Some((e.getClass.getSimpleName + ": " +
@@ -221,10 +223,10 @@ object Bench {
               fresh.set[com.fasterxml.jackson.databind.JsonNode](
                 k, prior.get(k)): Unit
           }
-        } catch { case _: Throwable => () /* unreadable prior: overwrite */ }
+        } catch { case NonFatal(_) => () /* unreadable prior: overwrite */ }
       }
       java.nio.file.Files.writeString(outPath, om.writeValueAsString(fresh))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
     }
     // Driver contract repair (r16): the full `line` above is hundreds of

@@ -52,8 +52,8 @@ object HarnessSession {
       // file count itself; this stops residual small files from being
       // priced as 16× their bytes.
       .config("spark.sql.files.openCostInBytes", (256 * 1024).toString)
-      // r15 optimization round, both measured via thread dumps of a
-      // running board (OPTIMIZATION_r15.md):
+      // Two settings measured on a running 143-query board at local[32]:
+      // a thread dump for the first, per-pass task counts for the second.
       // - The generated-class cache defaults to 100 entries; a 143-query
       //   board cycles thousands of codegen units through it, and a
       //   Janino recompile blocks EVERY task of the stage on one thread

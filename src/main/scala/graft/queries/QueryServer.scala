@@ -317,16 +317,19 @@ final class QueryServer(
       }.getOrElse("http")
       s"$proto://$host"
     }.getOrElse("")
-    // One stale-swap retry: the gold/merge swap protocol renames the old
+    // Stale-swap retries: the gold/merge swap protocol renames the old
     // table aside, the new one in, then vacuums the old — a request that
     // LISTED the old files (or hit the instant between the renames) dies
     // with FileNotFound/PATH_NOT_FOUND mid-plan. The snapshot it lost is
     // gone, so the CORRECT answer is a fresh plan against the new
     // marker uid (the memoized loader rebuilds on it) — never
     // ignoreMissingFiles (silently wrong rows), never a 500 for a
-    // planned, crash-safe table rotation. One retry suffices: swaps are
-    // beat-cadence rare, and a second loss in the same request window
-    // reports honestly as the 500 it is.
+    // planned, crash-safe table rotation. The first loss always gets one
+    // retry. A later loss is retried only while a swap marker under
+    // silverDir has rotated since that attempt started — a beat swaps
+    // accounts, account_stats and pot_stats back to back, so one request
+    // can lose a snapshot to each — up to StaleSwapAttempts in total. A
+    // loss with no rotation behind it reports honestly as the 500 it is.
     //
     // Links absolutize OUTSIDE the route/memo: the cache stores the
     // host-INDEPENDENT body (relative links), and the client-controlled
@@ -337,15 +340,20 @@ final class QueryServer(
       val r = route(rawPath, params)
       if (base.isEmpty) r else QueryServer.absolutizeLinks(r, base)
     }
-    try {
+    // `n` numbers the attempt; `started` holds the swap-marker uids read
+    // as it began (None for the first attempt, whose loss is always
+    // retried).
+    def attempts(n: Int, started: Option[Map[String, String]]): Response =
       try attempt() catch {
-        case e if QueryServer.isStaleSwapRead(e) =>
-          staleRetryCount.incrementAndGet(): Unit
+        case e if QueryServer.isStaleSwapRead(e) &&
+            n < QueryServer.StaleSwapAttempts =>
           // The swap writes its marker AFTER vacuuming the old files;
           // a beat of grace lets the marker land so the memoized
           // loader's uid check rebuilds against the new table rather
           // than re-planning the same lost snapshot.
           Thread.sleep(50)
+          if (started.contains(QueryServer.swapMarkers(silverDir))) throw e
+          staleRetryCount.incrementAndGet(): Unit
           // A swap that CRASHED between its two renames leaves NO live
           // table — the retry alone would report a 500 for every
           // request until the next beat republishes. Roll the crashed
@@ -360,9 +368,9 @@ final class QueryServer(
           // uid unchanged while the memoized frame's files are gone —
           // the retry must replan from CURRENT disk, not the memo.
           QueryServer.invalidateServingLoaders(silverDir)
-          attempt()
+          attempts(n + 1, Some(QueryServer.swapMarkers(silverDir)))
       }
-    } catch {
+    try attempts(1, None) catch {
       case _: QueryServer.InvalidPageException =>
         Response(404, Serializers.detailJson("Invalid page."))
       case _: graft.operators.Relational.PageOffsetOverflow =>
@@ -913,6 +921,21 @@ object QueryServer {
     }
   }
 
+  /** Attempts a request may make when each loses its table snapshot to
+    * a concurrent swap (see [[QueryServer.handle]]). */
+  private[queries] val StaleSwapAttempts = 3
+
+  /** Swap-marker uid per marker file directly under `dir` — the state a
+    * stale-swap retry compares to tell a rotation from a dead table. */
+  private[queries] def swapMarkers(dir: String): Map[String, String] = {
+    val io = graft.operators.MergeWriter.io
+    val suffix = graft.operators.MergeWriter.swapMarkerPath("")
+    io.listDir(dir).collect {
+      case (n, false) if n.endsWith(suffix) =>
+        n -> io.readString(s"$dir/$n").getOrElse("")
+    }.toMap
+  }
+
   /** Sweep `dir` for tables whose live directory is missing beside
     * whole-table swap residue and roll each forward
     * (MergeWriter.recoverCrashedSwap) — the serve plane's half of the
@@ -960,11 +983,11 @@ object QueryServer {
     * truncates); a bare "FileNotFoundException" substring is NOT enough,
     * because any exception whose message merely quotes the class name
     * would otherwise buy the 50 ms grace sleep plus a replanned second
-    * attempt. The retry itself stays unconditionally single-shot rather
-    * than uid-gated: a swap-shaped loss whose marker has not yet landed
-    * is exactly the race the grace sleep exists for, and a permanently
-    * missing table pays one bounded extra attempt before reporting the
-    * honest 500. */
+    * attempt. The FIRST retry is not uid-gated: a swap-shaped loss
+    * whose marker has not yet landed is exactly the race the grace sleep
+    * exists for, and a permanently missing table pays one bounded extra
+    * attempt before reporting the honest 500. Later retries need a
+    * marker rotation (see [[handle]]). */
   private[queries] def isStaleSwapRead(e: Throwable): Boolean = {
     var t = e
     var depth = 0

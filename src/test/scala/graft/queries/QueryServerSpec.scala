@@ -520,6 +520,35 @@ class QueryServerSpec extends SparkSpec {
     val s2 = new QueryServer(qsDead, silverDir)
     assert(s2.handle("GET", "/api/v1/accounts", Map.empty).status == 500)
     assert(s2.staleRetries == 1 && s2.errors == 1)
+
+    // A beat swaps several tables back to back, so one request can lose
+    // its snapshot more than once. A loss behind a rotated swap marker
+    // replans again, up to three attempts in total.
+    val dir = tmpDir("serve-rotating")
+    val marker = graft.operators.MergeWriter.swapMarkerPath(s"$dir/accounts")
+    def rotating(losses: Int): QueryServer = {
+      val left = new java.util.concurrent.atomic.AtomicInteger(losses)
+      new QueryServer(new QueryService(name => {
+        if (name == "accounts" && left.getAndDecrement() > 0) {
+          graft.operators.MergeWriter.io.writeStringAtomic(marker,
+            java.util.UUID.randomUUID().toString)
+          throw new java.io.FileNotFoundException(s"$name swapped away")
+        }
+        tables(name)
+      }), dir)
+    }
+    val twice = rotating(2)
+    val r2 = twice.handle("GET", "/api/v1/accounts", Map.empty)
+    assert(r2.status == 200, r2.body)
+    assert(twice.staleRetries == 2 && twice.errors == 0)
+    val always = rotating(Int.MaxValue)
+    assert(always.handle("GET", "/api/v1/accounts", Map.empty).status == 500)
+    assert(always.staleRetries == 2 && always.errors == 1)
+    // A dead loader with no rotation behind its losses still gets only
+    // the one retry.
+    val dead = new QueryServer(qsDead, dir)
+    assert(dead.handle("GET", "/api/v1/accounts", Map.empty).status == 500)
+    assert(dead.staleRetries == 1 && dead.errors == 1)
   }
 
   test("param fuzz: no garbage query param can 500 a route") {
