@@ -1,12 +1,10 @@
 package graft
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = HarnessSession.local(cpus)
+    val spark = HarnessSession.local()
     // Warm-up: touch every table and exercise codegen/JIT once so timings
     // measure steady-state throughput, not first-query compilation.
     val warm = Tables(spark, sfDir)
@@ -192,11 +190,11 @@ object Bench {
     }.mkString("{", ",", "}")
     val goldGate = goldGateSec.fold("null")(_.toString)
     val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"gold_gate_build_sec":$goldGate,"cached_gate_queries":["q_gold_refresh","q_gold_pot_stats"],"heavy_passes":$heavyPasses,"heavy_queries":${heavy.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":$qs,"medians":$meds,"errors":$errs,"plans":$plans,"sf":"$sfDir"}"""
-    println(line)
-    // Persist the full per-query JSON as an artifact: the driver retains
-    // only a truncated stdout tail, which makes round-over-round timing
-    // diffs impossible for most queries. The file survives in the repo
-    // checkout (committed per round) so every query is diffable.
+    // Persist the full per-query JSON as an artifact, not stdout: the
+    // driver retains only a truncated stdout tail, which makes
+    // round-over-round timing diffs impossible for most queries. The file
+    // survives in the repo checkout (committed per round) so every query
+    // is diffable.
     //
     // READ-MERGE-WRITE: the artifact also carries curated context that
     // a run does not produce — `load_context` (the host-variance
@@ -229,16 +227,13 @@ object Bench {
     } catch { case NonFatal(e) =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}")
     }
-    // Driver contract repair (r16): the full `line` above is hundreds of
-    // KB (four 143-entry maps) and the driver retains only a ~2 KB stdout
-    // TAIL — the head of the line is cut and the driver's parse has read
-    // null for six straight rounds (r10–r15 BENCH_*.json all have rc:0,
-    // parsed:null). The 143 query NAMES alone are 2.5 KB, so no per-query
-    // map can ever fit the tail; the fix is a COMPACT summary as the
-    // FINAL stdout line (total/failed/gate/sf — what the cross-round gate
-    // needs), with every per-query map still printed in the full line
-    // above AND persisted in bench_results.json. Nothing about the
-    // measurement changed: same queries, same passes, same timing method.
+    // Driver contract: the full `line` is hundreds of KB (four 143-entry
+    // maps) and the driver retains only a ~2 KB stdout TAIL, so it parsed
+    // null while that line was printed. The 143 query NAMES alone are
+    // 2.5 KB, so no per-query map can ever fit the tail; stdout carries
+    // only this COMPACT summary (total/failed/gate/sf — what the
+    // cross-round gate needs), and every per-query map lives in
+    // bench_results.json.
     println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"gold_gate_build_sec":$goldGate,"heavy_passes":$heavyPasses,"sf":"$sfDir"}""")
     spark.stop()
   }

@@ -3,8 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Base64
 
-import org.apache.spark.sql.SparkSession
-
 import graft.gold.Stats
 import graft.ingest.SilverStore
 import graft.queries.QueryService
@@ -29,17 +27,7 @@ object Demo {
     s"""{"block": {"header": {"height": $height, "timestamp": ${height}000000000}}, "shards": [{"shard_id": 0, "receipt_execution_outcomes": [{"receipt": {"receipt_id": "bad1", "receiver_id": "donate.potlock.near", "predecessor_id": "x.near", "receipt": {"Action": {"signer_id": "x.near", "actions": [{"FunctionCall": {"method_name": "donate", "args": "!!!not-base64!!!"}}]}}}, "execution_outcome": {"outcome": {"status": {"SuccessValue": "${b64("{\"id\": 77, \"donor_id\"")}"}, "logs": []}}}, {"receipt": {"receipt_id": "bad2", "receiver_id": "donate.potlock.near", "predecessor_id": "y.near", "receipt": {"Action": {"signer_id": "y.near", "actions": []}}}, "execution_outcome": {"outcome": {"status": {"Failure": "boom"}, "logs": []}}}]}]}"""
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps (timestamp[us], no UTC flag) read as
-      // TIMESTAMP (session-local, pinned UTC) — matching DuckDB and the
-      // watermark/unix_micros surfaces, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = HarnessSession.local(logLevel = "ERROR")
 
     val in = Files.createTempDirectory("demo-in").toString
     val silverDir = Files.createTempDirectory("demo-silver").toString

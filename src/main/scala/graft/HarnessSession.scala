@@ -2,19 +2,30 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared builder for every measurement main (Bench, Stress,
-  * ShuffleAudit, IngestBench): the artifacts these produce are compared
-  * against each other (BENCH vs SHUFFLE.md vs STRESS.md vs
-  * INGEST_BENCH.md), so they must run under IDENTICAL session semantics —
-  * a config fix applied to one hand-rolled copy and not the others would
-  * silently make the cross-artifact numbers incomparable.
+/** The one session builder: every main and the test suite (`SparkSpec`)
+  * build through `local`, so the oracle run (Verify), the tier-1 tests,
+  * the measurement artifacts (BENCH vs SHUFFLE.md vs STRESS.md vs
+  * INGEST_BENCH.md) and the served plane (QueryServer, GoldRefresh) all
+  * run under IDENTICAL session semantics — a config fix applied to one
+  * hand-rolled copy and not the others would silently make what the
+  * tests check differ from what production runs.
   */
 object HarnessSession {
 
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
-      logLevel: String = "WARN"): SparkSession = {
+  /** The core count every main runs at: `SPARK_GRAFT_CPUS`, or `unset`
+    * (the host's core count unless the caller reserves some) when the
+    * variable is not set. */
+  def cpus(unset: => Int = Runtime.getRuntime.availableProcessors): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", unset.toString)
+
+  /** `maxFailures` is Spark's per-task attempt budget; `local[n, 1]`
+    * behaves as `local[n]`. The test suite passes 2 so RetryReplaySpec can
+    * inject first-attempt task failures (a deterministic bug still fails:
+    * both attempts throw); every main keeps 1. */
+  def local(cpus: String = HarnessSession.cpus(), logLevel: String = "WARN",
+      maxFailures: Int = 1): SparkSession = {
     val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(s"local[$cpus, $maxFailures]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -26,8 +37,8 @@ object HarnessSession {
       // write timestamps as physical INT64 micros, not legacy INT96:
       // parquet predicate pushdown / row-group min-max pruning only
       // exist for INT64-backed timestamps, and the silver store's
-      // clustered layouts rely on that for time-slice scans (Verify
-      // pins the same value for the oracle dumps)
+      // clustered layouts rely on that for time-slice scans, and the
+      // DuckDB oracle reads Verify's dumps as identical µs values
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // MergeWriter's row/bucket counts ride the WRITE job as observed
       // metrics (CollectMetrics accumulators). Accumulators drop FAILED
@@ -70,6 +81,12 @@ object HarnessSession {
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
       .config("spark.ui.enabled", "false")
+      // Every production table is external (path-addressed); only tests
+      // create managed tables. A per-process warehouse keeps them from
+      // colliding with a leftover ./spark-warehouse, and keeps mains from
+      // creating one in the working directory.
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     require(!spark.sparkContext.getConf.getBoolean("spark.speculation",

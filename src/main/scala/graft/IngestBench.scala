@@ -127,7 +127,7 @@ object IngestBench {
     val reportPath = args.headOption.getOrElse("INGEST_BENCH.md")
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_ingest_bench"
     val nBlocks = if (args.length > 2) args(2).toInt else 3000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = HarnessSession.cpus()
     val spark = HarnessSession.local(cpus)
 
     val base = new java.io.File(workDir)

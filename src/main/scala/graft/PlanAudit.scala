@@ -522,21 +522,10 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps (timestamp[us], no UTC flag) read as
-      // TIMESTAMP (session-local, pinned UTC) — matching DuckDB and the
-      // watermark/unix_micros surfaces, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // AQE off here: its pre-execution plan hides codegen annotations;
-      // production sessions keep AQE on (Verify/Bench).
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = HarnessSession.local(logLevel = "ERROR")
+    // AQE off here: its pre-execution plan hides codegen annotations;
+    // production sessions keep AQE on (Verify/Bench).
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val misses = audit(spark, sfDir)
     checks.foreach { case (name, _) =>
       misses.find(_._1 == name) match {

@@ -1,8 +1,8 @@
 package graft
 
-/** Writes `.explain("formatted")` for named queries to files — the
-  * optimization rounds' before/after plan evidence (plans/rNN/<q>_before
-  * / _after). Usage:
+/** Writes `.explain("formatted")` for named queries to files
+  * (`<outDir>/<q>_<suffix>.txt`), on demand, for before/after plan
+  * evidence. Usage:
   *
   *   runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
   *

@@ -186,7 +186,8 @@ object ServeBench {
     val reportPath = args.headOption.getOrElse("SERVE_BENCH.md")
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_serve_bench"
     val nBlocks = if (args.length > 2) args(2).toInt else 20000
-    val spark = HarnessSession.local()
+    val cpus = HarnessSession.cpus()
+    val spark = HarnessSession.local(cpus)
 
     val built = buildStore(spark, workDir, nBlocks)
     val silver = built.silver
@@ -459,7 +460,7 @@ object ServeBench {
     // ------------------------------------------------------------ report
     val sb = new StringBuilder
     sb ++= "# SERVE_BENCH — the resident QueryServer, measured over HTTP\n\n"
-    sb ++= s"`runMain graft.ServeBench` on local[32]: $nBlocks blocks " +
+    sb ++= s"`runMain graft.ServeBench` on local[$cpus]: $nBlocks blocks " +
       "through the mega-batch backfill ingest → a production-layout " +
       f"silver store ($nDonations%,d donations, $nAccounts%,d accounts, " +
       f"$nPots%,d pots; built in $tBuild%.1f s + gold refresh " +

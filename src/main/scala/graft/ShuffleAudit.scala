@@ -78,7 +78,7 @@ object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outFile = args.lift(1).getOrElse("SHUFFLE.md")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = HarnessSession.cpus()
     val spark = HarnessSession.local(cpus)
     val mv = new Movement
     spark.sparkContext.addSparkListener(mv)

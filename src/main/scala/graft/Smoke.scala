@@ -1,22 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Replicates the driver's smoke check: SparkEntry.entry rows > 0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps (timestamp[us], no UTC flag) read as
-      // TIMESTAMP (session-local, pinned UTC) — matching DuckDB and the
-      // watermark/unix_micros surfaces, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.local()
     val df = SparkEntry.entry(spark)
     df.show(20, truncate = false)
     println(s"[smoke] entry rows=${df.count()}")

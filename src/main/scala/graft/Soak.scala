@@ -67,8 +67,8 @@ object Soak {
     // slots sat IDLE between stages; reserving 4 cores cut the canary
     // max to 4 s. On a real cluster the driver is its own machine — this
     // is the local-mode equivalent of not scheduling executors onto it.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors() - 4).toString)
+    val cpus = HarnessSession.cpus(
+      math.max(4, Runtime.getRuntime.availableProcessors() - 4))
     val spark = HarnessSession.local(cpus)
 
     val base = new java.io.File(workDir)
@@ -416,7 +416,7 @@ object Soak {
 
     val sb = new StringBuilder
     sb ++= "# SOAK — ingest + gold beats + resident serving, one process, under fire\n\n"
-    sb ++= s"`runMain graft.Soak` on local[32]: a $nBase-block store built by the " +
+    sb ++= s"`runMain graft.Soak` on local[$cpus]: a $nBase-block store built by the " +
       s"production backfill, then a $nTail-block LIVE TAIL drained through the " +
       s"streaming ingest (micro-batches of 250) with gold beats every $beatEvery " +
       s"blocks, WHILE $nClients HTTP clients loop ${routes.length} routes against " +

@@ -193,7 +193,7 @@ object Stress {
   def main(args: Array[String]): Unit = {
     val reportPath = args.headOption.getOrElse("STRESS.md")
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_stress"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = HarnessSession.cpus()
     val spark = HarnessSession.local(cpus)
     new java.io.File(workDir).mkdirs()
     generate(spark, workDir)

@@ -1126,19 +1126,7 @@ object GoldRefresh {
   def main(args: Array[String]): Unit = {
     val silverDir = args.headOption.getOrElse(sys.error("usage: GoldRefresh <silverDir> [--full]"))
     val full = args.contains("--full")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // naive parquet timestamps (timestamp[us], no UTC flag) read as
-      // TIMESTAMP (session-local, pinned UTC) — matching DuckDB and the
-      // watermark/unix_micros surfaces, not TIMESTAMP_NTZ
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HarnessSession.local()
     if (full) refreshFull(spark, silverDir): Unit
     else refreshIncremental(spark, silverDir): Unit
     spark.stop()

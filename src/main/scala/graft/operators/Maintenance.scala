@@ -211,8 +211,8 @@ object Maintenance {
     require(slash > 0, s"vacuum needs an absolute table path, got $path")
     val parent = path.substring(0, slash)
     val base = path.substring(slash + 1)
-    val smallFileTmp =
-      Set(s"$base.counts.json.tmp", s"$base.swapuid.tmp")
+    def smallFileTmp(n: String): Boolean =
+      Seq(s"$base.counts.json.tmp", s"$base.swapuid.tmp").exists(n.startsWith)
     val aged = io.listDir(parent).collect {
       case (n, _) if n.startsWith(s"$base.tmp-") ||
         n.startsWith(s"$base.old-") || smallFileTmp(n) => n

@@ -115,19 +115,20 @@ object LocalTableIO extends TableIO {
     if (!Files.exists(p(path))) None
     else scala.util.Try(new String(Files.readAllBytes(p(path)), "UTF-8")).toOption
 
-  def writeStringAtomic(path: String, content: String): Unit = {
-    val tmp = p(path + ".tmp")
-    Files.write(tmp, content.getBytes("UTF-8"))
-    Files.move(tmp, p(path), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeStringAtomic(path: String, content: String): Unit =
+    writeBytesAtomic(path, content.getBytes("UTF-8"))
 
   override def readBytes(path: String): Option[Array[Byte]] =
     if (!Files.exists(p(path))) None
     else scala.util.Try(Files.readAllBytes(p(path))).toOption
 
+  /** Each write stages through its own `<path>.tmp.<uuid>`: writers
+    * racing on one path (a reader's crash recovery and the resuming
+    * swapper both stamp the swap marker) would otherwise truncate or move
+    * away each other's staging file. The last move wins whole. Not
+    * `.tmp-`: that tag names a table's swap staging dir. */
   override def writeBytesAtomic(path: String, bytes: Array[Byte]): Unit = {
-    val tmp = p(path + ".tmp")
+    val tmp = p(s"$path.tmp.${java.util.UUID.randomUUID()}")
     Files.write(tmp, bytes)
     Files.move(tmp, p(path), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)

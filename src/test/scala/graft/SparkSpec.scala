@@ -12,22 +12,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  // local[4, 2]: 4 threads, maxFailures=2 — identical semantics to
-  // local[4] unless a task throws, in which case it gets ONE retry.
-  // RetryReplaySpec depends on the retry budget to inject first-attempt
-  // task failures; a deterministic bug still fails (both attempts throw).
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.sql.session.timeZone", "UTC")
-    // naive parquet timestamps (timestamp[us], no UTC flag) read as
-    // TIMESTAMP (session-local, pinned UTC) — matching DuckDB and the
-    // watermark/unix_micros surfaces, not TIMESTAMP_NTZ
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // The session every main runs, at 4 threads with one task retry
+  // (maxFailures = 2) for RetryReplaySpec's injected failures.
+  lazy val session: SparkSession =
+    HarnessSession.local("4", maxFailures = 2)
 }

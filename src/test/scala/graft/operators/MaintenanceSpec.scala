@@ -214,19 +214,21 @@ class MaintenanceSpec extends SparkSpec {
     Files.createDirectories(Paths.get(s"$path.old-dead0002"))
     Files.createDirectories(Paths.get(s"$path.old-dead0003-day=2024-06-01"))
     Files.write(Paths.get(s"$path.counts.json.tmp"), "torn".getBytes)
+    Files.write(Paths.get(s"$path.swapuid.tmp.dead0004"), "torn".getBytes)
     // A DIFFERENT table's tmp dir must not match t's patterns.
     Files.createDirectories(Paths.get(s"$dir/t2.tmp-alive01"))
 
     val now = System.currentTimeMillis()
     // Grace larger than the artifacts' age → in-flight-safe, nothing dies.
     assert(Maintenance.vacuum(path, graceMs = 3600 * 1000L, nowMs = now).isEmpty)
-    // Grace 0 → all four of t's artifacts die; t itself and t2's live.
+    // Grace 0 → all five of t's artifacts die; t itself and t2's live.
     val removed = Maintenance.vacuum(path, graceMs = 0L, nowMs = now)
-    assert(removed.size == 4, s"removed $removed")
+    assert(removed.size == 5, s"removed $removed")
     assert(Files.exists(Paths.get(path)))
     assert(Files.exists(Paths.get(s"$dir/t2.tmp-alive01")))
     assert(!Files.exists(Paths.get(s"$path.tmp-dead0001")))
     assert(!Files.exists(Paths.get(s"$path.counts.json.tmp")))
+    assert(!Files.exists(Paths.get(s"$path.swapuid.tmp.dead0004")))
     assert(spark.read.parquet(path).count() == 1)
   }
 
