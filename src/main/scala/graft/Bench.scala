@@ -2,6 +2,10 @@ package graft
 import scala.util.control.NonFatal
 
 object Bench {
+  private final case class Result(name: String, min: Option[Double],
+      err: Option[String], plan: Option[String], median: Option[Double],
+      leakedRdds: Int)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = HarnessSession.local()
@@ -117,19 +121,30 @@ object Bench {
         Some(java.security.MessageDigest.getInstance("MD5")
           .digest(p.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12))
       } catch { case NonFatal(_) => None }
+    // Releases what a query persisted through the engine's own handle
+    // (SparkEntry.releaseTracked) and the catalog cache, then counts the
+    // RDDs still persisted — leaked past both — and unpersists them too,
+    // so they cannot skew the next query (perfbench's Board.release).
+    def release(): Int = {
+      SparkEntry.releaseTracked(); spark.catalog.clearCache()
+      val left = spark.sparkContext.getPersistentRDDs.values.toSeq
+      left.foreach(_.unpersist(blocking = true))
+      left.size
+    }
+    // Cache blocks a query leaves — persisted intermediates from its
+    // builder (dd3/dd8/mm5/…) — would otherwise accumulate across the
+    // 100-query sweep (memory pressure, GC pauses inside timed work), so
+    // each query is released after its passes. Deliberately NOT between
+    // passes of the same query: the CacheManager's plan-matched reuse
+    // across passes is part of the measured semantics every round has
+    // used (min-of-3 reads pass 1 cold, passes 2-3 cache-warm), and
+    // clearing per-pass inflates the whole board ~1.4× against prior
+    // rounds' numbers. The warm-up and the gold gate are released
+    // before the first query, uncounted.
+    release(): Unit
     val results = selected.map { case (name, fn) =>
       var err: Option[String] = None
       var fp: Option[String] = None
-      // Release cache blocks left by the PREVIOUS QUERY — persisted
-      // intermediates from its builder (dd3/dd8/mm5/…) otherwise
-      // accumulate across the 100-query sweep (memory pressure, GC
-      // pauses inside timed work). Deliberately NOT between passes of
-      // the same query: the CacheManager's plan-matched reuse across
-      // passes is part of the measured semantics every round has used
-      // (min-of-3 reads pass 1 cold, passes 2-3 cache-warm), and
-      // clearing per-pass inflates the whole board ~1.4× against prior
-      // rounds' numbers.
-      SparkEntry.releaseTracked(); spark.catalog.clearCache()
       val nPasses = if (heavy.contains(name)) heavyPasses else passes
       val times = (1 to nPasses).flatMap { _ =>
         // Outside the timed region: let the ContextCleaner release
@@ -168,28 +183,28 @@ object Bench {
       // extra heavy passes would read as spurious speedups in
       // round-over-round diffs of the `queries` board. The medians field
       // uses ALL samples (that's what the extra passes are for).
-      (name, if (times.nonEmpty) Some(times.take(passes).min) else None,
-        err, fp, med)
+      Result(name, if (times.nonEmpty) Some(times.take(passes).min) else None,
+        err, fp, med, release())
     }
-    val qs = results.map { case (k, v, _, _, _) => s"\"" + k + "\":" + v.fold("null")(_.toString) }
-      .mkString("{", ",", "}")
-    val errs = results.map { case (k, t, e, _, _) =>
-      s"\"" + k + "\":" + (if (t.isDefined) "null" else e.fold("null")("\"" + _ + "\""))
-    }.mkString("{", ",", "}")
-    val failed = results.count(_._2.isEmpty)
-    val total = results.flatMap(_._2).sum
-    val plans = results.map { case (name, _, _, fp, _) =>
-      s"\"" + name + "\":" + fp.fold("null")("\"" + _ + "\"")
-    }.mkString("{", ",", "}")
+    def jsonMap(value: Result => String): String =
+      results.map(r => "\"" + r.name + "\":" + value(r)).mkString("{", ",", "}")
+    val qs = jsonMap(_.min.fold("null")(_.toString))
+    val errs = jsonMap(r =>
+      if (r.min.isDefined) "null" else r.err.fold("null")("\"" + _ + "\""))
+    val failed = results.count(_.min.isEmpty)
+    val total = results.flatMap(_.min).sum
+    val plans = jsonMap(_.plan.fold("null")("\"" + _ + "\""))
     // Medians ride next to the min-of-N board: the cross-round perf
     // gate compares per-query MEDIANS (the min stays for continuity
     // with every prior round's board). The heavy family gets
     // heavyPasses samples; the rest of the board medians its `passes`.
-    val meds = results.map { case (k, _, _, _, m) =>
-      s"\"" + k + "\":" + m.fold("null")(_.toString)
-    }.mkString("{", ",", "}")
+    val meds = jsonMap(_.median.fold("null")(_.toString))
+    // RDDs still persisted after a query's release: each one escaped the
+    // engine's persist-and-release handle (`Materialized`).
+    val leaks = jsonMap(_.leakedRdds.toString)
+    val leaked = results.map(_.leakedRdds).sum
     val goldGate = goldGateSec.fold("null")(_.toString)
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"gold_gate_build_sec":$goldGate,"cached_gate_queries":["q_gold_refresh","q_gold_pot_stats"],"heavy_passes":$heavyPasses,"heavy_queries":${heavy.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":$qs,"medians":$meds,"errors":$errs,"plans":$plans,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"gold_gate_build_sec":$goldGate,"cached_gate_queries":["q_gold_refresh","q_gold_pot_stats"],"heavy_passes":$heavyPasses,"heavy_queries":${heavy.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":$qs,"medians":$meds,"leaked_rdds":$leaks,"errors":$errs,"plans":$plans,"sf":"$sfDir"}"""
     // Persist the full per-query JSON as an artifact, not stdout: the
     // driver retains only a truncated stdout tail, which makes
     // round-over-round timing diffs impossible for most queries. The file
@@ -231,10 +246,10 @@ object Bench {
     // maps) and the driver retains only a ~2 KB stdout TAIL, so it parsed
     // null while that line was printed. The 143 query NAMES alone are
     // 2.5 KB, so no per-query map can ever fit the tail; stdout carries
-    // only this COMPACT summary (total/failed/gate/sf — what the
+    // only this COMPACT summary (total/failed/leaks/gate/sf — what the
     // cross-round gate needs), and every per-query map lives in
     // bench_results.json.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"gold_gate_build_sec":$goldGate,"heavy_passes":$heavyPasses,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"leaked_rdds":$leaked,"gold_gate_build_sec":$goldGate,"heavy_passes":$heavyPasses,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -4,19 +4,17 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session builder: every main and the test suite (`SparkSpec`)
   * build through `local`, so the oracle run (Verify), the tier-1 tests,
-  * the measurement artifacts (BENCH vs SHUFFLE.md vs STRESS.md vs
-  * INGEST_BENCH.md) and the served plane (QueryServer, GoldRefresh) all
-  * run under IDENTICAL session semantics — a config fix applied to one
-  * hand-rolled copy and not the others would silently make what the
-  * tests check differ from what production runs.
+  * the board (Bench, perfbench) and the served plane (QueryServer,
+  * GoldRefresh) all run under IDENTICAL session semantics — a config
+  * fix applied to one hand-rolled copy and not the others would silently
+  * make what the tests check differ from what production runs.
   */
 object HarnessSession {
 
-  /** The core count every main runs at: `SPARK_GRAFT_CPUS`, or `unset`
-    * (the host's core count unless the caller reserves some) when the
-    * variable is not set. */
-  def cpus(unset: => Int = Runtime.getRuntime.availableProcessors): String =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS", unset.toString)
+  /** The core count every main runs at: `SPARK_GRAFT_CPUS`, or the
+    * host's core count when the variable is not set. */
+  def cpus(): String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   /** `maxFailures` is Spark's per-task attempt budget; `local[n, 1]`
     * behaves as `local[n]`. The test suite passes 2 so RetryReplaySpec can
@@ -56,7 +54,7 @@ object HarnessSession {
       // files into tasks — measured on a 500k-block serve store whose
       // enriched table had sprawled to 16k small files: 64 GB of
       // padding → ~500 tasks per FK-filtered route read, cold p50
-      // growing linearly with file count (ColdScaleBench). 256 KB
+      // growing linearly with file count (measured at f33c8ee). 256 KB
       // reflects a local/SSD footer-read cost; at production file
       // sizes (≥128 MB parquet) the knob is moot either way. The
       // layout fix (GoldRefresh.clusterForPartitionedWrite) bounds the
@@ -94,10 +92,4 @@ object HarnessSession {
       "speculative execution would double-count observed merge metrics")
     spark
   }
-
-  /** p-th percentile (nearest-rank on the sorted sequence), shared by the
-    * task-duration summaries in the measurement artifacts. */
-  def pct(xs: Seq[Long], p: Double): Long =
-    if (xs.isEmpty) 0L
-    else xs.sorted.apply(math.min(xs.size - 1, (p * xs.size).toInt))
 }

@@ -482,6 +482,12 @@ object PlanAudit {
     // buckets — same no-degradation contract as dd3/dd8
     "q_dd12_substring_dup" -> Seq("isFinalPlan=true",
       "SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
+      "!CartesianProduct", "!BroadcastNestedLoopJoin"),
+    // curation funnel: the decontamination and repetition joins stay
+    // equi-joins through AQE's rewrites — on a one-language corpus of
+    // identical documents a nested loop here compares every pair
+    "q_cur1_curation_funnel" -> Seq("isFinalPlan=true",
+      "SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin",
       "!CartesianProduct", "!BroadcastNestedLoopJoin"))
 
   /** Execute each adaptive check under `spark` (which must have AQE on)

@@ -248,8 +248,8 @@ object SparkEntry {
 
   /** J13 — backward ("at-or-before") as-of join with a 24 h lookback and
     * LEFT semantics (tokens/models.py:64-74 price lookup; the batch twin
-    * of the streaming EventAnalytics.streamAsOfEnrich, whose row-identity
-    * to this contract STREAM_PARITY.md asserts): for each purchase, the
+    * of the streaming EventAnalytics.streamAsOfEnrich, whose at-or-before
+    * pick EventAnalyticsSpec pins): for each purchase, the
     * latest prior view of the same user within 24 h, purchases with no
     * in-window view kept with null enrichment. */
   private def j13(t: Tables): DataFrame = {
@@ -1356,7 +1356,7 @@ object SparkEntry {
     * documents stop winning on volume, repeated terms saturate. */
   /** SRCH4 — per-hour trending terms via the Misra-Gries sketch run as a
     * windowed aggregate (the batch twin of the streaming
-    * EventAnalytics.trendingTerms — STREAM_PARITY.md asserts the
+    * EventAnalytics.trendingTerms — StreamParitySpec asserts the
     * incremental per-micro-batch merges land on this exact summary).
     * Capacity 16 ≥ the 5 distinct event types, so the sketch is EXACT
     * here and the oracle can replay it as plain per-window counts ranked
@@ -2514,8 +2514,9 @@ object SparkEntry {
     // The model feeds TWO broadcast builds in nbScore (weights + prior);
     // unpersisted, each would re-run the training aggregation — two
     // scans of the labeled slice at 100 TB. The ≤1025-row model persists
-    // instead (production callers write it to parquet — the
-    // STREAM_PARITY shape; the query harness clears caches per query).
+    // instead (production callers write it to parquet — the shape
+    // ClassifierFunctionsSpec's round-trip pins; the query harness clears
+    // caches per query).
     val model = ClassifierFunctions.trainNbLogModel(train, "text",
         isPositive = col("lang") === "en", numBuckets = 1024, seed = "nbq")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

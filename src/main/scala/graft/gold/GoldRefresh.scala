@@ -1060,7 +1060,7 @@ object GoldRefresh {
     * upstream task across every date it holds rows for — measured at a
     * 500k-block store: 32 shuffle tasks × ~500 dates = 16,000 files of
     * ~16 KB, and every FK-filtered serve-plane read then schedules and
-    * footer-opens O(files) per request (ColdScaleBench: donation-feed
+    * footer-opens O(files) per request (measured at f33c8ee: donation-feed
     * cold p50 grew 9-61× across a 25× store sweep from exactly this).
     * Clustering by (__pdate, donor-group) bounds files at dates ×
     * groups; the group count is SIZED FROM THE DATA — bytes per date

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * how hot the key. Cost: the left side shuffles 3× (nearest) / 2×
   * (before) rows; the candidate OUTPUT set is provably identical (every
   * in-window pair matches in exactly one right-bucket), so results are
-  * byte-equal to the unbucketed form — Stress measures the comparison
-  * cut on a hot-key corpus, the oracle pins result identity.
+  * byte-equal to the unbucketed form — on a corpus where one user held
+  * 30% of both sides, 224M key-only comparisons fell to 933k (measured at
+  * f33c8ee); PropertySpec and the oracle pin result identity.
   *
   * The join stays a plain shuffled hash/sort-merge join — NOT a cross
   * join. For a 100 TB fact side with a small dimension (token prices),
@@ -51,7 +52,7 @@ object AsOfJoin {
     *                   — what enrichment jobs need: a donation with no
     *                   in-window price keeps null USD rather than vanish)
     * @param timeBucketed false = key-only equi-join (the hot-key-quadratic
-    *                   form; kept for the Stress control measurement)
+    *                   form; kept as PropertySpec's reference form)
     */
   def nearest(
       left: DataFrame,

@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions.col
   * (Postgres compacts itself, vacuums itself — autovacuum); a parquet
   * lake at 100 TB needs both as explicit operators:
   *
-  *  - A live tail running small triggers (INGEST_BENCH.md's 1-block
-  *    regime) rewrites its hot date partitions every few seconds, each
-  *    rewrite fanning out to shuffle-partition-count files; a bulk
-  *    backfill written by another engine can leave thousands of
-  *    row-group-sized fragments per partition. Every later scan pays
-  *    per-file open cost (on object stores, a GET per file) — the
-  *    classic small-files problem. [[compact]] rewrites only the
+  *  - A live tail running small triggers (perfbench `tail` lands one
+  *    block a second) rewrites its hot date partitions every few
+  *    seconds, each rewrite fanning out to shuffle-partition-count
+  *    files; a bulk backfill written by another engine can leave
+  *    thousands of row-group-sized fragments per partition. Every later
+  *    scan pays per-file open cost (on object stores, a GET per file) —
+  *    the classic small-files problem. [[compact]] rewrites only the
   *    partitions whose file count exceeds what their byte size needs.
   *
   *  - The rename-aside swap protocol (MergeWriter.writeAndSwap and the

@@ -11,7 +11,7 @@ import graft.queries.QueryService.Page
   * swap-marker freshness, and the reference's anon throttle
   * (base/settings.py:116-123, `anon: 500/min`) fronts it all as a
   * per-client token bucket. This is what a user of the reference points
-  * their traffic at; ServeBench measures THROUGH it.
+  * their traffic at; perfbench `tail` measures THROUGH it.
   *
   * Layering (deliberate):
   *  - the QUERY layer (QueryService) stays pure — no cache, no clock, no

@@ -33,7 +33,7 @@ package graft.queries
   * Values are the rendered envelope (JSON strings), so a warm hit costs a
   * hash lookup plus one marker-file read per source table — no Spark job,
   * no plan, no collect. That is what turns the serve plane's 600-800 ms
-  * donation routes into single-digit-ms warm hits (SERVE_BENCH).
+  * donation routes into single-digit-ms warm hits (measured at f33c8ee).
   *
   * Bounded: LRU eviction at `maxEntries` (the route × params space is
   * user-driven and unbounded). This is a per-process memo, not a

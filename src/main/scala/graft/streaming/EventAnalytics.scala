@@ -39,7 +39,7 @@ object EventAnalytics {
       .withWatermark("ts", lateness)
       .groupBy(window(col("ts"), length, slide), col("event_type"))
       // Decimal-pinned sum: exact, order-independent, and row-identical
-      // to the batch q_w6 twin (see STREAM_PARITY.md).
+      // to the batch q_w6 twin (StreamParitySpec, pair-swapped arrival).
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,2)")).cast("double")
           .as("total_value"))
@@ -119,38 +119,6 @@ object EventAnalytics {
         max_by(col("price_usd"), col("price_ts")).as("price_usd"),
         max(col("price_ts")).as("price_ts"))
       .drop("window")
-
-  /** Streaming NEAREST-in-±tolerance enrichment — the streaming twin of
-    * the batch AsOfJoin/q_j6 contract (nearest by |Δt| within ±tolerance,
-    * ties by right-side id ascending, INNER): a watermarked stream-stream
-    * interval join over `[ts − tolerance, ts + tolerance]` chained into a
-    * per-transaction `min_by` over (|Δt|, right id) — two stateful
-    * operators in one append-mode pipeline, emitted exactly once when the
-    * watermark proves no nearer right row can still arrive. Both join
-    * states are GC'd by the watermark range analysis, so state is
-    * O(arrival rate × (tolerance + lateness)) regardless of stream
-    * length. Output columns match q_j6: (purchase_id, view_id, delta_us,
-    * usd_value) — STREAM_PARITY.md asserts row-identity against the
-    * oracle-green batch query. */
-  def streamNearestEnrich(txs: DataFrame, prices: DataFrame,
-      lateness: String = "1 hour", tolerance: String = "24 hours"): DataFrame = {
-    val t = txs.withWatermark("ts", lateness)
-    val p = prices.withWatermark("price_ts", lateness)
-    t.join(p, t("token_id") === p("token_id") &&
-        p("price_ts") >= t("ts") - expr(s"INTERVAL $tolerance") &&
-        p("price_ts") <= t("ts") + expr(s"INTERVAL $tolerance"))
-      .withColumn("__delta_us",
-        abs(unix_micros(col("ts")) - unix_micros(col("price_ts"))))
-      .groupBy(t("token_id"), col("tx_id"), window(col("ts"), "1 hour"))
-      .agg(
-        min_by(struct(col("price_id"), col("__delta_us"), col("price_usd")),
-          struct(col("__delta_us"), col("price_id"))).as("__best"),
-        first(col("amount")).as("amount"))
-      .select(col("tx_id").as("purchase_id"),
-        col("__best.price_id").as("view_id"),
-        col("__best.__delta_us").as("delta_us"),
-        (col("amount") * col("__best.price_usd")).as("usd_value"))
-  }
 
   /** Declarative gap sessionization via the built-in `session_window` —
     * the Spark-first form of [[sessionize]] when per-session output is a
@@ -294,7 +262,7 @@ object EventAnalytics {
     * driven by the watermark, so ingest stalls/lag do not spuriously split
     * sessions (a processing-time timeout would). All gap arithmetic runs
     * in exact MICROSECONDS (session bounds are row-identical to the batch
-    * q_w3 twin — STREAM_PARITY.md); only the timeout registration rounds
+    * q_w3 twin — StreamParitySpec); only the timeout registration rounds
     * up to the API's millisecond grain. State per user is O(1); the
     * shuffle is one hash partition by user — scales with distinct users,
     * not events. */

@@ -55,6 +55,29 @@ class CorpusGateSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(afterB2 == Set(1L, 5L, 21L))
 
+    // The streamed store ≡ a batch backfill replaying the same files
+    // through curateBatch, batch for batch, in every store artifact (the
+    // batch partition column rides along, so a row in the wrong batch
+    // fails too).
+    val backfill = tmpDir("gate-backfill")
+    Seq("b1.json", "b2.json").zipWithIndex.foreach { case (f, i) =>
+      CorpusGate.curateBatch(
+        spark.read.schema(CorpusGate.docSchema).json(s"$in/$f"), backfill, i.toLong)
+    }
+    for ((sub, cols) <- Seq(
+        "corpus" -> Seq("doc_id", "text"),
+        "sigs" -> Seq("doc_id", "sig"),
+        "fps" -> Seq("doc_id", "fp64", "fp"),
+        "stats" -> Seq("batch_id", "n_in", "n_quality_dropped", "n_exact_dup",
+          "n_corpus_exact_dup", "n_batch_near_dup", "n_corpus_near_dup",
+          "n_survivors"))) {
+      def read(base: String) =
+        spark.read.parquet(s"$base/$sub").select((cols :+ "batch").map(col): _*)
+      assert(read(store).exceptAll(read(backfill)).isEmpty &&
+        read(backfill).exceptAll(read(store)).isEmpty,
+        s"streamed $sub diverged from the backfill")
+    }
+
     // Funnel accounting rows: one per batch, conserved counts.
     val st = CorpusGate.stats(spark, store).collect()
       .map(r => r.getLong(0) -> r).toMap

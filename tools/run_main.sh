@@ -1,7 +1,7 @@
 #!/bin/bash
 # Run a graft main class directly on the compiled classes — same JVM flags
 # as build.sbt's forked run, no sbt lock, ~20 s less startup per
-# invocation. Usage: tools/run_main.sh graft.QProfile <args...>
+# invocation. Usage: tools/run_main.sh graft.Verify <args...>
 # (compile first: sbt -batch compile)
 set -euo pipefail
 cd "$(dirname "$0")/.."
