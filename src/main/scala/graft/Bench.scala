@@ -251,5 +251,8 @@ object Bench {
     // bench_results.json.
     println(s"""{"metric":"total","value":$total,"unit":"sec","failed":$failed,"leaked_rdds":$leaked,"gold_gate_build_sec":$goldGate,"heavy_passes":$heavyPasses,"sf":"$sfDir"}""")
     spark.stop()
+    // An RDD that outlived its query's release escaped the engine's
+    // release handles: fail the run (per-query counts are in the artifact).
+    if (leaked > 0) sys.exit(1)
   }
 }

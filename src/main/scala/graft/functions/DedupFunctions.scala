@@ -771,8 +771,10 @@ object DedupFunctions {
     * equi-join plus one aggregation, both hash-shuffled on the node key.
     * `localCheckpoint` truncates the per-round lineage so the
     * plan doesn't double each iteration; fault tolerance is not needed
-    * because the loop re-derives from immutable inputs. The per-round
-    * convergence count is a scalar driver read, not a data collect.
+    * because the loop re-derives from immutable inputs. Each round's
+    * checkpoint is released once the next round has been checkpointed.
+    * The per-round convergence count is a scalar driver read, not a data
+    * collect.
     *
     * Returns a [[graft.operators.Materialized]]: the label frame stays
     * persisted (the round chain behind it is gone, so an eager release
@@ -808,6 +810,7 @@ object DedupFunctions {
     var labels = edges.groupBy("src").agg(min("dst").as("mn"))
       .select(col("src").as("node"), least(col("src"), col("mn")).as("label"))
       .persist(lvl)
+    var releaseLabels: () => Unit = { val l = labels; () => l.unpersist(): Unit }
     var changed = 1L
     var i = 1
     while (changed > 0 && i < maxIters) {
@@ -819,14 +822,14 @@ object DedupFunctions {
       // neighbor rows; min ignores nulls) makes the convergence probe a
       // filter+count over the just-checkpointed round output — no second
       // join of round-sized data against the previous labels.
-      val next = labels
+      val (next, releaseNext) = checkpointed(labels
         .select(col("node"), col("label"), col("label").as("__old"))
         .unionByName(viaNeighbors, allowMissingColumns = true)
-        .groupBy("node").agg(min("label").as("label"), min("__old").as("__old"))
-        .localCheckpoint(true)
+        .groupBy("node").agg(min("label").as("label"), min("__old").as("__old")))
       changed = next.filter(col("label") =!= col("__old")).count()
-      labels.unpersist()
-      labels = next.drop("__old").persist(lvl)
+      releaseLabels()
+      labels = next
+      releaseLabels = releaseNext
       i += 1
     }
     // A component deeper than maxIters would leave partial labels that
@@ -838,7 +841,7 @@ object DedupFunctions {
     // fixpoint exactly at the cap). The cached symmetric edge set is an
     // equivalent pair list, so the expensive upstream plan is not re-run.
     if (changed > 0) {
-      labels.unpersist()
+      releaseLabels()
       // star checkpoints its input eagerly on entry, so the cached edge
       // set is fully consumed when it returns
       val viaStar = duplicateClustersStar(edges, "src", "dst")
@@ -852,9 +855,21 @@ object DedupFunctions {
       .persist(lvl)
     out.count()
     edgesRaw.unpersist()
-    labels.unpersist()
+    releaseLabels()
     graft.operators.Materialized(out, Seq(out),
       Map("rounds_run" -> i.toLong))
+  }
+
+  /** `localCheckpoint(eager = true)` plus the release of its blocks. The
+    * checkpointed RDD is persisted, yet no cache entry names it, so
+    * neither `unpersist` nor `clearCache` reaches it: without this handle
+    * only the ContextCleaner frees it, at some later driver GC. Release
+    * only once nothing reads the frame: its lineage ends at those blocks. */
+  private def checkpointed(df: DataFrame): (DataFrame, () => Unit) = {
+    val cp = df.localCheckpoint(true)
+    val rdds = cp.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+    (cp, () => rdds.foreach(_.unpersist(blocking = false)))
   }
 
   /** Benchmark-contamination scores (the decontamination pass of a
@@ -964,8 +979,9 @@ object DedupFunctions {
     * The edge set is a fixpoint exactly when every component is a star
     * rooted at its min, at which point (hi → lo) IS the labeling. Each
     * phase is one groupBy + one equi-join, hash-shuffled on the node key;
-    * `localCheckpoint` truncates per-round lineage. The stability probe is
-    * a count plus an anti-join count on round-sized data.
+    * `localCheckpoint` truncates per-round lineage, and each round's
+    * checkpoint is released once the next one exists. The stability probe
+    * is a count plus an anti-join count on round-sized data.
     */
   def duplicateClustersStar(pairs: DataFrame, a: String, b: String,
       maxIters: Int = 60): graft.operators.Materialized = {
@@ -974,11 +990,13 @@ object DedupFunctions {
     // the edge set and twice more below for the self-only membership
     // union, and (on the fallback path) has already been paid once by
     // duplicateClusters — often an expensive similarity join.
-    val p = pairs.select(col(a).as("pa"), col(b).as("pb")).localCheckpoint(true)
+    val (p, releaseP) =
+      checkpointed(pairs.select(col(a).as("pa"), col(b).as("pb")))
     var edges = p
       .select(greatest(col("pa"), col("pb")).as("hi"), least(col("pa"), col("pb")).as("lo"))
       .filter(col("hi") =!= col("lo")).distinct()
       .persist(lvl)
+    var releaseEdges: () => Unit = { val e = edges; () => e.unpersist(): Unit }
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
@@ -993,23 +1011,26 @@ object DedupFunctions {
         .filter(col("hi") =!= col("lo")).distinct()
       // small-star over canonical edges (every neighbor v < u by layout)
       val minsS = large.groupBy(col("hi").as("u")).agg(min("lo").as("m"))
-      val small = large.select(col("hi").as("u"), col("lo").as("v"))
-        .join(minsS, Seq("u"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-        .unionByName(minsS.select(col("u").as("hi"), col("m").as("lo")))
-        .filter(col("hi") =!= col("lo")).distinct()
-        .localCheckpoint(true)
+      val (small, releaseSmall) = checkpointed(
+        large.select(col("hi").as("u"), col("lo").as("v"))
+          .join(minsS, Seq("u"))
+          .select(col("v").as("hi"), col("m").as("lo"))
+          .unionByName(minsS.select(col("u").as("hi"), col("m").as("lo")))
+          .filter(col("hi") =!= col("lo")).distinct())
       val sameSize = small.count() == edges.count()
       converged = sameSize &&
         small.join(edges, Seq("hi", "lo"), "left_anti").isEmpty
-      edges.unpersist()
-      edges = small.persist(lvl)
+      releaseEdges()
+      edges = small
+      releaseEdges = releaseSmall
       i += 1
     }
-    if (!converged)
+    if (!converged) {
+      releaseEdges(); releaseP()
       throw new IllegalStateException(
         s"duplicateClustersStar: not converged after $maxIters rounds — " +
           "O(log n) contraction should never need this many; inspect the input graph")
+    }
     // Fixpoint = stars: (hi → lo) is the labeling; roots label themselves.
     // Nodes whose only pairs were reflexive (a == b) vanished with the
     // self-loop filter but are still members of the input — label them
@@ -1027,7 +1048,7 @@ object DedupFunctions {
     // output: executor loss downstream recomputes instead of failing.
     val out = starMembers.unionByName(selfOnly).persist(lvl)
     out.count()
-    edges.unpersist()
+    releaseEdges(); releaseP()
     graft.operators.Materialized(out, Seq(out),
       Map("rounds_run" -> i.toLong))
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.SilverStore
-import graft.operators.{BucketedLayout, MergeWriter}
+import graft.operators.{BucketedLayout, MergeWriter, TableSwap}
 
 /** Envelope-count provider over the gold counter states — the serve
   * plane's answer to the per-request count job (reference
@@ -36,8 +36,7 @@ final class GoldCounts(spark: SparkSession, silverDir: String) {
   private def io = MergeWriter.io
   private val buckets = SilverStore.bucketSpec("accounts")._2
 
-  private def uidOf(path: String): String =
-    io.readString(MergeWriter.swapMarkerPath(path)).getOrElse("")
+  private def uidOf(path: String): String = TableSwap.markerUid(path)
 
   /** Gold counters current with silver? (see exactness contract above)
     * Two conditions: the donations uid the last refresh consumed equals

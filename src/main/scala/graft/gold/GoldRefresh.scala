@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.ingest.{Schemas, SilverStore}
-import graft.operators.MergeWriter
+import graft.operators.{MergeWriter, TableSwap}
 
 /** The gold-layer refresh job — operational equivalent of the reference's
   * 5-minute Celery beat (base/celery.py:27-49): USD enrichment,
@@ -68,8 +68,7 @@ object GoldRefresh {
 
   // ------------------------------------------------------------------ IO
   private def io = MergeWriter.io
-  private def uidOf(path: String): String =
-    io.readString(MergeWriter.swapMarkerPath(path)).getOrElse("")
+  private def uidOf(path: String): String = TableSwap.markerUid(path)
 
   /** Order-independent multiset signature: count + exact sum + xor of
     * the row hashes. Plain xor alone cancels rows with even multiplicity
@@ -398,23 +397,21 @@ object GoldRefresh {
     s"${stateDir(silverDir)}/prices_seen"
 
   /** Swap a fully-built bucketed table (dir + counts/marker sidecars +
-    * dirty journal) from its `.tmp-<uid>` name to the live name. The dir
-    * rename is the atomic visibility flip; sidecar moves follow (readers
-    * validate the counts sidecar's uid against the swap marker, so a torn
-    * sidecar window degrades to a heal scan, never to wrong data). */
-  private def swapTableWithSidecars(tmpBase: String, path: String): Unit = {
-    val uid = tmpBase.substring(tmpBase.lastIndexOf("-") + 1)
-    val old = s"$path.old-$uid"
-    if (io.exists(path)) io.atomicMove(path, old)
-    io.atomicMove(tmpBase, path)
-    Seq(".counts.json", ".swapuid").foreach { s =>
-      if (io.exists(s"$path$s")) io.deleteRecursively(s"$path$s")
-      if (io.exists(s"$tmpBase$s")) io.atomicMove(s"$tmpBase$s", s"$path$s")
+    * dirty journal), built as a table of its own at
+    * `TableSwap.tmpPath(path, uid)`, in whole. The dir swap is the
+    * visibility flip; the sidecar moves follow (readers validate the
+    * counts sidecar's uid against the marker, so a torn sidecar window
+    * degrades to a heal scan, never to wrong data). */
+  private def swapTableWithSidecars(path: String, uid: String): Unit = {
+    val tmpBase = TableSwap.tmpPath(path, uid)
+    TableSwap.replace(path, uid)
+    Seq(MergeWriter.sidecarPath _, TableSwap.markerPath _).foreach { side =>
+      if (io.exists(side(path))) io.deleteRecursively(side(path))
+      if (io.exists(side(tmpBase))) io.atomicMove(side(tmpBase), side(path))
     }
     MergeWriter.clearDirty(path)
     if (io.exists(MergeWriter.dirtyDir(tmpBase)))
       io.atomicMove(MergeWriter.dirtyDir(tmpBase), MergeWriter.dirtyDir(path))
-    io.deleteRecursively(old)
   }
   private def paidState(spark: SparkSession, silverDir: String): DataFrame = {
     val p = paidStatePath(silverDir)
@@ -515,16 +512,17 @@ object GoldRefresh {
     val facts = enriched.withColumn("__w", lit(1))
     Seq("recv_pairs", "donor_state", "pot_state", "paid", "prices_seen")
       .foreach { n =>
-        io.deleteRecursively(s"$sd/$n")
-        Seq(".goldgen", ".counts.json", ".swapuid", ".dirty", ".dirty.d")
-          .foreach { s =>
-            if (io.exists(s"$sd/$n$s")) io.deleteRecursively(s"$sd/$n$s") }
+        val p = s"$sd/$n"
+        Seq(p, s"$p.goldgen", MergeWriter.sidecarPath(p),
+          TableSwap.markerPath(p), MergeWriter.dirtyPath(p),
+          MergeWriter.dirtyDir(p))
+          .foreach(f => if (io.exists(f)) io.deleteRecursively(f))
       }
     // Stranded incremental artifacts (apply manifests, tmp/aside dirs,
     // delta staging) from a crashed run this rebuild supersedes.
     io.listDir(sd).collect {
-      case (n, _) if n.contains(".apply-") || n.contains(".tmp-") ||
-        n.contains(".old-") || n.startsWith("delta_gen_") => n
+      case (n, _) if n.contains(".apply-") || TableSwap.isResidue(n) ||
+        n.startsWith("delta_gen_") => n
     }.foreach(n => io.deleteRecursively(s"$sd/$n"))
     // Final-table generation fences are per-incremental-run resume state;
     // a full rebuild starts a fresh fence history.
@@ -586,15 +584,16 @@ object GoldRefresh {
     val accounts = tableOrEmpty("accounts", Schemas.account)
     val statsPath = s"$silverDir/account_stats"
     io.listDir(silverDir).collect {
-      case (n, _) if n.startsWith("account_stats.tmp-") ||
-        n.startsWith("account_stats.old-") => n
+      case (n, _) if TableSwap.isTmpOf("account_stats", n) ||
+        TableSwap.isAsideOf("account_stats", n) => n
     }.foreach(n => io.deleteRecursively(s"$silverDir/$n"))
     val allRows = accountRowsFor(spark, silverDir, accounts.select("id"), gen)
     val (statKey, statBuckets) = SilverStore.bucketSpec("accounts")
-    val statsTmp = s"$statsPath.tmp-${java.util.UUID.randomUUID().toString.take(8)}"
-    MergeWriter.mergeBucketed(spark, allRows, statsTmp, Seq("id"),
-      Seq("__gen"), statKey, statBuckets, coalesceUpdates = false): Unit
-    swapTableWithSidecars(statsTmp, statsPath)
+    val statsUid = TableSwap.newUid()
+    MergeWriter.mergeBucketed(spark, allRows,
+      TableSwap.tmpPath(statsPath, statsUid), Seq("id"), Seq("__gen"),
+      statKey, statBuckets, coalesceUpdates = false): Unit
+    swapTableWithSidecars(statsPath, statsUid)
     write(potStatsFromState(spark, silverDir), s"$silverDir/pot_stats")
 
     // Global stats from the state merges' exact counters + payout leg.
@@ -786,7 +785,7 @@ object GoldRefresh {
       val newEnriched =
         if (prices.isEmpty) slice
         else Stats.enrichDonationsUsd(slice, prices, tokens)
-      val enrTmp = s"$enrichedPath.tmp-gen$gen"
+      val enrTmp = TableSwap.tmpPath(enrichedPath, s"gen$gen")
       io.deleteRecursively(enrTmp)
       if (partVals.nonEmpty) {
         // Same (date, donor-group) clustering as the full rebuild's
@@ -836,8 +835,7 @@ object GoldRefresh {
       // must commit what staging saw (uids, journal entry files), not
       // whatever the inputs look like post-crash.
       io.writeStringAtomic(s"$tmpStage/manifest",
-        (Seq(s"enr_tmp=$enrTmp",
-          s"parts=${reEnrich.toSeq.sorted.mkString(";")}",
+        (Seq(s"parts=${reEnrich.toSeq.sorted.mkString(";")}",
           s"payouts_changed=$payoutsChanged",
           s"prices_changed=$pricesChanged",
           s"dirty_donations=${dirtySnapshot.names.toSeq.sorted.mkString(";")}",
@@ -858,35 +856,18 @@ object GoldRefresh {
     def setOf(k: String) =
       manifest.getOrElse(k, "").split(';').filter(_.nonEmpty).toSet
     val parts = setOf("parts")
-    val enrTmp = manifest("enr_tmp")
     val stagedPayoutsChanged = manifest("payouts_changed").toBoolean
     val stagedPricesChanged = manifest("prices_changed").toBoolean
     val stagedDirtyAccts = setOf("dirty_accounts")
 
-    // Enriched partition swap — idempotent: a partition whose tmp dir is
-    // gone was already swapped by the pre-crash run.
-    parts.toSeq.sorted.foreach { dirName =>
-      val src = s"$enrTmp/$dirName"
-      val dst = s"$enrichedPath/$dirName"
-      val aside = s"$enrichedPath.old-gen$gen-$dirName"
-      if (io.exists(src)) {
-        if (io.exists(dst)) io.atomicMove(dst, aside)
-        io.atomicMove(src, dst)
-        io.deleteRecursively(aside)
-      } else {
-        // Already swapped by a pre-crash run (a crash between its
-        // src→dst move and the aside delete leaves the aside behind), or
-        // a BRAND-NEW date partition whose new side was empty (gated
-        // rows) — either way only the stale aside needs cleanup.
-        if (io.exists(aside)) io.deleteRecursively(aside)
-      }
-    }
-    // The partition swap changed donations_enriched without going through
-    // swapIn — rotate its marker so cache freshness (ResultCache.uidsFor)
-    // sees the price-only re-enrichment immediately, not at TTL.
-    if (parts.nonEmpty)
-      io.writeStringAtomic(MergeWriter.swapMarkerPath(enrichedPath),
-        java.util.UUID.randomUUID().toString.take(8))
+    // Enriched partition swap under the generation's uid, resumable: a
+    // partition whose tmp entry is gone was already swapped by the
+    // pre-crash run, or is a BRAND-NEW date partition whose new side was
+    // empty (gated rows).
+    TableSwap.replaceDirs(enrichedPath, s"gen$gen", parts.toSeq.sorted)
+    // A fresh uid, not the generation's, so cache freshness
+    // (ResultCache.uidsFor) sees the price-only re-enrichment immediately.
+    if (parts.nonEmpty) TableSwap.stamp(enrichedPath, TableSwap.newUid())
 
     val stats = applyStates(spark, silverDir, gen, staging)
 
@@ -1019,40 +1000,17 @@ object GoldRefresh {
     MergeWriter.consumeDirty(paths("accounts"), MergeWriter.DirtySnapshot(
       setOf("dirtyfiles_accounts"), stagedDirtyAccts))
     io.deleteRecursively(staging)
-    io.deleteRecursively(enrTmp)
     clearInflight(silverDir)
     Report("incremental", gen, parts.size, nAffected)
   }
 
   // ------------------------------------------------------------ writers
-  /** [[write]] with a bucketed layout: files carry bucket ids so readers
-    * can re-declare the layout (BucketedLayout.registerExternal) and join
-    * exchange-free on `keyCol`. Zero-row frames keep the flat write (a
-    * bucketed writer emits no data files for them). */
-  private def writeBucketed(df: DataFrame, path: String, keyCol: String,
-      buckets: Int): Unit = {
-    if (df.isEmpty) return write(df, path)
-    val spark = df.sparkSession
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
-    val tmpTable = s"graft_gold_bucketed_$uid"
-    df.repartition(buckets, org.apache.spark.sql.functions.col(keyCol))
-      .write.format("parquet").option("path", tmp)
-      .bucketBy(buckets, keyCol).sortBy(keyCol)
-      .mode("overwrite").saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // external: files stay
-    swapIn(tmp, path)
-  }
-
+  /** Readers see a missing table only between the swap's two renames (a
+    * plain delete-then-write left it absent for the whole write). */
   private def write(df: DataFrame, path: String): Unit = {
-    // Swap pattern: write to a unique tmp, rename the live table aside,
-    // atomically move the new one in, then drop the old — readers see a
-    // missing table only for the instant between the two renames (a plain
-    // delete-then-write left the table absent for the whole write).
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
-    df.write.mode("overwrite").parquet(tmp)
-    swapIn(tmp, path)
+    val uid = TableSwap.newUid()
+    df.write.mode("overwrite").parquet(TableSwap.tmpPath(path, uid))
+    publish(path, uid)
   }
 
   /** One write task per (date, donor-group) pair, NOT free-running
@@ -1088,11 +1046,10 @@ object GoldRefresh {
 
   private def writePartitioned(df: DataFrame, path: String,
       groups: Int): Unit = {
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
-    clusterForPartitionedWrite(df, groups)
-      .write.mode("overwrite").partitionBy("__pdate").parquet(tmp)
-    swapIn(tmp, path)
+    val uid = TableSwap.newUid()
+    clusterForPartitionedWrite(df, groups).write.mode("overwrite")
+      .partitionBy("__pdate").parquet(TableSwap.tmpPath(path, uid))
+    publish(path, uid)
   }
 
   private def clusterForPartitionedWrite(df: DataFrame, groups: Int): DataFrame =
@@ -1101,26 +1058,11 @@ object GoldRefresh {
         pmod(xxhash64(col("donor")), lit(groups)))
     else df.repartition(col("__pdate"))
 
-  private def swapIn(tmp: String, path: String): Unit = {
-    // Through the TableIO seam so the gold plane swaps atomically on the
-    // same filesystems the silver store runs on (local nio here would
-    // throw on an s3a/HDFS deployment); also puts the stranded-artifact
-    // naming under Maintenance.vacuum's cleanup contract.
-    val uid = tmp.substring(tmp.lastIndexOf("-") + 1)
-    val io = graft.operators.MergeWriter.io
-    val old = path + ".old-" + uid
-    if (io.exists(path)) io.atomicMove(path, old)
-    // Tolerant move-in: a reader's recoverCrashedSwap may roll this very
-    // swap forward between our renames (it stamps the same uid marker).
-    graft.operators.MergeWriter.moveInTolerant(tmp, path)
-    io.deleteRecursively(old)
-    // Swap marker, same contract as MergeWriter's writers: downstream
-    // freshness checks (ResultCache.uidsFor, SilverStore's registration
-    // cache) read one small file instead of hashing table contents — and
-    // gold-fed routes invalidate the moment a refresh swaps in, not at
-    // cache TTL.
-    io.writeStringAtomic(
-      graft.operators.MergeWriter.swapMarkerPath(path), uid)
+  /** Whole-table swap plus marker, the same as the silver writers: gold-fed
+    * routes invalidate the moment a refresh swaps in, not at cache TTL. */
+  private def publish(path: String, uid: String): Unit = {
+    TableSwap.replace(path, uid)
+    TableSwap.stamp(path, uid)
   }
 
   def main(args: Array[String]): Unit = {

@@ -139,8 +139,7 @@ object SilverStore {
       catalogName: String, tablePath: String)(register: => Unit): Unit = {
     val lock = registerLocks.computeIfAbsent(catalogName, _ => new Object)
     lock.synchronized {
-      val uid = MergeWriter.io
-        .readString(MergeWriter.swapMarkerPath(tablePath)).getOrElse("")
+      val uid = graft.operators.TableSwap.markerUid(tablePath)
       val fresh = uid.nonEmpty && uid == registeredUid.get(catalogName) &&
         spark.catalog.tableExists(catalogName)
       if (!fresh) {
@@ -390,8 +389,8 @@ final class SilverStore(spark: SparkSession, dir: String) {
     // hundred rows each, but every merge's dedup window still fans out to
     // the session's shuffle-partition count (32) — at tiny triggers the
     // 32-task stage scheduling overhead IS the batch latency (AQE cannot
-    // coalesce here: it is disabled under streaming). Scope the shuffle
-    // width to the batch for the duration of this applyBatch (micro-
+    // coalesce here: it is disabled under streaming). Narrow the shuffle
+    // width to 4 for the duration of this applyBatch (micro-
     // batches run sequentially per stream; merges already assume a single
     // writer per table) and restore on exit. The threshold is receipts,
     // not blocks: a backfill mega-batch through this same path keeps the
@@ -400,19 +399,12 @@ final class SilverStore(spark: SparkSession, dir: String) {
     // planned concurrently in the same SparkSession during a tiny batch
     // would also plan at this width. The production wiring (foreachBatch
     // merges on the micro-batch thread; gold beat and serve plane in
-    // their own sessions/processes) never co-plans, but a combined
-    // driver that does can disable via
-    // spark.graft.tinyBatchShufflePartitions=0.
+    // their own sessions/processes) never co-plans.
     val nReceipts = receipts.count()
     val shufConf = "spark.sql.shuffle.partitions"
     val prevShuffle = spark.conf.get(shufConf)
-    // Validated parse: a config typo must degrade to the default width,
-    // not turn every micro-batch into a hard NumberFormatException.
-    val tinyWidth = scala.util.Try(spark.conf
-      .get("spark.graft.tinyBatchShufflePartitions", "4").trim.toInt)
-      .toOption.filter(_ >= 0).getOrElse(4)
-    val tinyBatch = tinyWidth > 0 && nReceipts < 512
-    if (tinyBatch) spark.conf.set(shufConf, tinyWidth.toString)
+    val tinyBatch = nReceipts < 512
+    if (tinyBatch) spark.conf.set(shufConf, "4")
 
     try {
       val dons = persistMidBatch(donations(acts))

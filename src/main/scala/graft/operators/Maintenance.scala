@@ -17,11 +17,9 @@ import org.apache.spark.sql.functions.col
   *    the classic small-files problem. [[compact]] rewrites only the
   *    partitions whose file count exceeds what their byte size needs.
   *
-  *  - The rename-aside swap protocol (MergeWriter.writeAndSwap and the
-  *    partition-scoped variant) is crash-SAFE — a kill between renames
-  *    never loses the live table — but not crash-CLEAN: it can strand
-  *    sibling `<table>.tmp-<uid>` / `<table>.old-<uid>…` directories
-  *    that hold a full copy of the data they were swapping. [[vacuum]]
+  *  - The rename-aside swap ([[TableSwap]]) is crash-SAFE but not
+  *    crash-CLEAN: it can strand sibling tmp and aside directories that
+  *    hold a full copy of the data they were swapping. [[vacuum]]
   *    removes them once they are older than a grace period (the grace
   *    is what keeps an IN-FLIGHT merge's tmp dir safe; size it well
   *    above the longest merge, e.g. hours).
@@ -30,10 +28,11 @@ import org.apache.spark.sql.functions.col
   * bucketed file sets (flat or per-partition) are never rewritten — the
   * bucketed writer already lands one file per bucket, and renaming
   * bucket-id-carrying files would corrupt the layout readers declare via
-  * BucketedLayout.registerExternal. Partition-scoped rewrites reuse the
-  * same rename-aside discipline as the merges, so a crash mid-compaction
-  * leaves every partition either fully old or fully new, and the counts
-  * sidecar stays valid throughout (compaction moves bytes, never rows).
+  * BucketedLayout.registerExternal. Partition-scoped rewrites are the
+  * same per-entry [[TableSwap]] as the merges, so a crash mid-compaction
+  * leaves every partition either fully old or fully new, and each swap
+  * rotates the marker like any other (compaction moves bytes, never
+  * rows, so the counts sidecar keeps its counts under the new uid).
   *
   * Single-writer assumption, same as the merge paths: one maintenance or
   * merge job per table at a time (the ingest loop's gate).
@@ -132,18 +131,17 @@ object Maintenance {
             // Hive-style partition files don't carry the partition
             // column, and the rewrite puts the same dir back in place,
             // so reading the dir directly is exact.
-            val uid = java.util.UUID.randomUUID().toString.take(8)
-            val tmp = s"$path.tmp-$uid"
-            narrow(spark.read.parquet(dir), need, sortCol)
-              .write.mode("overwrite").parquet(s"$tmp/$dirName")
-            // Same aside-dir naming as the partition-scoped merge: the
-            // recovery copy sits NEXT TO the table dir, never inside it
-            // (inside would corrupt partition discovery).
-            val old = s"$path.old-$uid-$dirName"
-            io.atomicMove(dir, old)
-            io.atomicMove(s"$tmp/$dirName", dir)
-            io.deleteRecursively(old)
-            io.deleteRecursively(tmp)
+            val uid = TableSwap.newUid()
+            narrow(spark.read.parquet(dir), need, sortCol).write
+              .mode("overwrite").parquet(s"${TableSwap.tmpPath(path, uid)}/$dirName")
+            // Counts re-stamped under this swap's uid only while they are
+            // valid: a stale sidecar must stay detectably stale.
+            val marker = TableSwap.markerUid(path)
+            MergeWriter.readCountsSidecar(path).foreach { case (counts, u) =>
+              if (u.nonEmpty && u == marker)
+                MergeWriter.writeCountsSidecar(path, counts, uid) }
+            TableSwap.replaceDirs(path, uid, Seq(dirName))
+            TableSwap.stamp(path, uid)
             rewritten += 1; movedBytes += bytes
             after += dataFiles(dir).size
           } else after += files.size
@@ -200,8 +198,8 @@ object Maintenance {
     *    (partition- and bucket-scoped merges);
     *  - the artifact names a partition (`<table>.old-<uid>-<dir>`, or a
     *    partition subdir inside a tmp) whose live partition dir is
-    *    missing — a compaction's per-partition swap has no sidecar
-    *    update, so the uid check alone cannot see its crash window.
+    *    missing — a table without a counts sidecar (or with a stale one)
+    *    gives the uid check nothing to see.
     * Torn small-file `.tmp` halves are always safe to drop: the atomic
     * string writes they belong to are never the only copy of row data. */
   def vacuumInspect(path: String, graceMs: Long,
@@ -212,10 +210,11 @@ object Maintenance {
     val parent = path.substring(0, slash)
     val base = path.substring(slash + 1)
     def smallFileTmp(n: String): Boolean =
-      Seq(s"$base.counts.json.tmp", s"$base.swapuid.tmp").exists(n.startsWith)
+      Seq(MergeWriter.sidecarPath(base), TableSwap.markerPath(base))
+        .exists(f => n.startsWith(s"$f.tmp"))
     val aged = io.listDir(parent).collect {
-      case (n, _) if n.startsWith(s"$base.tmp-") ||
-        n.startsWith(s"$base.old-") || smallFileTmp(n) => n
+      case (n, _) if TableSwap.isTmpOf(base, n) ||
+        TableSwap.isAsideOf(base, n) || smallFileTmp(n) => n
     }.filter { n =>
       val mtime = io.lastModifiedMs(s"$parent/$n")
       mtime > 0L && nowMs - mtime >= graceMs
@@ -223,26 +222,15 @@ object Maintenance {
 
     val liveMissing = !io.exists(path)
     val uidMismatch = (for {
-      marker <- io.readString(MergeWriter.swapMarkerPath(path))
+      marker <- io.readString(TableSwap.markerPath(path))
       (_, sidecarUid) <- MergeWriter.readCountsSidecar(path)
       if sidecarUid.nonEmpty
     } yield marker != sidecarUid).getOrElse(false)
-    // Partition dir named in an aside (`<base>.old-<uid>-<dir>`), if
-    // any. The uid segment is dash-free (an 8-char uuid prefix, or the
-    // gold plane's `gen<N>` markers), so it ends at the FIRST dash; the
-    // remainder must look like a partition dir (`col=value` — values may
-    // themselves contain dashes, e.g. dates).
-    def asidePartition(n: String): Option[String] = {
-      val rest = n.stripPrefix(s"$base.old-")
-      val i = rest.indexOf('-')
-      if (i > 0) Some(rest.substring(i + 1)).filter(_.contains("="))
-      else None
-    }
     def swapIncomplete(n: String): Boolean =
       liveMissing || uidMismatch || {
-        if (n.startsWith(s"$base.old-"))
-          asidePartition(n).exists(d => !io.exists(s"$path/$d"))
-        else if (n.startsWith(s"$base.tmp-"))
+        if (TableSwap.isAsideOf(base, n))
+          TableSwap.asideEntry(base, n).exists(d => !io.exists(s"$path/$d"))
+        else if (TableSwap.isTmpOf(base, n))
           // a tmp's partition subdirs must all have live counterparts
           io.listDir(s"$parent/$n").exists { case (d, isDir) =>
             isDir && d.contains("=") && !io.exists(s"$path/$d") }

@@ -110,24 +110,12 @@ object MergeWriter {
     else row.schema.fieldNames.map(f => f -> row.getAs[Any](f)).toMap
   }
 
-  /** Write `df` to a tmp dir and swap it in with the rename-aside pattern:
-    * the live table is moved aside (one atomic rename), the new one moved
-    * in (another), then the old copy dropped. A crash between the renames
-    * leaves the `.old-` copy recoverable, and readers never observe a
-    * half-deleted directory (a delete-then-move swap loses the live table
-    * if the process dies between the two steps). */
+  /** Write `df` to a tmp dir and swap it in whole ([[TableSwap]]). */
   private[operators] def writeAndSwap(df: DataFrame, path: String): Unit = {
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
-    df.write.mode("overwrite").parquet(tmp)
-    val old = path + ".old-" + uid
-    if (io.exists(path)) io.atomicMove(path, old)
-    moveInTolerant(tmp, path)
-    io.deleteRecursively(old)
-    // Flat swaps stamp the marker too: downstream change detection (the
-    // gold plane's input-uid comparison, SilverStore's registration
-    // cache) reads one small file instead of hashing table contents.
-    writeSwapMarker(path, uid)
+    val uid = TableSwap.newUid()
+    df.write.mode("overwrite").parquet(TableSwap.tmpPath(path, uid))
+    TableSwap.replace(path, uid)
+    TableSwap.stamp(path, uid)
   }
 
   // ------------------------------------------------------------------
@@ -332,9 +320,8 @@ object MergeWriter {
     val merged0 =
       if (coalesceUpdates) backfillNulls(unioned, keys, seq) else unioned
     val merged = Relational.lwwDedup(merged0, keys, seq.map(col))
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
-    val tmpTable = s"graft_merge_bucketed_$uid"
+    val uid = TableSwap.newUid()
+    val tmp = TableSwap.tmpPath(path, uid)
     // Per-bucket counts double as the total AND seed the counts sidecar
     // (so the next scoped merge never pays a heal scan) — and they ride
     // the WRITE job as observed per-bucket aggregates rather than a
@@ -345,12 +332,9 @@ object MergeWriter {
     val obs = new org.apache.spark.sql.Observation(s"merge-buckets-$uid")
     val bucketAggs = (0 until buckets).map(b =>
       count(when(bucketIdExpr(bucketCol, buckets) === b, 1)).as(s"b$b"))
-    preWriteWrap(path, merged).observe(obs, bucketAggs.head, bucketAggs.tail: _*)
-      .repartition(buckets, col(bucketCol))
-      .write.format("parquet").option("path", tmp)
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .mode("overwrite").saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // external: files stay
+    writeBucketedDir(preWriteWrap(path, merged)
+      .observe(obs, bucketAggs.head, bucketAggs.tail: _*),
+      tmp, bucketCol, buckets, uid)
     val observed = awaitObserved(obs)
     val perBucket: Map[String, Long] = (0 until buckets)
       .map(b => s"bucket=$b" ->
@@ -372,23 +356,18 @@ object MergeWriter {
     }
     writeCountsSidecar(path, perBucket, uid)
     appendDirty(path, perBucket.keys)
-    val old = path + ".old-" + uid
-    if (io.exists(path)) io.atomicMove(path, old)
-    moveInTolerant(tmp, path)
-    io.deleteRecursively(old)
-    writeSwapMarker(path, uid)
+    TableSwap.replace(path, uid)
+    TableSwap.stamp(path, uid)
     n
   }
 
   /** Merge `incoming` into ONLY the buckets it hashes into: read those
     * buckets' files, LWW-merge, rewrite them through a bucketed tmp
     * write (empty buckets produce no files, so the tmp holds exactly the
-    * affected buckets' replacements) and swap at FILE granularity — the
-    * one-file-per-bucket invariant holds because each affected bucket's
-    * old file is replaced by its merged successor. Counts ride the same
-    * sidecar-before-swap / marker-after protocol as mergePartitioned:
-    * any crash inside the swap window leaves the uids disagreeing and
-    * the next reader recounts. */
+    * affected buckets' replacements) and swap at FILE granularity
+    * ([[TableSwap.replaceFiles]]) — the one-file-per-bucket invariant
+    * holds because each affected bucket's old file is replaced by its
+    * merged successor. */
   private def mergeBucketedScoped(
       spark: SparkSession,
       incoming: DataFrame,
@@ -435,14 +414,9 @@ object MergeWriter {
     require(mergedPerBucket.keySet.subsetOf(affectedNames),
       s"scoped bucketed merge leaked rows outside ${affectedNames.toSeq.sorted}")
 
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
-    val tmpTable = s"graft_merge_bucketed_$uid"
-    merged.repartition(buckets, col(bucketCol))
-      .write.format("parquet").option("path", tmp)
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .mode("overwrite").saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // external: files stay
+    val uid = TableSwap.newUid()
+    writeBucketedDir(merged, TableSwap.tmpPath(path, uid), bucketCol,
+      buckets, uid)
     merged.unpersist()
 
     val newCounts = currentBucketCounts(spark, path, bucketCol, buckets) ++
@@ -450,33 +424,9 @@ object MergeWriter {
     writeCountsSidecar(path, newCounts, uid)
     appendDirty(path, affectedNames)
 
-    swapBucketFiles(path, tmp, uid, oldFiles)
-    writeSwapMarker(path, uid)
+    TableSwap.replaceFiles(path, uid, oldFiles)
+    TableSwap.stamp(path, uid)
     newCounts.values.sum
-  }
-
-  /** File-granular swap, same rename-aside discipline as the partition
-    * swap: old bucket files move ASIDE first (a crash leaves them
-    * recoverable, and a reader never sees old+new files of one bucket
-    * double-counted), then the replacements move in. Checksum siblings
-    * (`.part-…crc` on checksummed filesystems) travel with their data
-    * file so the live dir never accumulates stale checksums that a
-    * same-named future file could trip over. */
-  private def swapBucketFiles(path: String, tmp: String, uid: String,
-      oldFiles: Seq[String]): Unit = {
-    def moveWithCrc(srcDir: String, dstDir: String, f: String): Unit = {
-      io.atomicMove(s"$srcDir/$f", s"$dstDir/$f")
-      val crc = s".$f.crc"
-      if (io.exists(s"$srcDir/$crc"))
-        io.atomicMove(s"$srcDir/$crc", s"$dstDir/$crc")
-    }
-    val aside = path + ".old-" + uid
-    io.createDirectories(aside)
-    oldFiles.foreach(f => moveWithCrc(path, aside, f))
-    io.fileSizes(tmp).map(_._1).filter(f => bucketIdOfFile(f).nonEmpty)
-      .foreach(f => moveWithCrc(tmp, path, f))
-    io.deleteRecursively(aside)
-    io.deleteRecursively(tmp)
   }
 
   /** What [[mergeAdditiveBucketed]] observed INSIDE the affected buckets:
@@ -500,8 +450,8 @@ object MergeWriter {
     * not just appends.
     *
     * Only the buckets the delta hashes into are read, re-summed and
-    * file-swapped (same tmp-write/sidecar-before/marker-after/rename-
-    * aside protocol as the LWW scoped path): per refresh, state cost
+    * file-swapped (the same [[TableSwap]] file-entry swap as the LWW
+    * scoped path): per refresh, state cost
     * scales with the batch's key span, never the state's size. The
     * delta's columns must be exactly the table's (keys ++ addCols);
     * summed columns are cast back to their declared types so the state
@@ -595,38 +545,15 @@ object MergeWriter {
     * are idempotent by content. */
   private def commitStagedAdditive(path: String,
       m: ApplyManifest): AdditiveMergeStats = {
-    def moveWithCrc(srcDir: String, dstDir: String, f: String): Unit = {
-      io.atomicMove(s"$srcDir/$f", s"$dstDir/$f")
-      val crc = s".$f.crc"
-      if (io.exists(s"$srcDir/$crc"))
-        io.atomicMove(s"$srcDir/$crc", s"$dstDir/$crc")
-    }
-    val aside = path + ".old-" + m.uid
-    if (m.mode == "bootstrap") {
-      if (io.exists(m.tmp)) {
-        if (io.exists(path)) {
-          if (io.exists(aside)) io.deleteRecursively(aside)
-          io.atomicMove(path, aside)
-        }
-        moveInTolerant(m.tmp, path)
-      }
-      io.deleteRecursively(aside)
-    } else {
-      io.createDirectories(aside)
-      m.oldFiles.foreach { f =>
-        if (io.exists(s"$path/$f")) moveWithCrc(path, aside, f) }
-      if (io.exists(m.tmp))
-        io.fileSizes(m.tmp).map(_._1).filter(f => bucketIdOfFile(f).nonEmpty)
-          .foreach(f => moveWithCrc(m.tmp, path, f))
-      io.deleteRecursively(aside)
-      io.deleteRecursively(m.tmp)
-    }
+    // The staged tmp is TableSwap.tmpPath(path, m.uid) (stageAdditive).
+    if (m.mode == "bootstrap") TableSwap.replace(path, m.uid)
+    else TableSwap.replaceFiles(path, m.uid, m.oldFiles)
     if (m.counts.nonEmpty) writeCountsSidecar(path, m.counts, m.uid)
     else if (io.exists(sidecarPath(path))) io.deleteRecursively(sidecarPath(path))
     // Entry named by the apply uid: a crash-resumed re-commit overwrites
     // its own journal entry instead of appending a duplicate per resume.
     appendDirty(path, m.dirty, entryId = Some(m.uid))
-    writeSwapMarker(path, m.uid)
+    TableSwap.stamp(path, m.uid)
     m.stats
   }
 
@@ -644,7 +571,7 @@ object MergeWriter {
         io.readString(s"$parent/$n").flatMap(_.split('\n')
           .find(_.startsWith("tmp=")).map(_.stripPrefix("tmp=")))
     }.flatten.toSet
-    entries.collect { case (n, true) if n.startsWith(name + ".tmp-") =>
+    entries.collect { case (n, true) if TableSwap.isTmpOf(name, n) =>
       s"$parent/$n" }
       .filterNot(liveTmp.contains)
       .foreach(io.deleteRecursively)
@@ -693,8 +620,8 @@ object MergeWriter {
     // can be in flight under us).
     sweepStrandedAdditiveTmp(path)
     val scoped = io.exists(path) && BucketedLayout.looksBucketed(path)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
+    val uid = TableSwap.newUid()
+    val tmp = TableSwap.tmpPath(path, uid)
     def stageManifest(m: ApplyManifest): Some[ApplyManifest] = {
       io.writeStringAtomic(applyManifestPath(path, token),
         renderApplyManifest(m))
@@ -721,12 +648,7 @@ object MergeWriter {
         return stageManifest(ApplyManifest("bootstrap", uid, tmp, Nil,
           Map.empty, Set.empty, AdditiveMergeStats(0L, 0L, 0L, 0L)))
       }
-      val tmpTable = s"graft_merge_add_$uid"
-      merged.repartition(buckets, col(bucketCol))
-        .write.format("parquet").option("path", tmp)
-        .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-        .mode("overwrite").saveAsTable(tmpTable)
-      spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // external: files stay
+      writeBucketedDir(merged, tmp, bucketCol, buckets, uid)
       merged.unpersist()
       return stageManifest(ApplyManifest("bootstrap", uid, tmp, Nil,
         perBucket, Set.empty,
@@ -764,12 +686,7 @@ object MergeWriter {
     require(mergedPerBucket.keySet.subsetOf(affectedNames),
       s"additive scoped merge leaked rows outside ${affectedNames.toSeq.sorted}")
     val (rowsAfter, distinctAfter) = stats(merged)
-    val tmpTable = s"graft_merge_add_$uid"
-    merged.repartition(buckets, col(bucketCol))
-      .write.format("parquet").option("path", tmp)
-      .bucketBy(buckets, bucketCol).sortBy(bucketCol)
-      .mode("overwrite").saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable") // external: files stay
+    writeBucketedDir(merged, tmp, bucketCol, buckets, uid)
     merged.unpersist(); dAgg.unpersist()
     // An affected bucket can legitimately EMPTY (all its keys netted to
     // zero): drop its stale sidecar entry rather than carrying a count
@@ -791,19 +708,19 @@ object MergeWriter {
     val diskBuckets: Set[String] = io.fileSizes(path).map(_._1)
       .flatMap(bucketIdOfFile).map(b => s"bucket=$b").toSet
     if (diskBuckets.isEmpty) return Map.empty
-    val markerUid = io.readString(swapMarkerPath(path))
+    val markerUid = TableSwap.markerUid(path)
     val valid = readCountsSidecar(path).collect {
       case (counts, sidecarUid)
-        if sidecarUid.nonEmpty && markerUid.contains(sidecarUid) &&
+        if sidecarUid.nonEmpty && markerUid == sidecarUid &&
           counts.keySet == diskBuckets => counts
     }
     valid.getOrElse {
       val counted = spark.read.parquet(path)
         .groupBy(bucketIdExpr(bucketCol, buckets)).count()
         .collect().map(r => (s"bucket=${r.get(0)}", r.getLong(1))).toMap
-      val uid = java.util.UUID.randomUUID().toString.take(8)
+      val uid = TableSwap.newUid()
       writeCountsSidecar(path, counted, uid)
-      writeSwapMarker(path, uid)
+      TableSwap.stamp(path, uid)
       counted
     }
   }
@@ -911,36 +828,19 @@ object MergeWriter {
       .groupBy(col(partitionCol)).count().collect()
       .map(r => (s"$partitionCol=${r.get(0)}", r.getLong(1))).toMap
 
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
-    writePartitionedTmp(spark, merged, tmp, partitionCol, bucket, uid)
+    val uid = TableSwap.newUid()
+    writePartitionedTmp(spark, merged, TableSwap.tmpPath(path, uid),
+      partitionCol, bucket, uid)
     merged.unpersist()
 
-    // Sidecar-before-swap protocol (see [[currentCounts]] for why): the
-    // new totals are persisted FIRST, stamped with this batch's swap uid;
-    // the marker gets the same uid only after every partition swap landed.
-    // A crash anywhere between the two writes leaves uid mismatch → the
-    // next reader recounts instead of trusting stale per-partition counts.
+    // The new totals go down under this swap's uid BEFORE the partition
+    // swap, the marker after it ([[TableSwap]], [[currentCounts]]).
     val newCounts = currentCounts(spark, path, partitionCol) ++ mergedPerPart
     writeCountsSidecar(path, newCounts, uid)
     appendDirty(path, mergedPerPart.keys)
 
-    io.createDirectories(path)
-    affected.foreach { v =>
-      val dirName = s"$partitionCol=$v"
-      val src = s"$tmp/$dirName"
-      val dst = s"$path/$dirName"
-      // Same rename-aside discipline as the flat swap: a crash between the
-      // renames leaves the .old- copy recoverable instead of losing the
-      // live partition. The aside dir sits NEXT TO the table dir — inside
-      // it, a leftover would corrupt partition discovery.
-      val old = tmp.replace(".tmp-", ".old-") + "-" + dirName
-      if (io.exists(dst)) io.atomicMove(dst, old)
-      if (io.exists(src)) io.atomicMove(src, dst)
-      io.deleteRecursively(old)
-    }
-    io.deleteRecursively(tmp)
-    writeSwapMarker(path, uid)
+    TableSwap.replaceDirs(path, uid, affected.map(v => s"$partitionCol=$v"))
+    TableSwap.stamp(path, uid)
     newCounts.values.sum
   }
 
@@ -948,19 +848,12 @@ object MergeWriter {
     * table dir, so the full-table count callers want is a delta update +
     * sum, not a per-batch scan of all partition footers (which grows with
     * table history — exactly what the partition-scoped path exists to
-    * avoid).
-    *
-    * Validity is a two-part check, and both parts must pass:
-    *  - the sidecar's swap uid equals the `<table>.swapuid` marker's —
-    *    the sidecar is written (with the NEW uid) before the partition
-    *    swaps, the marker after them, so ANY crash inside the swap window
-    *    leaves the uids disagreeing, including the batch-touched-only-
-    *    existing-partitions case where the partition-name set stays
-    *    identical;
-    *  - the sidecar's partition-name set matches the directories on disk
-    *    (catches legacy tables and out-of-band layout edits).
-    * On any disagreement the table is recounted grouped-by-partition —
-    * one full scan to heal, never a steady-state cost. */
+    * avoid). They are valid when the sidecar's uid equals the marker's
+    * (the two disagree while a swap is in flight, [[TableSwap]]; this
+    * catches a crash even when the partition set stays the same) and the
+    * sidecar's partition set matches the dirs on disk (legacy tables,
+    * out-of-band edits). Otherwise the table is recounted grouped by
+    * partition: one full scan to heal, never a steady-state cost. */
   private def currentCounts(spark: SparkSession, path: String,
       partitionCol: String): Map[String, Long] = {
     if (!io.exists(path)) return Map.empty
@@ -968,10 +861,10 @@ object MergeWriter {
       .collect { case (n, true) if n.startsWith(partitionCol + "=") => n }
       .toSet
     if (diskParts.isEmpty) return Map.empty
-    val markerUid = io.readString(swapMarkerPath(path))
+    val markerUid = TableSwap.markerUid(path)
     val valid = readCountsSidecar(path).collect {
       case (counts, sidecarUid)
-        if sidecarUid.nonEmpty && markerUid.contains(sidecarUid) &&
+        if sidecarUid.nonEmpty && markerUid == sidecarUid &&
           counts.keySet == diskParts => counts
     }
     valid.getOrElse {
@@ -979,106 +872,14 @@ object MergeWriter {
       // the scan doesn't repeat next batch
       val counted = spark.read.parquet(path).groupBy(col(partitionCol)).count()
         .collect().map(r => (s"$partitionCol=${r.get(0)}", r.getLong(1))).toMap
-      val uid = java.util.UUID.randomUUID().toString.take(8)
+      val uid = TableSwap.newUid()
       writeCountsSidecar(path, counted, uid)
-      writeSwapMarker(path, uid)
+      TableSwap.stamp(path, uid)
       counted
     }
   }
 
-  private def sidecarPath(path: String): String = path + ".counts.json"
-  private[graft] def swapMarkerPath(path: String): String =
-    path + ".swapuid"
-
-  private def writeSwapMarker(path: String, uid: String): Unit =
-    io.writeStringAtomic(swapMarkerPath(path), uid)
-
-  /** Reader-side ROLL-FORWARD of a whole-table swap that died between
-    * its two renames — the swap protocol's only unservable crash
-    * window. In it, the live dir is missing while a COMPLETE
-    * `.tmp-<uid>` (the swap's payload, fully written before the swap
-    * began) and the `.old-<uid>` copy sit beside it under the SAME uid;
-    * finishing the crashed swap's remaining steps (move tmp in, drop
-    * old, stamp the marker) restores service with the data the swap was
-    * publishing. The paired-uid condition is what makes this safe:
-    * additive/manifest merges never take the live dir away (their tmp
-    * dirs are PARTIAL bucket sets — rolling one forward would truncate
-    * the table), so a missing live dir beside a tmp/old pair can only
-    * be this window. Anything else (lone tmp of a first-ever write
-    * nobody could yet read, multiple ambiguous pairs) is left for the
-    * next write to supersede. Concurrency-safe: losing the move race
-    * to the (still live after all) swapper or another reader leaves a
-    * live table either way, and the marker write is same-uid
-    * idempotent — see [[moveInTolerant]] for the swapper's side.
-    * Returns true if it restored a live table at `path`. */
-  private[graft] def recoverCrashedSwap(path: String): Boolean = {
-    if (io.exists(path)) return false
-    val slash = path.lastIndexOf('/')
-    if (slash < 0) return false
-    val (parent, name) = (path.take(slash), path.drop(slash + 1))
-    if (!io.exists(parent)) return false
-    val dirs = io.listDir(parent).collect { case (n, true) => n }.toSet
-    val tmpUids = dirs.collect {
-      case n if n.startsWith(name + ".tmp-") =>
-        n.stripPrefix(name + ".tmp-") }
-    val oldUids = dirs.collect {
-      case n if n.startsWith(name + ".old-") =>
-        n.stripPrefix(name + ".old-") }
-    val paired = tmpUids.intersect(oldUids)
-    if (paired.size != 1) return false
-    val uid = paired.head
-    // Marker snapshot + payload sentinel, taken BEFORE the move: the
-    // stamp below is conditional on both. Without them, a restarted
-    // beat republishing under a NEW uid between this reader's move-in
-    // and its marker write would get its fresh marker overwritten by
-    // this late stamp — regressing the marker behind the live content
-    // for one beat (mislabeled cache/loader fingerprints). The sentinel
-    // is a `_`-prefixed file INSIDE the payload (Spark readers ignore
-    // it, like _SUCCESS): after the move it travels with the recovered
-    // dir, so "sentinel still present at `path`" means the live dir is
-    // still THIS recovery's content, not a republish that rotated it
-    // away. Same-uid peers write the same sentinel name — their
-    // duplicate stamps stay idempotent.
-    val markerBefore = io.readString(swapMarkerPath(path))
-    val sentinel = s"_graft_recover_$uid"
-    try io.writeStringAtomic(s"$path.tmp-$uid/$sentinel", uid)
-    catch { case scala.util.control.NonFatal(_) => () } // tmp already won a race
-    val moved =
-      try { io.atomicMove(s"$path.tmp-$uid", path); true }
-      catch { case scala.util.control.NonFatal(_) => false }
-    if (!moved)
-      // Lost the move race. The winner may be a SAME-uid peer (another
-      // reader, or the original swapper resuming — either stamps this
-      // uid's marker) or a DIFFERENT-uid republish (the restarted beat
-      // wrote fresh content under a new uid and stamped ITS marker).
-      // Stamping uid here in the second case would regress the marker
-      // below the live content — only the mover may stamp. A live
-      // table either way is the recovery's goal; report whether one
-      // exists, and leave this pair's residue to the vacuum.
-      return io.exists(path)
-    io.deleteRecursively(s"$path.old-$uid")
-    // Conditional stamp (compare-and-set style): only if the marker is
-    // untouched since recovery began AND the live dir still carries this
-    // recovery's sentinel. Either check failing means a different-uid
-    // republish already stamped fresher content — leave its marker be.
-    if (io.readString(swapMarkerPath(path)) == markerBefore &&
-        io.exists(s"$path/$sentinel"))
-      writeSwapMarker(path, uid)
-    try io.deleteRecursively(s"$path/$sentinel")
-    catch { case scala.util.control.NonFatal(_) => () } // rotated away mid-delete
-    true
-  }
-
-  /** The swap's move-in, tolerant of [[recoverCrashedSwap]] stealing the
-    * step: a failed move whose destination is live and whose source is
-    * gone means a reader rolled this very swap forward (same uid, same
-    * payload, marker already stamped) — the swapper proceeds to its own
-    * idempotent tail. Any other failure shape rethrows. */
-  private[graft] def moveInTolerant(tmp: String, path: String): Unit =
-    try io.atomicMove(tmp, path)
-    catch { case scala.util.control.NonFatal(e) =>
-      if (!io.exists(path) || io.exists(tmp)) throw e
-    }
+  private[graft] def sidecarPath(path: String): String = path + ".counts.json"
 
   private[graft] def readCountsSidecar(
       path: String): Option[(Map[String, Long], String)] =
@@ -1092,7 +893,7 @@ object MergeWriter {
       }.toOption
     }
 
-  private def writeCountsSidecar(path: String, counts: Map[String, Long],
+  private[graft] def writeCountsSidecar(path: String, counts: Map[String, Long],
       uid: String): Unit = {
     // the uid value is quoted, so the numeric count regex never picks it up
     val json = (s""""__swap_uid":"$uid"""" +: counts.toSeq.sortBy(_._1)
@@ -1100,12 +901,20 @@ object MergeWriter {
     io.writeStringAtomic(sidecarPath(path), json)
   }
 
+  /** [[BucketedLayout.writeBucketed]] to `dir` (one file per bucket)
+    * without keeping its catalog entry: bucketBy is a table-write-only
+    * API, and dropping the EXTERNAL entry leaves the files. */
+  private[graft] def writeBucketedDir(df: DataFrame, dir: String,
+      bucketCol: String, buckets: Int, uid: String): Unit = {
+    val table = s"graft_bucketed_$uid"
+    BucketedLayout.writeBucketed(df, table, dir, bucketCol, buckets)
+    df.sparkSession.sql(s"DROP TABLE IF EXISTS $table"): Unit
+  }
+
   /** Write `df` under `tmp` partitioned by `partitionCol`, optionally in
-    * bucketed layout (bucketBy is a table-write-only API, so the bucketed
-    * branch routes through a temporary EXTERNAL catalog entry that is
-    * dropped immediately — metadata only, the files stay). Rows are
-    * repartitioned to the bucket spec so each (partition, bucket) lands
-    * in one file. */
+    * bucketed layout through a temporary catalog entry, as
+    * [[writeBucketedDir]] does, so each (partition, bucket) lands in one
+    * file. */
   private def writePartitionedTmp(spark: SparkSession, df: DataFrame,
       tmp: String, partitionCol: String, bucket: Option[(String, Int)],
       uid: String): Unit = bucket match {
@@ -1164,19 +973,14 @@ object MergeWriter {
     val perPart: Map[String, Long] = merged
       .groupBy(col(partitionCol)).count().collect()
       .map(r => (s"$partitionCol=${r.get(0)}", r.getLong(1))).toMap
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val tmp = path + ".tmp-" + uid
-    writePartitionedTmp(spark, merged, tmp, partitionCol, bucket, uid)
+    val uid = TableSwap.newUid()
+    writePartitionedTmp(spark, merged, TableSwap.tmpPath(path, uid),
+      partitionCol, bucket, uid)
     merged.unpersist()
-    // same sidecar-before-swap, marker-after-swap discipline as the
-    // steady-state path
     writeCountsSidecar(path, perPart, uid)
     appendDirty(path, perPart.keys)
-    val old = path + ".old-" + uid
-    io.atomicMove(path, old)
-    io.atomicMove(tmp, path)
-    io.deleteRecursively(old)
-    writeSwapMarker(path, uid)
+    TableSwap.replace(path, uid)
+    TableSwap.stamp(path, uid)
     n
   }
 

@@ -3,14 +3,11 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 
-/** Filesystem seam for the merge writer's swap/list/sidecar IO.
-  *
-  * MergeWriter's durability story rests on three primitives — atomic
-  * rename, directory listing, and small atomic file writes — and nothing
-  * else in the engine mutates table layout. Isolating them here keeps the
-  * 100 TB path honest: the local implementation uses `java.nio` same-volume
-  * renames, while a cluster deployment backs the same interface with the
-  * HDFS `rename` (atomic within a namespace) or an object-store commit
+/** Filesystem seam for the table swap ([[TableSwap]]) and the merge
+  * writer's listings and sidecars: atomic rename, directory listing and
+  * small atomic file writes. The local implementation uses `java.nio`
+  * same-volume renames; a cluster deployment backs the same interface with
+  * the HDFS `rename` (atomic within a namespace) or an object-store commit
   * protocol, without touching merge logic.
   */
 trait TableIO {
@@ -72,11 +69,10 @@ object LocalTableIO extends TableIO {
     Files.createDirectories(p(path))
 
   def deleteRecursively(path: String): Unit = {
-    // Tolerates a CONCURRENT deleter of the same tree: the swap
-    // protocol's cleanup can legitimately race (a reader's
-    // recoverCrashedSwap deletes the `.old-` copy the resuming swapper
-    // is also deleting — SwapRecoveryRaceSpec drives it for real), and
-    // a per-node miss just means the peer got there first. A transient
+    // Tolerates a CONCURRENT deleter of the same tree: a reader's
+    // TableSwap.recoverCrashedSwap deletes the aside copy the resuming
+    // swapper is also deleting (SwapRecoveryRaceSpec drives it for real),
+    // and a per-node miss just means the peer got there first. A transient
     // DirectoryNotEmpty (peer still mid-children) is swept by the
     // bounded re-walk; a crash here would be worse than residue — the
     // maintenance vacuum reclaims anything left.
@@ -125,8 +121,8 @@ object LocalTableIO extends TableIO {
   /** Each write stages through its own `<path>.tmp.<uuid>`: writers
     * racing on one path (a reader's crash recovery and the resuming
     * swapper both stamp the swap marker) would otherwise truncate or move
-    * away each other's staging file. The last move wins whole. Not
-    * `.tmp-`: that tag names a table's swap staging dir. */
+    * away each other's staging file. The last move wins whole. The dot
+    * keeps the name apart from a [[TableSwap.tmpPath]] dir. */
   override def writeBytesAtomic(path: String, bytes: Array[Byte]): Unit = {
     val tmp = p(s"$path.tmp.${java.util.UUID.randomUUID()}")
     Files.write(tmp, bytes)

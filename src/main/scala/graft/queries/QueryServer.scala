@@ -358,7 +358,7 @@ final class QueryServer(
           // table — the retry alone would report a 500 for every
           // request until the next beat republishes. Roll the crashed
           // swap forward first (finish its remaining steps from the
-          // complete tmp payload; see MergeWriter.recoverCrashedSwap
+          // complete tmp payload; see TableSwap.recoverCrashedSwap
           // for why the paired-uid residue makes this safe and
           // race-tolerant). One directory listing when no recovery is
           // needed — retries are beat-cadence rare.
@@ -910,8 +910,7 @@ object QueryServer {
       val cache = ref.get
       if (cache != null) cache.foreach { case (name, (uid, df)) =>
         val physical = physicalTable(dir, name)
-        val cur = io.readString(graft.operators.MergeWriter
-          .swapMarkerPath(s"$dir/$physical")).getOrElse("")
+        val cur = graft.operators.TableSwap.markerUid(s"$dir/$physical")
         val filesGone =
           try df.inputFiles.headOption.exists { f =>
             !io.exists(new java.net.URI(f).getPath)
@@ -929,7 +928,7 @@ object QueryServer {
     * stale-swap retry compares to tell a rotation from a dead table. */
   private[queries] def swapMarkers(dir: String): Map[String, String] = {
     val io = graft.operators.MergeWriter.io
-    val suffix = graft.operators.MergeWriter.swapMarkerPath("")
+    val suffix = graft.operators.TableSwap.markerPath("")
     io.listDir(dir).collect {
       case (n, false) if n.endsWith(suffix) =>
         n -> io.readString(s"$dir/$n").getOrElse("")
@@ -938,22 +937,17 @@ object QueryServer {
 
   /** Sweep `dir` for tables whose live directory is missing beside
     * whole-table swap residue and roll each forward
-    * (MergeWriter.recoverCrashedSwap) — the serve plane's half of the
+    * (TableSwap.recoverCrashedSwap) — the serve plane's half of the
     * swap protocol's crash contract. Returns the number recovered. */
   private[queries] def rollForwardCrashedSwaps(dir: String): Int = {
+    import graft.operators.TableSwap
     val io = graft.operators.MergeWriter.io
     val entries =
       try { if (io.exists(dir)) io.listDir(dir) else Seq.empty }
       catch { case scala.util.control.NonFatal(_) => Seq.empty }
     val names = entries.collect { case (n, true) => n }.toSet
-    val bases = names.flatMap { n =>
-      Seq(".tmp-", ".old-").flatMap { tag =>
-        val i = n.indexOf(tag)
-        if (i > 0) Some(n.take(i)) else None
-      }
-    }
-    bases.count(b => !names.contains(b) &&
-      graft.operators.MergeWriter.recoverCrashedSwap(s"$dir/$b"))
+    names.flatMap(TableSwap.residueTables).count(b => !names.contains(b) &&
+      TableSwap.recoverCrashedSwap(s"$dir/$b"))
   }
 
   /** Host header grammar gate for absolute continuation links: the
@@ -1111,20 +1105,18 @@ object QueryServer {
     * rotates the uid and the next call rebuilds; between swaps the cost
     * per call is one small marker-file read. `donations` keys on
     * `donations_enriched`'s marker — that is the table the loader
-    * actually reads (every refresh path stamps it: write/writeBucketed/
-    * writePartitioned via swapIn, the incremental partition swap
-    * explicitly). */
+    * actually reads (every refresh path stamps it: write and
+    * writePartitioned on their whole-table swap, the incremental
+    * partition swap explicitly). */
   def memoizedServingLoader(spark: org.apache.spark.sql.SparkSession,
       silverDir: String): String => DataFrame = {
     val raw = servingLoader(spark, silverDir)
-    val io = graft.operators.MergeWriter.io
     val cache =
       scala.collection.concurrent.TrieMap[String, (String, DataFrame)]()
     registerLoaderCache(silverDir, cache)
     name => {
       val physical = physicalTable(silverDir, name)
-      val uid = io.readString(graft.operators.MergeWriter
-        .swapMarkerPath(s"$silverDir/$physical")).getOrElse("")
+      val uid = graft.operators.TableSwap.markerUid(s"$silverDir/$physical")
       cache.get(name) match {
         case Some((u, df)) if u == uid => df
         case _ =>

@@ -174,12 +174,6 @@ object ResultCache {
     * swap-marker uid per table (empty string when the table or marker
     * does not exist yet — still a valid fingerprint: it changes when the
     * first merge lands). */
-  def uidsFor(silverDir: String)(tables: Seq[String]): Seq[String] = {
-    val io = graft.operators.MergeWriter.io
-    tables.map { n =>
-      io.readString(
-        graft.operators.MergeWriter.swapMarkerPath(s"$silverDir/$n"))
-        .getOrElse("")
-    }
-  }
+  def uidsFor(silverDir: String)(tables: Seq[String]): Seq[String] =
+    tables.map(n => graft.operators.TableSwap.markerUid(s"$silverDir/$n"))
 }

@@ -102,9 +102,10 @@ class MaintenanceSpec extends SparkSpec {
     // Cold partition untouched — same physical files.
     assert(dataFiles(s"$path/day=2024-06-02").toSet == coldFiles)
     assert(spark.read.parquet(path).count() == 40)
-    // Compaction never touches the sidecar/marker pair.
-    assert(Files.readAllBytes(Paths.get(s"$path.swapuid"))
-      .sameElements(sidecarUid))
+    // The swap rotated the marker and re-stamped the counts under it.
+    val marker = TableSwap.markerUid(path)
+    assert(!marker.getBytes("UTF-8").sameElements(sidecarUid))
+    assert(MergeWriter.readCountsSidecar(path).map(_._2).contains(marker))
 
     // The counts sidecar survives compaction (rows moved, not changed):
     // the next merge must trust it — total correct without a heal rescan.

@@ -92,9 +92,9 @@ class MergeWriterUpgradeSpec extends SparkSpec {
     // Second call is a no-op: the swap marker (stamped by the rewrite)
     // must not rotate again — downstream caches key freshness on it.
     val marker = MergeWriter.io
-      .readString(MergeWriter.swapMarkerPath(path))
+      .readString(TableSwap.markerPath(path))
     MergeWriter.backfillLiteralColumn(spark, path, "kind", lit("action"))
-    assert(MergeWriter.io.readString(MergeWriter.swapMarkerPath(path)) == marker)
+    assert(MergeWriter.io.readString(TableSwap.markerPath(path)) == marker)
   }
 
   test("replayed additive commit keeps ONE dirty entry; stranded staging dirs are swept") {

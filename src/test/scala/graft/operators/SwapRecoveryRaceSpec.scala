@@ -3,9 +3,12 @@ package graft.operators
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{CountDownLatch, CyclicBarrier, TimeUnit}
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
+import graft.gold.GoldRefresh
+import graft.ingest.Fixtures
+import graft.streaming.StreamIngest
 
-/** [[MergeWriter.recoverCrashedSwap]]'s concurrency contract, pinned with
+/** [[TableSwap.recoverCrashedSwap]]'s concurrency contract, pinned with
   * REAL racing threads. The mid-swap kill-loop spec (QueryServerSpec)
   * injects crashes sequentially; the race outcomes below were previously
   * only ARGUED from the marker protocol. Three named interleavings:
@@ -17,11 +20,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *     move-in and its marker stamp — the reader's late stamp must NOT
   *     regress the marker behind the republished content.
   *
-  * No Spark: recoverCrashedSwap is pure file protocol, so the race loops
-  * run hundreds of iterations in milliseconds against real directories.
+  * These need no Spark: recoverCrashedSwap is pure file protocol, so the
+  * race loops run hundreds of iterations in milliseconds against real
+  * directories. The writer cases at the end run real writers whose
+  * move-in a reader steals, one per whole-table swap shape.
   */
 @org.scalatest.tags.Slow
-class SwapRecoveryRaceSpec extends AnyFunSuite {
+class SwapRecoveryRaceSpec extends SparkSpec {
 
   private val UidCrashed = "aaaa1111"
   private val UidRepub = "bbbb2222"
@@ -37,7 +42,7 @@ class SwapRecoveryRaceSpec extends AnyFunSuite {
     Files.createDirectories(Paths.get(s"$path.old-$UidCrashed"))
     Files.write(Paths.get(s"$path.old-$UidCrashed/part-old.parquet"),
       "old-payload".getBytes("UTF-8"))
-    LocalTableIO.writeStringAtomic(MergeWriter.swapMarkerPath(path), "prior0")
+    LocalTableIO.writeStringAtomic(TableSwap.markerPath(path), "prior0")
     path
   }
 
@@ -65,7 +70,7 @@ class SwapRecoveryRaceSpec extends AnyFunSuite {
       s"iter $iter: tmp residue survived")
     assert(!Files.exists(Paths.get(s"$path.old-$UidCrashed")),
       s"iter $iter: old residue survived")
-    assert(LocalTableIO.readString(MergeWriter.swapMarkerPath(path))
+    assert(LocalTableIO.readString(TableSwap.markerPath(path))
       .contains(UidCrashed), s"iter $iter: marker not stamped to the " +
       "recovered uid")
   }
@@ -75,14 +80,14 @@ class SwapRecoveryRaceSpec extends AnyFunSuite {
     (0 until 200).foreach { i =>
       val path = mkCrashedState(base, s"t$i")
       race(
-        () => { MergeWriter.recoverCrashedSwap(path): Unit },
+        () => { TableSwap.recoverCrashedSwap(path): Unit },
         () => {
           // The swapper was slow, not dead: it resumes writeAndSwap's
           // tail — tolerant move-in, drop the old copy, stamp.
-          MergeWriter.moveInTolerant(s"$path.tmp-$UidCrashed", path)
+          TableSwap.moveInTolerant(s"$path.tmp-$UidCrashed", path)
           LocalTableIO.deleteRecursively(s"$path.old-$UidCrashed")
           LocalTableIO.writeStringAtomic(
-            MergeWriter.swapMarkerPath(path), UidCrashed)
+            TableSwap.markerPath(path), UidCrashed)
         })
       assertRecovered(path, i)
     }
@@ -94,8 +99,8 @@ class SwapRecoveryRaceSpec extends AnyFunSuite {
       val path = mkCrashedState(base, s"t$i")
       var r1 = false; var r2 = false
       race(
-        () => r1 = MergeWriter.recoverCrashedSwap(path),
-        () => r2 = MergeWriter.recoverCrashedSwap(path))
+        () => r1 = TableSwap.recoverCrashedSwap(path),
+        () => r2 = TableSwap.recoverCrashedSwap(path))
       // At least one reader restored the table. The other reports either
       // true (lost the move but observed the winner's live table) or
       // false (entered late, found the path already live / the pair
@@ -146,7 +151,7 @@ class SwapRecoveryRaceSpec extends AnyFunSuite {
     try {
       var recovered = false
       val reader = new Thread(() => recovered =
-        MergeWriter.recoverCrashedSwap(path))
+        TableSwap.recoverCrashedSwap(path))
       reader.start()
       assert(readerMoved.await(30, TimeUnit.SECONDS),
         "reader never reached its post-move-in window")
@@ -156,14 +161,14 @@ class SwapRecoveryRaceSpec extends AnyFunSuite {
       inner.atomicMove(path, s"$path.old-$UidRepub")
       inner.atomicMove(s"$path.tmp-$UidRepub", path)
       inner.deleteRecursively(s"$path.old-$UidRepub")
-      inner.writeStringAtomic(MergeWriter.swapMarkerPath(path), UidRepub)
+      inner.writeStringAtomic(TableSwap.markerPath(path), UidRepub)
       republishDone.countDown()
       reader.join(30000)
       assert(recovered, "reader's recovery should have succeeded")
       // The pinned outcome: the reader's LATE stamp detected the
       // republish (marker moved + its sentinel rotated away) and did NOT
       // regress the marker behind the live content.
-      assert(LocalTableIO.readString(MergeWriter.swapMarkerPath(path))
+      assert(LocalTableIO.readString(TableSwap.markerPath(path))
         .contains(UidRepub),
         "reader's late stamp regressed the marker behind the republish")
       assert(Files.exists(Paths.get(s"$path/part-repub.parquet")),
@@ -174,5 +179,90 @@ class SwapRecoveryRaceSpec extends AnyFunSuite {
         .forall(!_.contains("_graft_recover_")),
         "recovery sentinel leaked into the live table")
     } finally MergeWriter.io = prevIo
+  }
+
+  /** Local IO whose first move of a `<table>.tmp-*` dir onto `table` is
+    * preceded by a reader rolling that very swap forward: the window a
+    * stale-swap read (QueryServer.rollForwardCrashedSwaps) can hit between
+    * a writer's aside and its move-in. */
+  private final class StealingIO(table: String) extends TableIO {
+    private val inner = LocalTableIO
+    @volatile var stolen = false
+    def exists(p: String) = inner.exists(p)
+    def listDir(p: String) = inner.listDir(p)
+    def atomicMove(s: String, d: String) = {
+      if (!stolen && d == table && TableSwap.isTmpOf(table, s)) {
+        stolen = true
+        assert(TableSwap.recoverCrashedSwap(table),
+          "the reader found no swap to roll forward")
+      }
+      inner.atomicMove(s, d)
+    }
+    def createDirectories(p: String) = inner.createDirectories(p)
+    def deleteRecursively(p: String) = inner.deleteRecursively(p)
+    def readString(p: String) = inner.readString(p)
+    def writeStringAtomic(p: String, c: String) = inner.writeStringAtomic(p, c)
+    def fileSizes(p: String) = inner.fileSizes(p)
+    def lastModifiedMs(p: String) = inner.lastModifiedMs(p)
+  }
+
+  private def withIO[T](io: TableIO)(body: => T): T = {
+    val prev = MergeWriter.io
+    MergeWriter.io = io
+    try body finally MergeWriter.io = prev
+  }
+
+  private def residue(table: String): Seq[String] = {
+    val slash = table.lastIndexOf('/')
+    val name = table.drop(slash + 1)
+    LocalTableIO.listDir(table.take(slash)).map(_._1)
+      .filter(n => TableSwap.isTmpOf(name, n) || TableSwap.isAsideOf(name, n))
+  }
+
+  test("writer case: a reader rolling a migrate swap forward does not fail the merge") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("swaprace-migrate").toString + "/t"
+    (1 to 10).map(i => (s"k$i", f"2024-06-${i % 2 + 1}%02d", 1L, i))
+      .toDF("key", "day", "seqno", "v").write.parquet(path) // flat: migrates
+    val batch = Seq(("k1", "2024-06-02", 2L, 100), ("k11", "2024-06-01", 1L, 11))
+      .toDF("key", "day", "seqno", "v")
+    val io = new StealingIO(path)
+    val n = withIO(io)(MergeWriter.mergePartitioned(spark, batch, path,
+      Seq("key"), Seq("seqno"), "day"))
+    assert(io.stolen, "the migrate swap never moved a tmp in")
+    assert(n == 11)
+    val merged = spark.read.parquet(path)
+    assert(merged.count() == 11)
+    assert(merged.filter($"key" === "k1").head().getAs[Int]("v") == 100)
+    assert(residue(path).isEmpty, s"swap residue: ${residue(path)}")
+    assert(MergeWriter.readCountsSidecar(path).map(_._2)
+      .contains(TableSwap.markerUid(path)), "counts sidecar left invalid")
+  }
+
+  test("writer case: a reader rolling the full rebuild's account_stats swap forward does not fail the rebuild") {
+    import Fixtures._
+    val in = Files.createTempDirectory("swaprace-bronze").toString
+    val silver = Files.createTempDirectory("swaprace-silver").toString
+    val blocks = Seq(block(500, 1718000000000000000L, Seq(
+      receipt("donate.potlock.near", "donate", "{}",
+        resultJson = Some(directDonationResult(9, "whale.near",
+          "100000000000000000000000000", "0", "sea.near", 1718000000001L)),
+        receiptId = "rs1"))))
+    Files.write(Paths.get(in, "b.json"), blocks.mkString("\n").getBytes)
+    StreamIngest.backfill(spark, in, silver)
+    GoldRefresh.refreshFull(spark, silver)
+    val stats = s"$silver/account_stats"
+    def ids() = spark.read.parquet(stats).select("id").collect()
+      .map(_.getString(0)).sorted.toSeq
+    val before = ids()
+    assert(before.nonEmpty)
+
+    val io = new StealingIO(stats)
+    withIO(io)(GoldRefresh.refreshFull(spark, silver))
+    assert(io.stolen, "the rebuild never moved an account_stats tmp in")
+    assert(ids() == before)
+    assert(residue(stats).isEmpty, s"swap residue: ${residue(stats)}")
+    assert(MergeWriter.readCountsSidecar(stats).map(_._2)
+      .contains(TableSwap.markerUid(stats)), "counts sidecar left invalid")
   }
 }

@@ -209,7 +209,7 @@ class QueryServerSpec extends SparkSpec {
     // stale-while-revalidate — the request itself gets the pre-swap
     // body; ResultCacheSpec pins the convergence).
     graft.operators.MergeWriter.io.writeStringAtomic(
-      graft.operators.MergeWriter.swapMarkerPath(s"$silverDir/global_stats"),
+      graft.operators.TableSwap.markerPath(s"$silverDir/global_stats"),
       "probe-uid")
     s.handle("GET", "/api/v1/stats", Map.empty): Unit
     assert(s.cacheMisses == missesAfterCold + 1)
@@ -525,7 +525,7 @@ class QueryServerSpec extends SparkSpec {
     // its snapshot more than once. A loss behind a rotated swap marker
     // replans again, up to three attempts in total.
     val dir = tmpDir("serve-rotating")
-    val marker = graft.operators.MergeWriter.swapMarkerPath(s"$dir/accounts")
+    val marker = graft.operators.TableSwap.markerPath(s"$dir/accounts")
     def rotating(losses: Int): QueryServer = {
       val left = new java.util.concurrent.atomic.AtomicInteger(losses)
       new QueryServer(new QueryService(name => {
@@ -597,7 +597,7 @@ class QueryServerSpec extends SparkSpec {
   test("memoizedServingLoader: one build per table per swap, rebuilt on marker rotation") {
     val dir = tmpDir("serve-loader")
     val io = graft.operators.MergeWriter.io
-    val mk = graft.operators.MergeWriter.swapMarkerPath(s"$dir/donations_enriched")
+    val mk = graft.operators.TableSwap.markerPath(s"$dir/donations_enriched")
     Seq(("donor1.near", 1L)).toDF("donor", "on_chain_id")
       .write.parquet(s"$dir/donations_enriched")
     io.writeStringAtomic(mk, "u1")
@@ -614,6 +614,30 @@ class QueryServerSpec extends SparkSpec {
     val f3 = loader("donations")
     assert(!(f3 eq f1) && f3.count() == 2L)
     assert(loader("donations") eq f3, "memoized again under the new uid")
+  }
+
+  test("compaction rotates the swap marker: a memoized frame never reads compacted-away files") {
+    val dir = tmpDir("serve-compact")
+    val enriched = s"$dir/donations_enriched"
+    // One date partition in two files; compaction folds them into one.
+    val dons = tables("donations").withColumn("__pdate", lit("d2024-06-10"))
+    Seq(1L, 2L).foreach { id =>
+      dons.filter(col("on_chain_id") === id).write.mode("append")
+        .partitionBy("__pdate").parquet(enriched)
+    }
+    val memo = QueryServer.memoizedServingLoader(spark, dir)
+    val s = new QueryServer(
+      new QueryService(n => if (n == "donations") memo(n) else tables(n)),
+      dir, cache = new ResultCache(ttlMs = 0L))
+    val route = "/api/v1/accounts/proj1.near/donations_received"
+    assert(s.handle("GET", route, Map.empty).status == 200)
+    val r = graft.operators.Maintenance.compact(spark, enriched,
+      targetFiles = Some(1))
+    assert(r.rewritten == 1, r.toString)
+    val again = s.handle("GET", route, Map.empty)
+    assert(again.status == 200 && again.body.startsWith("""{"count": 2"""),
+      again.body)
+    assert(s.staleRetries == 0)
   }
 
   test("countOverride prices the envelope without a live count job") {
@@ -788,7 +812,7 @@ class QueryServerSpec extends SparkSpec {
         .write.mode("overwrite").parquet(tmp)
       tmp
     }
-    val marker = graft.operators.MergeWriter.swapMarkerPath(table)
+    val marker = graft.operators.TableSwap.markerPath(table)
     io.atomicMove(writeTmp(0, "u0"), table)
     io.writeStringAtomic(marker, "u0")
 
@@ -822,7 +846,7 @@ class QueryServerSpec extends SparkSpec {
       val old = s"$table.old-$uid"
       io.atomicMove(table, old)
       if (killAfterStep >= 2)
-        graft.operators.MergeWriter.moveInTolerant(tmp, table)
+        graft.operators.TableSwap.moveInTolerant(tmp, table)
       if (killAfterStep >= 3) io.deleteRecursively(old)
       // ---- the crashed state serves
       var seenNew = false
@@ -841,7 +865,7 @@ class QueryServerSpec extends SparkSpec {
       val tmp2 = writeTmp(v, uid2)
       val old2 = s"$table.old-$uid2"
       if (io.exists(table)) io.atomicMove(table, old2)
-      graft.operators.MergeWriter.moveInTolerant(tmp2, table)
+      graft.operators.TableSwap.moveInTolerant(tmp2, table)
       io.deleteRecursively(old2)
       io.writeStringAtomic(marker, uid2)
       assert(served() == ((200, v)),
@@ -872,9 +896,9 @@ class QueryServerSpec extends SparkSpec {
     Seq(("a.near", 1L)).toDF("id", "v").write.parquet(s"$dir/t_alpha")
     Seq(("b.near", 2L)).toDF("id", "v").write.parquet(s"$dir/t_beta")
     io.writeStringAtomic(
-      graft.operators.MergeWriter.swapMarkerPath(s"$dir/t_alpha"), "ua")
+      graft.operators.TableSwap.markerPath(s"$dir/t_alpha"), "ua")
     io.writeStringAtomic(
-      graft.operators.MergeWriter.swapMarkerPath(s"$dir/t_beta"), "ub")
+      graft.operators.TableSwap.markerPath(s"$dir/t_beta"), "ub")
     val loader = QueryServer.memoizedServingLoader(spark, dir)
     val fAlpha = loader("t_alpha")
     val fBeta = loader("t_beta")

@@ -93,7 +93,7 @@ class ResultCacheSpec extends AnyFunSuite {
     val before = ResultCache.uidsFor(dir)(Seq("donations", "accounts"))
     assert(before == Seq("", ""))
     graft.operators.MergeWriter.io.writeStringAtomic(
-      graft.operators.MergeWriter.swapMarkerPath(s"$dir/donations"), "abc123")
+      graft.operators.TableSwap.markerPath(s"$dir/donations"), "abc123")
     val after = ResultCache.uidsFor(dir)(Seq("donations", "accounts"))
     assert(after == Seq("abc123", ""))
   }
