@@ -38,16 +38,9 @@ object HarnessSession {
       // clustered layouts rely on that for time-slice scans, and the
       // DuckDB oracle reads Verify's dumps as identical µs values
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // MergeWriter's row/bucket counts ride the WRITE job as observed
-      // metrics (CollectMetrics accumulators). Accumulators drop FAILED
-      // attempts' updates (countFailedValues=false) — retry-safe, and
-      // RetryReplaySpec pins it — but a SPECULATIVE duplicate that also
-      // SUCCEEDS can double-apply its updates. Local mode never
-      // speculates; pin it false anyway so the session config documents
-      // the cluster requirement in the one shared builder. A cluster
-      // deployment that needs speculation must reconcile the counts
-      // sidecar against a recount instead (readCountsSidecar's heal path
-      // already does exactly that when the uids disagree).
+      // Local mode never speculates; pinned off so the one shared
+      // builder says so. A speculative copy would be count-safe: merge
+      // counts read the committed files, one attempt per task.
       .config("spark.speculation", "false")
       // Per-file open cost for scan-split packing. The 4 MB default
       // prices every parquet file as 4 MB of fake bytes when packing
@@ -87,9 +80,6 @@ object HarnessSession {
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
-    require(!spark.sparkContext.getConf.getBoolean("spark.speculation",
-      defaultValue = false),
-      "speculative execution would double-count observed merge metrics")
     spark
   }
 }

@@ -34,7 +34,7 @@ import graft.operators.{BucketedLayout, MergeWriter, TableSwap}
   */
 final class GoldCounts(spark: SparkSession, silverDir: String) {
   private def io = MergeWriter.io
-  private val buckets = SilverStore.bucketSpec("accounts")._2
+  private val buckets = SilverStore.accountsLayout.n
 
   private def uidOf(path: String): String = TableSwap.markerUid(path)
 

@@ -249,8 +249,7 @@ object GoldRefresh {
   private def applyStates(spark: SparkSession, silverDir: String, gen: Long,
       staging: String): Map[String, MergeWriter.AdditiveMergeStats] = {
     val sd = stateDir(silverDir)
-    val (bcol, buckets) = SilverStore.bucketSpec("accounts")
-    require(bcol == "id") // states co-bucket with the accounts dimension
+    val buckets = SilverStore.accountsLayout.n // states co-bucket with accounts
     def one(name: String, keys: Seq[String], addCols: Seq[String],
         bucketCol: String, distinctCol: String): (String, MergeWriter.AdditiveMergeStats) = {
       val table = s"$sd/$name"
@@ -368,7 +367,7 @@ object GoldRefresh {
   private def accountRowsFor(spark: SparkSession, silverDir: String,
       ids: DataFrame, gen: Long): DataFrame = {
     val sd = stateDir(silverDir)
-    val (_, buckets) = SilverStore.bucketSpec("accounts")
+    val buckets = SilverStore.accountsLayout.n
     val recv = stateSlice(spark, s"$sd/recv_pairs", "recipient", ids, buckets,
       recvSchema)
       .groupBy(col("recipient").as("id"))
@@ -396,8 +395,8 @@ object GoldRefresh {
   private def pricesSeenPath(silverDir: String) =
     s"${stateDir(silverDir)}/prices_seen"
 
-  /** Swap a fully-built bucketed table (dir + counts/marker sidecars +
-    * dirty journal), built as a table of its own at
+  /** Swap a fully-built bucketed table (dir + counts/marker sidecars),
+    * built as a table of its own at
     * `TableSwap.tmpPath(path, uid)`, in whole. The dir swap is the
     * visibility flip; the sidecar moves follow (readers validate the
     * counts sidecar's uid against the marker, so a torn sidecar window
@@ -409,10 +408,13 @@ object GoldRefresh {
       if (io.exists(side(path))) io.deleteRecursively(side(path))
       if (io.exists(side(tmpBase))) io.atomicMove(side(tmpBase), side(path))
     }
-    MergeWriter.clearDirty(path)
-    if (io.exists(MergeWriter.dirtyDir(tmpBase)))
-      io.atomicMove(MergeWriter.dirtyDir(tmpBase), MergeWriter.dirtyDir(path))
   }
+  /** account_stats rows LWW-merged by generation, bucketed like accounts. */
+  private def mergeAccountStats(spark: SparkSession, rows: DataFrame,
+      path: String): Unit =
+    MergeWriter.upsert(spark, rows, path, Seq("id"), SilverStore.accountsLayout,
+      MergeWriter.Combine.Lww(Seq("__gen"), backfillNulls = false)): Unit
+
   private def paidState(spark: SparkSession, silverDir: String): DataFrame = {
     val p = paidStatePath(silverDir)
     if (io.exists(p)) spark.read.parquet(p)
@@ -514,8 +516,7 @@ object GoldRefresh {
       .foreach { n =>
         val p = s"$sd/$n"
         Seq(p, s"$p.goldgen", MergeWriter.sidecarPath(p),
-          TableSwap.markerPath(p), MergeWriter.dirtyPath(p),
-          MergeWriter.dirtyDir(p))
+          TableSwap.markerPath(p), MergeWriter.dirtyDir(p))
           .foreach(f => if (io.exists(f)) io.deleteRecursively(f))
       }
     // Stranded incremental artifacts (apply manifests, tmp/aside dirs,
@@ -530,7 +531,7 @@ object GoldRefresh {
       if (io.exists(s"$silverDir/$n.goldgen"))
         io.deleteRecursively(s"$silverDir/$n.goldgen") }
     io.createDirectories(sd)
-    val (_, buckets) = SilverStore.bucketSpec("accounts")
+    val buckets = SilverStore.accountsLayout.n
     // The five state legs are INDEPENDENT (disjoint state dirs, disjoint
     // aggregations of the same on-disk enriched table) — run them
     // concurrently so the rebuild pays the slowest leg, not the sum,
@@ -588,11 +589,8 @@ object GoldRefresh {
         TableSwap.isAsideOf("account_stats", n) => n
     }.foreach(n => io.deleteRecursively(s"$silverDir/$n"))
     val allRows = accountRowsFor(spark, silverDir, accounts.select("id"), gen)
-    val (statKey, statBuckets) = SilverStore.bucketSpec("accounts")
     val statsUid = TableSwap.newUid()
-    MergeWriter.mergeBucketed(spark, allRows,
-      TableSwap.tmpPath(statsPath, statsUid), Seq("id"), Seq("__gen"),
-      statKey, statBuckets, coalesceUpdates = false): Unit
+    mergeAccountStats(spark, allRows, TableSwap.tmpPath(statsPath, statsUid))
     swapTableWithSidecars(statsPath, statsUid)
     write(potStatsFromState(spark, silverDir), s"$silverDir/pot_stats")
 
@@ -772,7 +770,7 @@ object GoldRefresh {
               date_add(col("d"), 1))).as("d"))
             .distinct().collect()
             // SilverStore's donation layout prefixes the date with "d"
-            // (partitionSpec) — partition names are `__pdate=dyyyy-MM-dd`.
+            // (SilverStore.layouts) — partition names are `__pdate=dyyyy-MM-dd`.
             .map(r => s"__pdate=d${r.getDate(0)}").toSet
           val existingParts = io.listDir(enrichedPath).collect {
             case (n, true) if n.startsWith("__pdate=") => n }.toSet
@@ -881,7 +879,6 @@ object GoldRefresh {
       if (stagedPayoutsChanged)
         spark.read.parquet(s"$staging/paid_affected").select("id")
       else recvIds.limit(0)
-    val (statKey, statBuckets) = SilverStore.bucketSpec("accounts")
     val newAccountIds: DataFrame =
       if (stagedDirtyAccts.nonEmpty) {
         val acctSchema = spark.read.parquet(paths("accounts")).schema
@@ -920,8 +917,7 @@ object GoldRefresh {
     def accountStatsLeg(): Unit = if (!readGen(statsPath).exists(_._1 == gen)) {
       if (nAffected > 0L) {
         val rows = accountRowsFor(spark, silverDir, affected, gen)
-        MergeWriter.mergeBucketed(spark, rows, statsPath, Seq("id"),
-          Seq("__gen"), statKey, statBuckets, coalesceUpdates = false): Unit
+        mergeAccountStats(spark, rows, statsPath)
       }
       writeGen(statsPath, gen, MergeWriter.AdditiveMergeStats(0, 0, 0, 0))
     }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.MergeWriter
+import graft.operators.MergeWriter.{Combine, Layout}
 
 /** The silver entity store: applies one (micro-)batch of block messages to
   * the entity tables via the LWW merge writer. This is the single body
@@ -40,89 +41,73 @@ object SilverStore {
     "pot_application_reviews", "pot_payout_challenge_admin_responses",
     "nadabot_stamps", "list_upvotes", "quarantine")
 
-  /** Partitioned physical layout for the unbounded tables — the 100 TB
-    * path: a partition-scoped merge rewrites only partitions the batch
-    * touches, so per-batch cost tracks batch size, not table history. The
-    * partition value MUST be an immutable pure function of the natural
-    * key's row (MergeWriter.mergePartitioned's contract):
-    *  - donations: the donation date. donated_at is chain state carried in
-    *    every payload variant (stream and snapshot read the same contract
-    *    value), so all versions of one key compute the same partition; a
-    *    payload missing it entirely lands in the shared "dunknown"
-    *    partition on every source. The "d" prefix stops Spark
-    *    partition-type inference from reading the value back as DATE
-    *    (which would clash with the incoming string column on the next
-    *    merge).
-    *  - activities: a 32-bucket key hash, NOT a date — the reference's
-    *    aupdate_or_create rewrites `timestamp` on re-keyed activities, so
-    *    a date layout could strand a key's older version in a partition
-    *    the scoped dedup never reads. A batch touching k keys rewrites
-    *    min(k, 32) buckets.
+  /** Physical layout per table; a table not listed is flat. One map, read
+    * by both the merge ([[mergeEntity]]) and the reader ([[SilverStore.table]]).
+    *  - donations: partitioned by donation date, so a batch rewrites only
+    *    the dates it touches, and donor-bucketed inside each partition, so
+    *    the scan reports the donor HashPartitioning and the donors J2
+    *    semi-join / per-donor rollups run with zero exchange on the
+    *    donations side. `donor` is immutable per natural key (chain
+    *    state); the bucket count matches `accounts`' so the two sides
+    *    co-partition.
+    *  - activities: a 32-bucket key hash partition, NOT a date — the
+    *    reference's aupdate_or_create rewrites `timestamp` on re-keyed
+    *    activities, so a date layout could strand a key's older version
+    *    in a partition the scoped dedup never reads. A batch touching k
+    *    keys rewrites min(k, 32) partitions.
+    *  - accounts: bucketed on `id` — THE dimension every query-plane join
+    *    touches (donor/recipient/chef/referrer embeds, the donors J2
+    *    semi-join, the accounts⋈account_stats stats join), and the gold
+    *    refresh writes `account_stats` bucketed the same way, so those
+    *    joins plan with zero exchange on either side (BucketedLayout's
+    *    q_j11 contract; reference analogue: the accounts PK index behind
+    *    accounts/api.py:310's prefetch). Bucket counts are small at test
+    *    scale; production picks ≈ table-bytes / 1 GB once at layout time.
     */
-  val partitionSpec: Map[String, (String, org.apache.spark.sql.Column)] = Map(
-    "donations" -> ("__pdate",
-      concat(lit("d"), coalesce(date_format(col("donated_at"), "yyyy-MM-dd"),
-        lit("unknown")))),
-    "activities" -> ("__pbucket",
-      concat(lit("b"),
-        pmod(xxhash64(col("type"), col("action_result")), lit(32)).cast("string"))))
+  val accountsLayout: Layout.Bucketed = Layout.Bucketed("id", 16)
+  val layouts: Map[String, Layout] = Map(
+    "donations" -> Layout.Partitioned("__pdate", Some(("donor", accountsLayout.n))),
+    "activities" -> Layout.Partitioned("__pbucket"),
+    "accounts" -> accountsLayout)
 
-  /** Tables kept in BUCKETED layout at rest (column, bucket count) — the
-    * join-side storage discipline: `accounts` is THE dimension every
-    * query-plane join touches (donor/recipient/chef/referrer embeds, the
-    * donors J2 semi-join, the accounts⋈account_stats stats join), and
-    * the gold refresh writes `account_stats` bucketed with the SAME spec,
-    * so those joins plan with zero exchange on either side
-    * (BucketedLayout's q_j11 contract applied to the silver store;
-    * reference analogue: the accounts PK index behind
-    * accounts/api.py:310's prefetch). The bucket column must be immutable
-    * per natural key — `id` IS the key. `donations` stays DATE-partitioned
-    * instead: its merge cost story (a batch rewrites only the partitions
-    * it touches) outweighs one saved exchange, and its account joins
-    * broadcast the bucketed dimension anyway. Bucket count is small at
-    * test scale; production picks ≈ table-bytes / 1 GB once at layout
-    * time. */
-  val bucketSpec: Map[String, (String, Int)] = Map(
-    "accounts" -> ("id", 16))
+  /** Tables whose merges append the slices they touch to the dirty
+    * journal: the gold refresh's only incremental inputs. No other table
+    * has a journal consumer. */
+  val journaled: Set[String] = Set("donations", "accounts")
 
-  /** Bucket layout WITHIN the partition-scoped tables (column, count) —
-    * the two disciplines compose: `donations` keeps its date-partitioned
-    * merge scoping (a batch rewrites only the dates it touches) AND each
-    * partition's files are donor-bucketed, so the scan reports the donor
-    * HashPartitioning and the donors J2 semi-join / per-donor rollups
-    * run with zero exchange on the donations side too. `donor` is
-    * immutable per natural key (chain state), the bucket-column contract.
-    * Bucket count matches `accounts`' so the two sides co-partition. */
-  val partitionBucketSpec: Map[String, (String, Int)] = Map(
-    "donations" -> ("donor", 16))
+  /** How each partitioned table derives its partition column from the
+    * row, keyed by that column. The value MUST be an immutable pure
+    * function of the natural key's row. donated_at is chain state carried
+    * in every payload variant (stream and snapshot read the same contract
+    * value); a payload missing it lands in the shared "dunknown"
+    * partition on every source. The "d"/"b" prefixes stop Spark
+    * partition-type inference from reading the value back as DATE or INT
+    * (which would clash with the incoming string column on the next
+    * merge). */
+  private val partitionValue: Map[String, org.apache.spark.sql.Column] = Map(
+    "__pdate" -> concat(lit("d"),
+      coalesce(date_format(col("donated_at"), "yyyy-MM-dd"), lit("unknown"))),
+    "__pbucket" -> concat(lit("b"),
+      pmod(xxhash64(col("type"), col("action_result")), lit(32)).cast("string")))
+
+  /** The synthetic partition column of a partitioned table — physical
+    * layout detail that readers must never see. */
+  def layoutColumn(name: String): Option[String] = layouts.get(name).collect {
+    case Layout.Partitioned(pcol, _) => pcol
+  }
 
   /** Single merge dispatch shared by the streaming path and
-    * SnapshotBackfill: unbounded tables go through the partition-scoped
-    * writer, everything else through the full-table LWW merge. Using one
-    * dispatch for both write paths keeps a snapshot backfill from
-    * rewriting a partitioned table into a flat layout. */
+    * SnapshotBackfill, so a snapshot backfill can never rewrite a
+    * partitioned table into a flat layout, nor arbitrate a table
+    * differently from the stream. */
   def mergeEntity(spark: SparkSession, dir: String, name: String,
-      df: DataFrame, keys: Seq[String], seqCols: Seq[String]): Long =
-    if (keepFirstTables(name))
-      MergeWriter.insertIgnoreConflicts(spark, df, s"$dir/$name", keys, seqCols)
-    else partitionSpec.get(name) match {
-      case Some((pcol, pexpr)) =>
-        val withP = df.withColumn(pcol, pexpr)
-        // Empty-first-batch bootstrap (a readable schema-only flat table)
-        // is handled INSIDE mergePartitioned off its already-collected,
-        // column-pruned partition list — a separate isEmpty probe here
-        // ran the full incoming plan one extra time per merge (r16,
-        // guide §1: one Spark job per batch saved on the live-tail path).
-        MergeWriter.mergePartitioned(spark, withP, s"$dir/$name", keys,
-          seqCols, pcol, bucket = partitionBucketSpec.get(name))
-      case None => bucketSpec.get(name) match {
-        case Some((bcol, n)) =>
-          MergeWriter.mergeBucketed(spark, df, s"$dir/$name", keys, seqCols,
-            bcol, n)
-        case None =>
-          MergeWriter.merge(spark, df, s"$dir/$name", keys, seqCols)
-      }
-    }
+      df: DataFrame, keys: Seq[String], seqCols: Seq[String]): Long = {
+    val layout = layouts.getOrElse(name, Layout.Flat)
+    val rows = layoutColumn(name).fold(df)(c => df.withColumn(c, partitionValue(c)))
+    MergeWriter.upsert(spark, rows, s"$dir/$name", keys, layout,
+      if (keepFirstTables(name)) Combine.KeepFirst(seqCols) else Combine.Lww(seqCols),
+      journal = journaled(name))
+  }
 
   // Registration freshness: catalogName → the swap-marker uid it was
   // registered against. Each merge path stamps a new uid after its swap
@@ -177,16 +162,15 @@ final class SilverStore(spark: SparkSession, dir: String) {
     // each other's files.
     def catalogName = s"graft_silver_${name}_" +
       Integer.toHexString(dir.hashCode).replace('-', 'n')
-    (SilverStore.bucketSpec.get(name), SilverStore.partitionSpec.get(name),
-      SilverStore.partitionBucketSpec.get(name)) match {
-      case (Some((bcol, n)), _, _)
+    SilverStore.layouts.get(name) match {
+      case Some(Layout.Bucketed(bcol, n))
           if graft.operators.BucketedLayout.looksBucketed(p) =>
         SilverStore.registerCached(spark, catalogName, p) {
           graft.operators.BucketedLayout.registerExternal(
             spark, catalogName, p, spark.read.parquet(p).schema, bcol, n)
         }
         spark.table(catalogName)
-      case (_, Some((pcol, _)), Some((bcol, n)))
+      case Some(Layout.Partitioned(pcol, Some((bcol, n))))
           if MergeWriter.bucketedPartitionLayout(p) =>
         // Partitioned AND bucketed: register with both specs so the scan
         // reports the bucket HashPartitioning; partitions are recovered
@@ -199,10 +183,8 @@ final class SilverStore(spark: SparkSession, dir: String) {
         spark.table(catalogName).drop(pcol)
       case _ =>
         val df = spark.read.parquet(p)
-        SilverStore.partitionSpec.get(name) match {
-          case Some((pcol, _)) if df.columns.contains(pcol) => df.drop(pcol)
-          case _ => df
-        }
+        SilverStore.layoutColumn(name).filter(df.columns.contains)
+          .fold(df)(df.drop)
     }
   }
   def exists(name: String): Boolean =

@@ -119,10 +119,8 @@ final class QueryService(t0: String => DataFrame) {
     * serializes whole rows). */
   private val t: String => DataFrame = name => {
     val df = t0(name)
-    graft.ingest.SilverStore.partitionSpec.get(name) match {
-      case Some((pcol, _)) if df.columns.contains(pcol) => df.drop(pcol)
-      case _ => df
-    }
+    graft.ingest.SilverStore.layoutColumn(name).filter(df.columns.contains)
+      .fold(df)(df.drop)
   }
 
   private def paginate(df: DataFrame, order: Seq[Column], page: Int, pageSize: Int): Page =

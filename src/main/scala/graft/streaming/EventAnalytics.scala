@@ -168,9 +168,9 @@ object EventAnalytics {
     * State per event type is O(1): the open-hour accumulator map is
     * bounded by the lateness horizon (watermark closes anything older)
     * and the ring is capped at `ringSize` — total state scales with
-    * DISTINCT EVENT TYPES, not events. Rows arriving for an
-    * already-closed hour (later than the watermark allowed) are
-    * dropped, the same late-data contract as the windowed aggregates.
+    * DISTINCT EVENT TYPES, not events. Rows behind the late-events
+    * watermark are dropped by Spark before they reach the state
+    * machine — the same late-data contract as the windowed aggregates.
     * Closure happens on data batches AND on event-time timeouts, so a
     * type that goes quiet still closes its last open hours. */
   def streamHourlyAnomaly(events: Dataset[ValEvent],
@@ -207,13 +207,15 @@ object EventAnalytics {
     val newestClosed = st.ring.headOption.map(_._1).getOrElse(Long.MinValue)
     rows.foreach { e =>
       val h = Math.floorDiv(e.ts.getTime, HOUR) * HOUR
-      // Two late-data gates (Spark does NOT pre-filter rows below the
-      // watermark for flatMapGroupsWithState): an hour this key already
-      // closed, AND an hour whose end the watermark has already passed —
-      // without the second, a row arriving far beyond the lateness
-      // horizon for an hour that never had on-time data would open it
-      // retroactively and emit a spurious partial-hour total.
-      if (h > newestClosed && h + HOUR > wm) {
+      // Late rows never get here: under EventTimeTimeout Spark drops
+      // input rows below the late-events watermark (the previous batch's),
+      // the same filter the windowed aggregates apply. `wm` is the
+      // eviction watermark, one batch ahead of that filter, so gating on
+      // it would drop rows the windowed aggregates keep; a row for an
+      // hour no key closed yet accumulates and closes below, in this
+      // step, as a windowed aggregate evicts its window. The closed-hour
+      // gate keeps the ring ascending whatever the caller passes.
+      if (h > newestClosed) {
         // Per-event cents exactly as the batch twin's cast: Spark's
         // double→DECIMAL(18,2) goes through BigDecimal.valueOf (the
         // canonical decimal string) then HALF_UP — Math.round would

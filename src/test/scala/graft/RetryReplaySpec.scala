@@ -196,10 +196,10 @@ class RetryReplaySpec extends SparkSpec {
         Seq("k"), Seq("seq"), "k", 8)
       (n1, n2)
     }
-    // The returned n AND the counts sidecar are observed metrics riding
-    // the write job's accumulators: assert BOTH against a post-merge
-    // recount of the table on disk, under injected write-job failures —
-    // a dropped-or-doubled failed attempt's updates would disagree here.
+    // The returned n AND the counts sidecar are read off the committed
+    // files' footers: assert BOTH against a post-merge recount of the
+    // table on disk, under injected write-job failures — a failed
+    // attempt's files counted, or a retry's lost, would disagree here.
     def assertCountsExact(path: String, returned: Long): Unit = {
       val actual = spark.read.parquet(path).count()
       assert(returned == actual,
@@ -223,11 +223,10 @@ class RetryReplaySpec extends SparkSpec {
     assert((f1, f2) == (p1, p2),
       "returned counts changed under task retry")
     assertCountsExact(s"$dir/flaky", f2)
-    // Second round: failures injected into the WRITE job's own
-    // accumulator-bearing stage (post-dedup, mid-row-stream) via the
-    // pre-write seam — a failed attempt has already pushed PARTIAL
-    // CollectMetrics updates when it dies; those must be dropped
-    // wholesale and the retry's counts land exactly once.
+    // Second round: failures injected into the WRITE job's own stage
+    // (post-dedup, mid-row-stream) via the pre-write seam — a failed
+    // attempt has already written PART of its file when it dies; that
+    // file must never count and the retry's rows land exactly once.
     val dirW = tmpDir("retry-bmerge-wstage")
     injected.removeIf(_.startsWith("bmergew/"))
     MergeWriter.preWriteWrap = (p, df) =>
@@ -265,14 +264,13 @@ class RetryReplaySpec extends SparkSpec {
     val flaky = rows(spark.read.parquet(pathFlaky))
     assert(flaky == plain,
       "merged table changed when the incoming batch's tasks were retried")
-    // Observation-fused count contract: the returned n is an accumulator
-    // riding the write job — it must equal a recount of what landed.
+    // The returned n is read off the committed files' footers — it must
+    // equal a recount of what landed.
     assert((f1, f2) == (p1, p2), "returned counts changed under task retry")
     assert(f2 == spark.read.parquet(pathFlaky).count(),
       s"returned n=$f2 disagrees with the merged table's actual rows")
-    // And under failures in the WRITE stage itself (same stage as the
-    // CollectMetrics accumulator and the file-commit protocol), dying
-    // MID-STREAM after partial accumulator updates:
+    // And under failures in the WRITE stage itself (the stage that runs
+    // the file-commit protocol), dying MID-STREAM after a partial file:
     val pathW = s"$dir/wstage"
     injected.removeIf(_.startsWith("mergew/"))
     MergeWriter.preWriteWrap = (p, df) =>

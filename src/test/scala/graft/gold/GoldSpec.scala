@@ -224,6 +224,27 @@ class GoldSpec extends SparkSpec {
     assertGoldEqual(live, oracle)
   }
 
+  test("only the gold beat's inputs keep a dirty journal") {
+    val live = tmpDir("journal-live")
+    ingest(batch1, live, "j1")
+    writePrices(live, prices1)
+    GoldRefresh.refresh(spark, live) // bootstrap → full
+    ingest(batch2, live, "j2")
+    // Between beats the journaled inputs carry the batch's slices.
+    val io = graft.operators.MergeWriter.io
+    val donationsJournal = graft.operators.MergeWriter.dirtyDir(s"$live/donations")
+    assert(graft.operators.MergeWriter.readDirty(s"$live/donations").nonEmpty)
+    val r = GoldRefresh.refreshIncremental(spark, live)
+    assert(r.mode == "incremental", s"expected incremental, got $r")
+    // The beat consumed them…
+    assert(!io.exists(donationsJournal) || io.listDir(donationsJournal).isEmpty)
+    // …and no other table ever grew one: nothing reads theirs.
+    assert(io.exists(s"$live/activities") && io.exists(s"$live/account_stats"))
+    for (t <- Seq("activities", "account_stats", "gold_state/recv_pairs",
+        "gold_state/donor_state", "gold_state/pot_state"))
+      assert(!io.exists(s"$live/$t.dirty.d"), s"$t has a dirty journal")
+  }
+
   /** IO delegate that throws once when a mutation matches the armed
     * predicate — simulates a crash at an exact protocol step; reads are
     * never interrupted (a crash can't corrupt a read). */

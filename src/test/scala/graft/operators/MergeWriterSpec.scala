@@ -1,7 +1,11 @@
 package graft.operators
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -361,5 +365,97 @@ class MergeWriterSpec extends SparkSpec {
     assert(after.contains("p=65"))
     assert((1 to 64).map(i => s"p=$i").toSet.subsetOf(after),
       s"compacted names lost: ${after.size}")
+  }
+
+  /** (jobs, SQL actions) that `body` starts on this thread. Listener
+    * events arrive asynchronously, so a marker job runs after `body` and
+    * the tally is read once the listener has seen it. AQE submits each
+    * shuffle map stage as a job of its own, so one action can count as
+    * several jobs; the actions are the distinct SQL execution ids. */
+  private def jobsOf(body: => Unit): (Int, Int) = {
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        seen.add((prop("spark.jobGroup.id"), prop("spark.sql.execution.id")))
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("merge-probe", "merge under test")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("merge-marker", "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.asScala.exists(_._1 == "merge-marker") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.asScala.exists(_._1 == "merge-marker"),
+        "listener never saw the marker job")
+      val probe = seen.asScala.toSeq.filter(_._1 == "merge-probe")
+      (probe.size, probe.map(_._2).distinct.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("jobs per merge: no kind runs more jobs than before the merge core, no LWW count job") {
+    val rows = (1 to 40).map(i => (s"k$i", f"2024-06-${i % 3 + 1}%02d", 1L, s"v$i"))
+    val seed = rows.toDF("key", "day", "seqno", "v")
+    val batch = Seq(("k5", "2024-06-03", 2L, "v5b"), ("k900", "2024-06-01", 1L, "new"))
+      .toDF("key", "day", "seqno", "v")
+    val keys = Seq("key")
+    val seq = Seq("seqno")
+    def keepFirst(df: org.apache.spark.sql.DataFrame, path: String): Long =
+      MergeWriter.upsert(spark, df, path, keys, MergeWriter.Layout.Flat,
+        MergeWriter.Combine.KeepFirst(seq))
+    def delta(n: Long) = Seq(("k5", n), ("k901", n)).toDF("key", "n")
+    val dir = tmpDir("jobs")
+    // Seed every table (untimed): each measured merge is a steady-state
+    // one into an existing table of its layout.
+    MergeWriter.merge(spark, seed, s"$dir/flat", keys, seq)
+    keepFirst(seed, s"$dir/first")
+    MergeWriter.merge(spark, seed, s"$dir/repl", keys, seq)
+    MergeWriter.mergeBucketed(spark, seed, s"$dir/bucketed", keys, seq, "key", 4)
+    MergeWriter.mergePartitioned(spark, seed, s"$dir/part", keys, seq, "day")
+    MergeWriter.mergePartitioned(spark, seed, s"$dir/partb", keys, seq, "day",
+      bucket = Some(("key", 4)))
+    MergeWriter.mergeAdditiveBucketed(spark, delta(1L), s"$dir/add", keys,
+      Seq("n"), "n", "key", 4, "key")
+
+    // kind -> ((jobs, actions), jobs per merge when each kind had a body
+    // of its own, SQL actions an LWW kind may run). An LWW merge runs the
+    // table's schema read, the touched-slice query when it is scoped, and
+    // its write — never a count of its own.
+    val measured = Seq(
+      ("flat-lww", jobsOf(MergeWriter.merge(spark, batch, s"$dir/flat", keys, seq): Unit),
+        3, Some(2)),
+      ("keep-first", jobsOf(keepFirst(batch, s"$dir/first"): Unit), 5, None),
+      ("replace-rows", jobsOf(MergeWriter.replaceRows(spark, batch,
+        s"$dir/repl", keys): Unit), 7, None),
+      ("bucketed-scoped", jobsOf(MergeWriter.mergeBucketed(spark, batch,
+        s"$dir/bucketed", keys, seq, "key", 4): Unit), 9, Some(3)),
+      ("partitioned-scoped", jobsOf(MergeWriter.mergePartitioned(spark, batch,
+        s"$dir/part", keys, seq, "day"): Unit), 8, Some(3)),
+      ("partitioned-bucketed-scoped", jobsOf(MergeWriter.mergePartitioned(spark,
+        batch, s"$dir/partb", keys, seq, "day", bucket = Some(("key", 4))): Unit),
+        9, Some(3)),
+      ("additive-scoped", jobsOf(MergeWriter.mergeAdditiveBucketed(spark,
+        delta(2L), s"$dir/add", keys, Seq("n"), "n", "key", 4, "key"): Unit),
+        15, None))
+    val report = measured.map { case (k, (j, a), _, _) => s"$k=$j/$a" }.mkString(" ")
+    info(s"jobs/actions per merge: $report")
+    measured.foreach { case (kind, (jobs, actions), before, lwwActions) =>
+      assert(jobs <= before, s"$kind: $jobs jobs, $before before ($report)")
+      lwwActions.foreach(max => assert(actions <= max,
+        s"$kind: $actions SQL actions, at most $max ($report)"))
+    }
+    // The steady-state merges landed: each table holds the batch.
+    assert(spark.read.parquet(s"$dir/flat").count() == 41)
+    assert(spark.read.parquet(s"$dir/first").filter(col("key") === "k5")
+      .head().getAs[String]("v") == "v5")
+    assert(spark.read.parquet(s"$dir/part").filter(col("key") === "k5")
+      .head().getAs[String]("v") == "v5b")
+    assert(spark.read.parquet(s"$dir/add").filter(col("key") === "k5")
+      .head().getAs[Long]("n") == 3L)
   }
 }

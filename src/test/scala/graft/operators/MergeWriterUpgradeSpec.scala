@@ -12,9 +12,9 @@ import graft.SparkSpec
   * a one-time full rewrite — never a slice-scoped write that leaves
   * mixed physical types across a table's files — and legacy rows missing
   * a later-added key column get a one-time literal backfill. Plus the
-  * crash-resume residue fixes: replayed additive commits must not stack
-  * duplicate dirty-journal entries, and staging dirs stranded by a crash
-  * before the manifest write are swept by the next stage. */
+  * crash-resume fixes: a replayed additive commit folds its delta once,
+  * and staging dirs stranded by a crash before the manifest write are
+  * swept by the next stage. */
 class MergeWriterUpgradeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -97,7 +97,7 @@ class MergeWriterUpgradeSpec extends SparkSpec {
     assert(MergeWriter.io.readString(TableSwap.markerPath(path)) == marker)
   }
 
-  test("replayed additive commit keeps ONE dirty entry; stranded staging dirs are swept") {
+  test("replayed additive commit folds once; stranded tmp is swept") {
     val path = tmpDir("addres") + "/state"
     def delta(r: String, n: Long) = Seq((r, n, new java.math.BigDecimal(n)))
       .toDF("recipient", "n", "usd")
@@ -107,28 +107,15 @@ class MergeWriterUpgradeSpec extends SparkSpec {
     MergeWriter.mergeAdditiveBucketed(spark, delta("r1", 1L), path,
       Seq("recipient"), Seq("n", "usd"), "n", "recipient", 4, "recipient")
 
-    def dirtyEntries(): Seq[String] = {
-      val dd = Paths.get(path + ".dirty.d")
-      if (!Files.exists(dd)) Seq.empty
-      else Files.list(dd).toArray.map(
-        _.asInstanceOf[java.nio.file.Path].getFileName.toString).sorted.toSeq
-    }
-    val before = dirtyEntries()
-
     // Two-phase apply WITHOUT clearing the manifest (a consumer that
-    // crashed before its fence), then replay: rows must not double-fold
-    // and the journal must hold ONE entry for this apply, not one per
-    // resume.
+    // crashed before its fence), then replay: rows must not double-fold.
     val st1 = MergeWriter.applyAdditiveBucketed(spark, delta("r1", 2L), path,
       Seq("recipient"), Seq("n", "usd"), "n", "recipient", 4, "recipient",
       token = "genT")
-    val afterFirst = dirtyEntries()
-    assert((afterFirst.toSet -- before.toSet).size == 1)
     val st2 = MergeWriter.applyAdditiveBucketed(spark, delta("r1", 2L), path,
       Seq("recipient"), Seq("n", "usd"), "n", "recipient", 4, "recipient",
       token = "genT")
     assert(st1 == st2) // replay commits the SAME staged post-state
-    assert(dirtyEntries() == afterFirst) // no duplicate entry per resume
     assert(spark.read.parquet(path).filter(col("recipient") === "r1")
       .head().getAs[Long]("n") == 3L) // 1 + 2, folded exactly once
     MergeWriter.clearApplyManifest(path, "genT")

@@ -266,23 +266,26 @@ class EventAnalyticsSpec extends SparkSpec {
     assert(out1.map(s => (s.hour.getTime, s.x)) == Seq((H0, 800L)))
     assert(st1.ring == List((H0, 800L)) && st1.open.isEmpty)
     // Step 2: a replay for the closed h0 arrives late — dropped by the
-    // closed-hour gate. An h2 row whose hour-end the watermark ALREADY
-    // passed (h2+1h ≤ wm=h7) — dropped by the watermark gate even
-    // though h2 was never closed (no on-time data): without that gate
-    // it would open retroactively and emit a spurious partial hour.
-    // A fresh h8 row (ahead of the watermark) accumulates normally.
+    // closed-hour gate. An h2 row whose hour-end the eviction watermark
+    // already passed (h2+1h ≤ wm=h7) but that Spark's late-events filter
+    // (one batch behind) let through is kept: h2 was never closed, so it
+    // closes in this same step, as a windowed aggregate evicts the window
+    // its late-but-admitted row lands in. A fresh h8 row (ahead of the
+    // watermark) accumulates normally.
     val (st2, out2) = EventAnalytics.anomalyStep("b", Some(st1),
       Iterator(ValEvent("b", ts(0, 30), 9999.0), ValEvent("b", ts(2), 111.0),
         ValEvent("b", ts(8), 50.0)),
       wm = H0 + 7 * HOUR, minPriors = 12, ringSize = 24)
-    assert(out2.isEmpty && st2.open == Map(H0 + 8 * HOUR -> 5000L))
+    assert(out2.map(s => (s.hour.getTime, s.x)) == Seq((H0 + 2 * HOUR, 111L)))
+    assert(st2.open == Map(H0 + 8 * HOUR -> 5000L))
     val (st3, out3) = EventAnalytics.anomalyStep("b", Some(st2),
       Iterator.empty, wm = H0 + 10 * HOUR, minPriors = 12, ringSize = 24)
     assert(out3.map(s => (s.hour.getTime, s.x)) == Seq((H0 + 8 * HOUR, 50L)))
-    assert(st3.ring.head == (H0 + 8 * HOUR, 50L) &&
-      st3.ring.contains((H0, 800L)) && st3.open.isEmpty)
-    // EWMA folded across the two closures: (50 + 7*800)/8 = 706.
-    assert(st3.ewma.contains((50L + 7 * 800L) / 8))
+    assert(st3.ring == List((H0 + 8 * HOUR, 50L), (H0 + 2 * HOUR, 111L),
+      (H0, 800L)) && st3.open.isEmpty)
+    // EWMA folded across the three closures: (111 + 7*800)/8 = 713, then
+    // (50 + 7*713)/8 = 630.
+    assert(st3.ewma.contains((50L + 7 * ((111L + 7 * 800L) / 8)) / 8))
   }
 
   test("sessionize: events split on inactivity gap, per user") {

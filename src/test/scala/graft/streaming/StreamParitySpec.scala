@@ -223,15 +223,27 @@ class StreamParitySpec extends SparkSpec {
       batchQ("q_w3_sessionize").select(col("user_id"), col("start_us"),
         col("end_us").as("last_us"), col("n_events")))
 
-    // Hours close in ascending order whatever the arrival order (the
-    // watermark is monotonic), so ring and EWMA state walk the batch's
-    // hour sequence.
+    assertAnomalyParity(OooDelay, "sp_o_anomaly")
+  }
+
+  test("ooo under a delay shorter than the pair-swap regression: the anomaly monitor ≡ q_ts2") {
+    // 8 days is short of the last chunk pair's ~8.5-day regression, but
+    // the late-events watermark trails a batch behind, so the windowed
+    // aggregates keep every row — and so must the monitor.
+    assertAnomalyParity("8 days", "sp_o_anomaly8")
+  }
+
+  /** The anomaly monitor over the ooo stage at `lateness` ≡ q_ts2 and
+    * its ts3 EWMA. Hours close in ascending order whatever the arrival
+    * order (the watermark is monotonic), so ring and EWMA state walk the
+    * batch's hour sequence. */
+  private def assertAnomalyParity(lateness: String, sink: String): Unit = {
     val ds = typed(stage.ooo).select(col("event_type"), col("ts"), col("value"))
       .as[EventAnalytics.ValEvent]
-    val an = runStream(EventAnalytics.streamHourlyAnomaly(ds, OooDelay,
-      minPriors = 12, ringSize = 24).toDF(), "sp_o_anomaly")
+    val an = runStream(EventAnalytics.streamHourlyAnomaly(ds, lateness,
+      minPriors = 12, ringSize = 24).toDF(), sink)
     val ts2 = batchQ("q_ts2_anomaly").cache()
-    try assertSame("ooo.streamHourlyAnomaly",
+    try assertSame(s"ooo.streamHourlyAnomaly($lateness)",
       an.filter(col("event_type") =!= Flush).select(col("event_type"),
         unix_micros(col("hour")).as("hus"), col("x"), col("n_prior").as("n"),
         col("is_anomaly"), col("ewma8")),
