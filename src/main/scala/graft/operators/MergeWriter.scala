@@ -205,11 +205,9 @@ object MergeWriter {
     }
     // Partition values are validated on every partitioned merge; the
     // bucket span is only needed to scope one.
-    val touched: Set[String] = layout match {
-      case _: Layout.Partitioned => touchedSlices(incoming, layout)
-      case _ if scoped => touchedSlices(incoming, layout)
-      case _ => Set.empty
-    }
+    val touched =
+      if (scoped || layout.isInstanceOf[Layout.Partitioned]) touchedSlices(incoming, layout)
+      else Set.empty[String]
     if (scoped && touched.isEmpty) return None
 
     val oldFiles = if (scoped) sliceFiles(path, layout, touched).values.flatten.toSeq
