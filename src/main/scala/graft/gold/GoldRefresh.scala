@@ -637,6 +637,10 @@ object GoldRefresh {
   /** Incremental refresh; falls back to [[refresh]] when preconditions
     * fail (no standing state, token-metadata change, flat layouts). */
   def refreshIncremental(spark: SparkSession, silverDir: String): Report = {
+    // The global_stats leg reads the live row: a whole-table swap of it
+    // that crashed mid-way would fail every beat until a reader happened
+    // to roll it forward.
+    TableSwap.requireLive(s"$silverDir/global_stats")
     val paths = tablePaths(silverDir)
     val enrichedPath = s"$silverDir/donations_enriched"
     val sd = stateDir(silverDir)

@@ -183,12 +183,14 @@ object MergeWriter {
       stats: AdditiveMergeStats)
 
   /** Read the slices the merge needs, combine, write the tmp copy and
-    * count it. Mutates nothing under the live table. None when the merge
-    * is scoped and the batch touches no slice (an empty batch: the table
-    * stays as it is). */
+    * count it. Mutates nothing under the live table, except to roll a
+    * crashed whole-table swap of it forward first
+    * ([[TableSwap.requireLive]]). None when the merge is scoped and the
+    * batch touches no slice (an empty batch: the table stays as it is). */
   private def stage(spark: SparkSession, incoming: DataFrame, path: String,
       keys: Seq[String], layout: Layout, combine: Combine,
       journal: Boolean): Option[Staged] = {
+    TableSwap.requireLive(path)
     val current =
       if (io.exists(path)) Some(spark.read.parquet(path)) else None
     val scoped = current.exists(cur => slicesOnly(spark, path, layout, cur, incoming))
@@ -559,6 +561,9 @@ object MergeWriter {
     require(keys.contains(bucketCol), s"bucketCol $bucketCol not in keys")
     val manifest = applyManifestPath(path, token)
     val staged = io.readString(manifest).map(parseStaged).orElse {
+      // Recover before the sweep: a crashed whole-table swap's tmp is its
+      // only complete payload.
+      TableSwap.requireLive(path)
       sweepStrandedAdditiveTmp(path)
       val s = stage(spark, delta, path, keys, Layout.Bucketed(bucketCol, buckets),
         Combine.Additive(addCols, liveCol, distinctCol), journal = false)

@@ -40,8 +40,9 @@ package graft.operators
   *  - between a whole-table aside and its move-in: the live dir is
   *    MISSING beside a complete tmp and an aside of one uid, the only
   *    window a reader cannot serve. [[recoverCrashedSwap]] rolls it
-  *    forward (QueryServer does on a stale-swap read); vacuum quarantines
-  *    both dirs because the live table is missing.
+  *    forward (QueryServer does on a stale-swap read, and every merge and
+  *    incremental gold refresh first, through [[requireLive]]); vacuum
+  *    quarantines both dirs because the live table is missing.
   *  - inside a per-entry replace: entries are part old, part new, one may
   *    sit aside. The sidecar's uid is not the marker's, so
   *    MergeWriter.currentCounts recounts and vacuum quarantines the
@@ -226,6 +227,28 @@ object TableSwap {
     catch { case scala.util.control.NonFatal(_) => () } // rotated away mid-delete
     true
   }
+
+  /** A writer's guard before it reads `path` to merge into it. A
+    * whole-table swap that crashed between its aside and its move-in left
+    * the live dir missing; a merge reading "no table" would rebuild it
+    * from its batch alone, and vacuum, seeing a live dir again, would then
+    * delete the aside holding the old rows. So roll such a swap forward
+    * ([[recoverCrashedSwap]]); if the live dir is still missing beside an
+    * aside of the table, the old rows exist only there: throw. A lone tmp
+    * beside a missing table is a first-ever write that never published,
+    * which the new write supersedes. */
+  def requireLive(path: String): Unit =
+    if (!io.exists(path) && !recoverCrashedSwap(path)) {
+      val slash = path.lastIndexOf('/')
+      val (parent, name) = (path.take(slash), path.drop(slash + 1))
+      val asides =
+        if (slash <= 0 || !io.exists(parent)) Nil
+        else io.listDir(parent).collect { case (n, true) if isAsideOf(name, n) => n }
+      if (asides.nonEmpty)
+        throw new IllegalStateException(s"$path is missing and its rows " +
+          s"are only in swap residue ${asides.sorted.mkString(", ")}; " +
+          "restore the table before writing to it")
+    }
 
   /** The swap's move-in, tolerant of [[recoverCrashedSwap]] stealing the
     * step: a failed move whose destination is live and whose source is

@@ -5,97 +5,36 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 
 /** `GET /api/schema` — the OpenAPI 3 document for the query plane, the
   * engine-side equivalent of the reference's drf-spectacular schema route
-  * (api/urls.py:38-47). The document is generated from a route table that
-  * mirrors QueryService's surface (api/urls.py:49-132), so route/parameter
-  * names can't silently drift from the implementation the way a
-  * hand-maintained JSON blob would.
+  * (api/urls.py:38-47). The document is generated from the route table
+  * (QueryServer.routes, api/urls.py:49-132) that the server dispatches
+  * from, so route/parameter names can't silently drift from the
+  * implementation the way a hand-maintained JSON blob would.
   */
 object OpenApi {
 
   private final case class Param(
       name: String, in: String, tpe: String, required: Boolean)
-  /** `entity` names the components/schemas object a GET's result rows
-    * follow — None for the free-form chain-config blob. */
-  private final case class Route(
-      path: String, summary: String, params: Seq[Param], paginated: Boolean,
-      entity: Option[String])
 
-  // Page-number params only — active_pots, whose rows are filtered on
-  // request-time liveness (no cursor is stable across requests), serves
-  // no keyset continuation and must not advertise one.
-  private val pageOnly = Seq(
-    Param("page", "query", "integer", required = false),
-    Param("page_size", "query", "integer", required = false))
-  private val page = pageOnly :+
-    // Engine extension (not in the reference's schema): keyset
-    // continuation cursor — the previous page's last sort-key tuple,
-    // echoed by the keyset envelope's `next` URL.
-    Param("after", "query", "string", required = false)
-  private def path(name: String) = Param(name, "path", "string", required = true)
-  private def intPath(name: String) = Param(name, "path", "integer", required = true)
-  private def query(name: String) = Param(name, "query", "string", required = false)
-
-  /** The 22 data routes of api/urls.py:49-132, in declaration order. */
-  private val routes = Seq(
-    Route("/api/v1/accounts", "List accounts", page, paginated = true,
-      entity = Some("Account")),
-    Route("/api/v1/accounts/{account_id}", "Account detail",
-      Seq(path("account_id")), paginated = false, entity = Some("Account")),
-    Route("/api/v1/accounts/{account_id}/active_pots",
-      "Pots with an approved application from the account",
-      path("account_id") +: query("status") +: pageOnly, paginated = true,
-      entity = Some("Pot")),
-    Route("/api/v1/accounts/{account_id}/pot_applications",
-      "The account's pot applications",
-      path("account_id") +: query("status") +: page, paginated = true,
-      entity = Some("PotApplication")),
-    Route("/api/v1/accounts/{account_id}/donations_received",
-      "Donations to the account", path("account_id") +: page,
-      paginated = true, entity = Some("Donation")),
-    Route("/api/v1/accounts/{account_id}/donations_sent",
-      "Donations from the account", path("account_id") +: page,
-      paginated = true, entity = Some("Donation")),
-    Route("/api/v1/accounts/{account_id}/payouts_received",
-      "Paid pot payouts to the account", path("account_id") +: page,
-      paginated = true, entity = Some("PotPayout")),
-    Route("/api/v1/accounts/{account_id}/list-registrations",
-      "The account's list registrations",
-      path("account_id") +: query("status") +: page, paginated = true,
-      entity = Some("ListRegistration")),
-    Route("/api/v1/donate_contract_config", "Donate contract configuration",
-      Nil, paginated = false, entity = None), // free-form chain blob
-    Route("/api/v1/donors", "Accounts that have donated",
-      query("sort") +: page, paginated = true, entity = Some("Account")),
-    Route("/api/v1/lists", "List lists", page, paginated = true,
-      entity = Some("List")),
-    Route("/api/v1/lists/{list_id}", "List detail", Seq(intPath("list_id")),
-      paginated = false, entity = Some("List")),
-    Route("/api/v1/lists/{list_id}/registrations",
-      "Registrations on the list",
-      intPath("list_id") +: query("status") +: query("category") +: page,
-      paginated = true, entity = Some("ListRegistration")),
-    Route("/api/v1/lists/{list_id}/random_registration",
-      "A random registration from the list",
-      Seq(intPath("list_id"), query("status")), paginated = false,
-      entity = Some("ListRegistration")),
-    Route("/api/v1/pots", "List pots", page, paginated = true,
-      entity = Some("Pot")),
-    Route("/api/v1/pots/{pot_id}", "Pot detail", Seq(path("pot_id")),
-      paginated = false, entity = Some("Pot")),
-    Route("/api/v1/pots/{pot_id}/applications", "Applications to the pot",
-      path("pot_id") +: page, paginated = true,
-      entity = Some("PotApplication")),
-    Route("/api/v1/pots/{pot_id}/donations", "Donations to the pot",
-      path("pot_id") +: page, paginated = true, entity = Some("Donation")),
-    Route("/api/v1/pots/{pot_id}/sponsors",
-      "Distinct matching-pool donors to the pot", path("pot_id") +: page,
-      paginated = true, entity = Some("Account")),
-    Route("/api/v1/pots/{pot_id}/payouts", "Payouts of the pot",
-      path("pot_id") +: page, paginated = true, entity = Some("PotPayout")),
-    Route("/api/v1/potfactories", "List pot factories", page,
-      paginated = true, entity = Some("PotFactory")),
-    Route("/api/v1/stats", "Global protocol statistics", Nil,
-      paginated = false, entity = Some("Stats")))
+  /** A route's parameters in document order: its path id, its own query
+    * params, then the pagination params of a paginated route — `after`,
+    * the engine's keyset extension (not in the reference's schema), on
+    * every route that serves it. */
+  private def params(r: QueryServer.Route): Seq[Param] = {
+    val path = r.path.split('/').toSeq.filter(_.startsWith("{")).map(p =>
+      Param(p.stripPrefix("{").stripSuffix("}"), "path",
+        if (QueryServer.IntegerIds(p)) "integer" else "string",
+        required = true))
+    val query = r.query.map(Param(_, "query", "string", required = false))
+    val pages = r.serves match {
+      case QueryServer.Pages(_, pageOnly) =>
+        Seq(Param("page", "query", "integer", required = false),
+          Param("page_size", "query", "integer", required = false)) ++
+          (if (pageOnly) Nil
+           else Seq(Param("after", "query", "string", required = false)))
+      case _ => Nil
+    }
+    path ++ query ++ pages
+  }
 
   /** components/schemas: one object per entity, properties generated
     * from the SAME field lists the serializers render (Serializers.*Fields
@@ -153,24 +92,25 @@ object OpenApi {
     info.put("title", "graft query plane")
     info.put("version", "v1")
     val paths = root.putObject("paths")
-    routes.foreach { r =>
-      val get = paths.putObject(r.path).putObject("get")
+    QueryServer.routes.foreach { r =>
+      val paginated = r.serves.isInstanceOf[QueryServer.Pages]
+      val get = paths.putObject("/api" + r.path).putObject("get")
       get.put("summary", r.summary)
-      val params = get.putArray("parameters")
-      r.params.foreach { pr =>
-        val o = params.addObject()
+      val ps = get.putArray("parameters")
+      params(r).foreach { pr =>
+        val o = ps.addObject()
         o.put("name", pr.name)
         o.put("in", pr.in)
         o.put("required", pr.required)
         o.putObject("schema").put("type", pr.tpe)
       }
       val ok = get.putObject("responses").putObject("200")
-      ok.put("description", if (r.paginated) "Paginated results" else "Result")
+      ok.put("description", if (paginated) "Paginated results" else "Result")
       val schema: ObjectNode = ok.putObject("content")
         .putObject("application/json").putObject("schema")
       def ref(n: ObjectNode, e: String): Unit =
         n.put("$ref", s"#/components/schemas/$e"): Unit
-      if (r.paginated) {
+      if (paginated) {
         schema.put("type", "object")
         val props = schema.putObject("properties")
         // count/next/previous are nullable: next/previous at the walk's
@@ -185,8 +125,8 @@ object OpenApi {
           .put("nullable", true)
         val results = props.putObject("results")
         results.put("type", "array")
-        r.entity.foreach(e => ref(results.putObject("items"), e))
-      } else r.entity match {
+        r.entity.name.foreach(e => ref(results.putObject("items"), e))
+      } else r.entity.name match {
         case Some(e) => ref(schema, e)
         case None =>
           // donate_contract_config: the chain contract's own config blob,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.queries.QueryService.Page
 
@@ -23,6 +24,13 @@ import graft.queries.QueryService.Page
   *  - [[start]] is the thin JDK-HttpServer binding of [[handle]] (no
   *    framework dependency; the JDK server is production-adequate for a
   *    per-replica API pod, exactly the reference's gunicorn role).
+  *
+  * Routes: each of the 22 data routes is declared once, in
+  * [[QueryServer.routes]] — path pattern, freshness tables, entity
+  * (serializer + OpenAPI schema), and what it serves: a document, or a
+  * QueryService.Listing that serves both pagination forms. The router
+  * dispatches from that table, and the OpenAPI document ([[OpenApi]]) and
+  * the prewarm set ([[productionPrewarmPaths]]) are generated from it.
   *
   * Caching: GET responses memoize under (route, canonical params) and
   * serve while BOTH the 300 s TTL holds and the swap-marker uids of the
@@ -47,11 +55,13 @@ import graft.queries.QueryService.Page
   * Keyset extension: every list route except active_pots ALSO serves
   * `?after=` keyset continuation (the 100 TB deep-page path — constant
   * work per page where offset page N scans N pages; see
-  * [[keysetEnvelope]]). active_pots stays page-number only — its rows
-  * are filtered on request-time liveness, so no cursor is stable across
-  * requests; donors' derived-stat cursor is beat-stable (see
-  * QueryService.donorsKeyset). Without `after` the surface is exactly
-  * the reference's page-number API.
+  * [[keysetEnvelope]]), off the same Listing as its page-number form,
+  * with one cursor codec derived from the listing's sort-key types
+  * ([[QueryServer.decodeCursor]]). active_pots stays page-number only —
+  * its rows are filtered on request-time liveness, so no cursor is
+  * stable across requests; donors' derived-stat cursor is beat-stable
+  * (see QueryService.donorsListing). Without `after` the surface is
+  * exactly the reference's page-number API.
   */
 final class QueryServer(
     qs: QueryService,
@@ -166,7 +176,7 @@ final class QueryServer(
     * sort-key cursor; a full final page costs one extra empty request
     * (the standard keyset trade). */
   private def keysetEnvelope(path: String, params: Map[String, String],
-      pageDf: DataFrame, pageSize: Int, cursorCols: Seq[String],
+      pageDf: DataFrame, pageSize: Int, keys: Seq[QueryService.Key],
       serialize: DataFrame => DataFrame): Response = {
     // One action: the page is ≤ pageSize rows by construction; serialize
     // runs over the collected LocalRelation so the slice job isn't paid
@@ -175,17 +185,8 @@ final class QueryServer(
     val body = jsonCol(serialize(local))
     val next =
       if (rows.length < pageSize) None
-      else {
-        val last = rows.last
-        val cursor = cursorCols.map { c =>
-          last.getAs[Any](c) match {
-            case null => "null"
-            case t: java.sql.Timestamp => QueryServer.tsCursor(t)
-            case v => String.valueOf(v)
-          }
-        }.mkString(",")
-        Some(continuationUrl(path, params, Some("after" -> cursor)))
-      }
+      else Some(continuationUrl(path, params,
+        Some("after" -> QueryServer.encodeCursor(keys, rows.last))))
     Response(200, Serializers.keysetEnvelopeJson(next, body))
   }
 
@@ -203,76 +204,8 @@ final class QueryServer(
         java.net.URLEncoder.encode(v, "UTF-8") }.mkString("&")
   }
 
-  /** Keyset dispatch for one route: decode the cursor (empty = start,
-    * garbage = 400 — a cursor is machine-built, unlike DRF's page), run
-    * the route's keyset plan, memoize the rendered envelope under the
-    * same freshness tables as the page-number form. `run` answers
-    * Left(message) for route-level validation errors (bad status enum). */
-  private def keyset[C](path: String, params: Map[String, String],
-      tables: Seq[String], parse: String => Option[C],
-      cursorCols: Seq[String], serialize: DataFrame => DataFrame)(
-      run: (Option[C], Int) => Either[String, DataFrame]): Response = {
-    val raw = params.getOrElse("after", "")
-    val size = pageSizeParam(params)
-    val cur: Either[Response, Option[C]] =
-      if (raw.isEmpty) Right(None)
-      else parse(raw).map(c => Some(c): Option[C])
-        .toRight(badRequest("Invalid after cursor."))
-    // run() sits INSIDE the memo compute: donation keyset plans
-    // materialize their page eagerly (expandDonationPage bounds the dim
-    // joins on the collected page), so building the frame outside the
-    // memo would pay that slice job on every warm hit.
-    cur.fold(identity, c =>
-      memo(path, params, tables)(
-        run(c, size).fold(badRequest, df =>
-          keysetEnvelope(path, params, df, size, cursorCols, serialize))))
-  }
-
-  /** One-row detail body, or the reference's 404 document. */
-  private def detail(df: DataFrame, serialize: DataFrame => DataFrame,
-      entity: String, id: Any): Response =
-    jsonCol(serialize(df)).headOption match {
-      case Some(body) => Response(200, body)
-      case None =>
-        Response(404, Serializers.errorJson(
-          QueryService.notFoundMessage(entity, id)))
-    }
-
   private def badRequest(message: String): Response =
     Response(400, Serializers.errorJson(message))
-
-  private def pageEither(path: String, params: Map[String, String],
-      e: Either[String, Page], serialize: DataFrame => DataFrame): Response =
-    e.fold(badRequest, p => envelope(path, params, p, serialize))
-
-  // --------------------------------------------------- freshness tables
-  // Source tables per route family — the swap-marker uids that key cache
-  // freshness. Over-listing a table only invalidates more eagerly.
-  private val donationT = Seq("donations", "donations_enriched", "accounts",
-    "account_stats", "tokens", "pots", "pot_stats")
-  private val accountT = Seq("accounts", "account_stats")
-  private val potT = Seq("pots", "pot_stats", "accounts", "account_stats")
-  private val payoutT = Seq("pot_payouts")
-  private val regT = Seq("list_registrations", "lists", "accounts",
-    "account_stats")
-  // Serializer embeds widen the read set: application bodies embed the
-  // full pot object + applicant account, list/factory bodies embed
-  // owner/admins accounts.
-  private val applicationT = Seq("pot_applications") ++ potT
-  private val listT = Seq("lists", "accounts", "account_stats")
-  private val factoryT = Seq("pot_factories", "accounts", "account_stats")
-
-  /** PotApplicationSerializer body over a BOUNDED page: pot + applicant
-    * embeds on the ≤ pageSize rows (QueryService.potApplicationExpanded),
-    * then the DRF-parity render. */
-  private val appJson: DataFrame => DataFrame = df =>
-    Serializers.potApplicationJson(qs.potApplicationExpanded(df))
-
-  /** ListRegistrationSerializer body over a BOUNDED page: full list
-    * object + registrant/registered_by account embeds
-    * (QueryService.listRegistrationExpanded), then the DRF render. */
-  private val regJson: DataFrame => DataFrame = df =>
-    Serializers.listRegistrationJson(qs.listRegistrationExpanded(df))
 
   private def uids(tables: Seq[String]): Seq[String] =
     ResultCache.uidsFor(silverDir)(tables)
@@ -448,229 +381,70 @@ final class QueryServer(
     val matchPath =
       if (path.startsWith("/api/")) path.stripPrefix("/api") else path
     val segs = matchPath.split('/').filter(_.nonEmpty).toList
-    lazy val page = pageParam(params)
-    val size = pageSizeParam(params)
-    val status = params.get("status")
     segs match {
       // ---------------------------------------------------- service meta
       case List("health") => Response(200, """{"status": "ok"}""")
       case List("metrics") => Response(200, metricsJson())
       case List("schema") | List("v1", "schema") =>
-        Response(200, qs.openApiSchema())
+        Response(200, OpenApi.schemaJson)
       case List("docs") =>
         Response(200, OpenApi.swaggerUiHtml,
           Map("Content-Type" -> "text/html; charset=utf-8"))
       case List("redoc") =>
         Response(200, OpenApi.redocHtml,
           Map("Content-Type" -> "text/html; charset=utf-8"))
-
-      // ------------------------------------------------------- accounts
-      case List("v1", "accounts") if params.contains("after") =>
-        keyset(path, params, accountT, QueryServer.afterString,
-          Seq("id"), Serializers.accountJson)((c, sz) =>
-          Right(qs.accountsListKeyset(c, sz)))
-      case List("v1", "accounts") =>
-        memo(path, params, accountT)(
-          envelope(path, params, qs.accountsList(page, size), Serializers.accountJson))
-      case List("v1", "accounts", id) =>
-        memo(path, params, accountT)(
-          detail(qs.accountDetail(id), Serializers.accountJson, "Account", id))
-      case List("v1", "accounts", id, "active_pots") =>
-        // The ONE route without keyset support (its rows are filtered on
-        // request-time liveness — no cursor is stable across requests):
-        // a typed 400, matching the OpenAPI schema that deliberately
-        // omits the param, never a silent fall-through to page 1 that
-        // would also mint a cache entry per cursor value.
-        if (params.contains("after"))
-          return badRequest("Keyset pagination (?after=) is not supported " +
-            "on active_pots; use page-number pagination.")
-        // ?status=live (accounts/api.py:163-217). `now` is request time,
-        // so live-filtered responses cache only within the TTL window —
-        // the filter is over ROUND BOUNDS (hours-long), TTL is 300 s.
-        val live = status.contains("live")
-        memo(path, params, potT ++ Seq("pot_applications"))(
-          envelope(path, params,
-            qs.accountActivePots(id, live,
-              new java.sql.Timestamp(nowMs()), page, size),
-            Serializers.potJson))
-      case List("v1", "accounts", id, "pot_applications")
-          if params.contains("after") =>
-        keyset(path, params, applicationT,
-          QueryServer.afterTsString, Seq("submitted_at", "pot"), appJson)(
-          (c, sz) => qs.accountPotApplicationsKeyset(id, status, c, sz))
-      case List("v1", "accounts", id, "pot_applications") =>
-        memo(path, params, applicationT)(
-          pageEither(path, params, qs.accountPotApplications(id, status, page, size),
-            appJson))
-      case List("v1", "accounts", id, "donations_received")
-          if params.contains("after") =>
-        keyset(path, params, donationT, QueryServer.afterTsLong,
-          Seq("donated_at", "on_chain_id"), Serializers.donationJson)(
-          (c, sz) => Right(qs.accountDonationsReceivedKeyset(id, c, sz)))
-      case List("v1", "accounts", id, "donations_received") =>
-        memo(path, params, donationT)(
-          envelope(path, params,
-            qs.accountDonationsReceived(id, page, size,
-              countOverride = goldCounts.flatMap(_.donationsReceived(id))),
-            Serializers.donationJson))
-      case List("v1", "accounts", id, "donations_sent")
-          if params.contains("after") =>
-        keyset(path, params, donationT, QueryServer.afterTsLong,
-          Seq("donated_at", "on_chain_id"), Serializers.donationJson)(
-          (c, sz) => Right(qs.accountDonationsSentKeyset(id, c, sz)))
-      case List("v1", "accounts", id, "donations_sent") =>
-        memo(path, params, donationT)(
-          envelope(path, params,
-            qs.accountDonationsSent(id, page, size,
-              countOverride = goldCounts.flatMap(_.donationsSent(id))),
-            Serializers.donationJson))
-      case List("v1", "accounts", id, "payouts_received")
-          if params.contains("after") =>
-        keyset(path, params, payoutT, QueryServer.afterTsString,
-          Seq("paid_at", "pot"), Serializers.potPayoutJson)(
-          (c, sz) => Right(qs.accountPayoutsReceivedKeyset(id, c, sz)))
-      case List("v1", "accounts", id, "payouts_received") =>
-        memo(path, params, payoutT)(
-          envelope(path, params, qs.accountPayoutsReceived(id, page, size),
-            Serializers.potPayoutJson))
-      case List("v1", "accounts", id, "list-registrations")
-          if params.contains("after") =>
-        keyset(path, params, regT, QueryServer.afterTsLong,
-          Seq("submitted_at", "on_chain_id"),
-          regJson)(
-          (c, sz) => qs.accountListRegistrationsKeyset(id, status, c, sz))
-      case List("v1", "accounts", id, "list-registrations") =>
-        memo(path, params, regT)(
-          pageEither(path, params,
-            qs.accountListRegistrations(id, status, page, size),
-            regJson))
-
-      // -------------------------------------------------------- donors
-      case List("v1", "donors") if params.contains("after") =>
-        // Leaderboard deep-walk: cursor shape follows the sort mode.
-        val donorsT = accountT ++ Seq("donations", "global_stats")
-        if (params.get("sort").contains("most_donated_usd"))
-          keyset(path, params, donorsT, QueryServer.afterDecString,
-            Seq("total_donations_out_usd", "id"), Serializers.accountJson)(
-            (c, sz) => Right(qs.donorsKeyset(sortMostDonated = true,
-              c.map { case (v, id) => Seq(v, id) }, sz)))
-        else
-          keyset(path, params, donorsT, QueryServer.afterString,
-            Seq("id"), Serializers.accountJson)((c, sz) =>
-            Right(qs.donorsKeyset(sortMostDonated = false, c.map(Seq(_)), sz)))
-      case List("v1", "donors") =>
-        val sortMost = params.get("sort").contains("most_donated_usd")
-        memo(path, params, accountT ++ Seq("donations", "global_stats"))(
-          envelope(path, params,
-            qs.donors(sortMost, page, size,
-              countOverride = goldCounts.flatMap(_.totalDonors())),
-            Serializers.accountJson))
-
-      // --------------------------------------------------------- lists
-      case List("v1", "lists") if params.contains("after") =>
-        keyset(path, params, listT, QueryServer.afterLong,
-          Seq("on_chain_id"), Serializers.listJson)((c, sz) =>
-          Right(qs.listsListKeyset(c, sz)))
-      case List("v1", "lists") =>
-        memo(path, params, listT)(
-          envelope(path, params, qs.listsList(page, size), Serializers.listJson))
-      case List("v1", "lists", IntId(id)) =>
-        memo(path, params, listT)(
-          detail(qs.listDetail(id), Serializers.listJson, "List", id))
-      case List("v1", "lists", IntId(id), "registrations")
-          if params.contains("after") =>
-        keyset(path, params, regT, QueryServer.afterTsLong,
-          Seq("submitted_at", "on_chain_id"),
-          regJson)((c, sz) =>
-          qs.listRegistrationsKeyset(id, status, params.get("category"), c, sz))
-      case List("v1", "lists", IntId(id), "registrations") =>
-        memo(path, params, regT)(
-          pageEither(path, params,
-            qs.listRegistrations(id, status, params.get("category"), page, size),
-            regJson))
-      case List("v1", "lists", IntId(id), "random_registration") =>
-        // Deterministic seeded pick (O5) — cacheable like any route; the
-        // reference re-rolls per request, ours re-rolls per table merge
-        // (documented deviation, q_o5's replayability contract).
-        memo(path, params, regT)(
-          qs.randomRegistration(id, status).fold(badRequest, df =>
-            jsonCol(regJson(df)).headOption
-              .map(Response(200, _))
-              .getOrElse(Response(404, Serializers.errorJson(
-                QueryService.notFoundMessage("Registration for list", id))))))
-
-      // ---------------------------------------------------------- pots
-      case List("v1", "pots") if params.contains("after") =>
-        keyset(path, params, potT, QueryServer.afterString,
-          Seq("account"), Serializers.potJson)((c, sz) =>
-          Right(qs.potsListKeyset(c, sz)))
-      case List("v1", "pots") =>
-        memo(path, params, potT)(
-          envelope(path, params, qs.potsList(page, size), Serializers.potJson))
-      case List("v1", "pots", id) =>
-        memo(path, params, potT)(
-          detail(qs.potDetail(id), Serializers.potJson, "Pot", id))
-      case List("v1", "pots", id, "applications")
-          if params.contains("after") =>
-        keyset(path, params, applicationT,
-          QueryServer.afterTsString, Seq("submitted_at", "applicant"),
-          appJson)((c, sz) => Right(qs.potApplicationsKeyset(id, c, sz)))
-      case List("v1", "pots", id, "applications") =>
-        memo(path, params, applicationT)(
-          envelope(path, params, qs.potApplications(id, page, size), appJson))
-      case List("v1", "pots", id, "donations")
-          if params.contains("after") =>
-        keyset(path, params, donationT, QueryServer.afterTsLong,
-          Seq("donated_at", "on_chain_id"), Serializers.donationJson)(
-          (c, sz) => Right(qs.potDonationsKeyset(id, c, sz)))
-      case List("v1", "pots", id, "donations") =>
-        memo(path, params, donationT)(
-          envelope(path, params,
-            qs.potDonations(id, page, size,
-              countOverride = goldCounts.flatMap(_.potDonations(id))),
-            Serializers.donationJson))
-      case List("v1", "pots", id, "sponsors")
-          if params.contains("after") =>
-        keyset(path, params, donationT, QueryServer.afterString,
-          Seq("id"), Serializers.accountJson)((c, sz) =>
-          Right(qs.potSponsorsKeyset(id, c, sz)))
-      case List("v1", "pots", id, "sponsors") =>
-        memo(path, params, donationT)(
-          envelope(path, params, qs.potSponsors(id, page, size),
-            Serializers.accountJson))
-      case List("v1", "pots", id, "payouts")
-          if params.contains("after") =>
-        keyset(path, params, payoutT, QueryServer.afterTsString,
-          Seq("paid_at", "recipient"), Serializers.potPayoutJson)(
-          (c, sz) => Right(qs.potPayoutsKeyset(id, c, sz)))
-      case List("v1", "pots", id, "payouts") =>
-        memo(path, params, payoutT)(
-          envelope(path, params, qs.potPayouts(id, page, size),
-            Serializers.potPayoutJson))
-      case List("v1", "potfactories") if params.contains("after") =>
-        keyset(path, params, factoryT, QueryServer.afterString,
-          Seq("account"), Serializers.potFactoryJson)((c, sz) =>
-          Right(qs.potFactoriesListKeyset(c, sz)))
-      case List("v1", "potfactories") =>
-        memo(path, params, factoryT)(
-          envelope(path, params, qs.potFactoriesList(page, size),
-            Serializers.potFactoryJson))
-
-      // ---------------------------------------------------------- misc
-      case List("v1", "donate_contract_config") =>
-        memo(path, params, Seq("donate_contract_config"))(
-          qs.donateContractConfig().collect().headOption
-            .map(r => Response(200, r.getAs[String]("config")))
-            .getOrElse(Response(404,
-              Serializers.errorJson("Config not found."))))
-      case List("v1", "stats") =>
-        memo(path, params, Seq("global_stats"))(
-          jsonCol(Serializers.statsJson(qs.stats())).headOption
-            .map(Response(200, _))
-            .getOrElse(Response(404, Serializers.errorJson("Stats not found."))))
-
       case _ =>
-        Response(404, Serializers.errorJson(s"Not found: $path"))
+        QueryServer.routes.iterator
+          .flatMap(r => r.bind(segs).map(id => (r, id))).nextOption() match {
+          case Some((r, id)) =>
+            serve(r, QueryServer.Call(qs, goldCounts, nowMs, id, params),
+              path, params)
+          case None => Response(404, Serializers.errorJson(s"Not found: $path"))
+        }
+    }
+  }
+
+  /** One data route's response, both pagination forms included. Request
+    * params parse before the route's own validation: a bad `page` is 404
+    * and a bad cursor 400 before a bad status enum is 400. */
+  private def serve(r: QueryServer.Route, c: QueryServer.Call,
+      path: String, params: Map[String, String]): Response = {
+    val render = r.entity.render(qs)
+    r.serves match {
+      case QueryServer.Document(rows, missing) =>
+        memo(path, params, r.tables)(rows(c).fold(badRequest, df =>
+          jsonCol(render(df)).headOption.map(Response(200, _))
+            .getOrElse(Response(404, Serializers.errorJson(missing(c))))))
+      case QueryServer.Pages(listing, pageOnly) if params.contains("after") =>
+        // A page-only route's rows have no cursor that stays valid across
+        // requests: a typed 400, matching the OpenAPI schema that omits
+        // the param, never a silent fall-through to page 1 that would
+        // also mint a cache entry per cursor value.
+        if (pageOnly)
+          return badRequest("Keyset pagination (?after=) is not supported " +
+            s"on ${r.path.split('/').last}; use page-number pagination.")
+        // Empty cursor = the first keyset page; garbage = 400 (a cursor
+        // is machine-built, unlike DRF's page). The plan runs INSIDE the
+        // memo compute: donation keyset pages materialize eagerly
+        // (expandDonationPage bounds the dim joins on the collected
+        // page), so building it outside would pay that job on every hit.
+        val l = listing(c)
+        val raw = params("after")
+        val size = pageSizeParam(params)
+        val cursor =
+          if (raw.isEmpty) Some(None)
+          else QueryServer.decodeCursor(l.keys, raw).map(Some(_))
+        cursor.fold(badRequest("Invalid after cursor."))(after =>
+          memo(path, params, r.tables)(l.invalid.fold(
+            keysetEnvelope(path, params, l.after(after, size), size, l.keys,
+              render))(badRequest)))
+      case QueryServer.Pages(listing, _) =>
+        memo(path, params, r.tables) {
+          val page = pageParam(params)
+          val l = listing(c)
+          l.invalid.fold(envelope(path, params,
+            l.page(page, pageSizeParam(params)), render))(badRequest)
+        }
     }
   }
 
@@ -685,67 +459,48 @@ final class QueryServer(
       s""""throttle_per_min": $throttlePerMin, "uptime_s": $up}"""
   }
 
-  private object IntId {
-    def unapply(s: String): Option[Long] =
-      scala.util.Try(s.toLong).toOption
-  }
-
   // -------------------------------------------------------- HTTP binding
-  /** Pre-warm the serve plane BEFORE the socket opens (the gunicorn
-    * `preload_app`/warmup analog): one synthetic request per route
-    * family through the full [[handle]] path, paid while the box is
-    * quiet. First-touch costs — Catalyst plan compilation, codegen,
-    * JIT, parquet footer reads, the memoized loader's table builds —
-    * land here instead of on the first client request, which in the
-    * deployment shape (serving resident next to a live ingest) would
-    * otherwise race the opening micro-batch for task slots: SOAK
-    * measured that race at 37-54 s on a handful of early-tail
-    * requests (FAIR scheduling and GC both tried and exonerated).
-    * Detail routes warm with a synthetic id — the 404 still compiles
-    * and executes the route's plan. Failures are swallowed: a missing
-    * optional table must not block startup. Returns
-    * (route, status, ms) per warmed route for the caller's log. */
-  /** The production-shape prewarm set: one representative per route
-    * family (every distinct plan shape the server compiles — list,
-    * keyset, detail, and each nested-collection family), at the DEFAULT
-    * page size and with the store's HOTTEST real ids (QueryService
-    * .hotIds). The earlier synthetic-id/page_size=1 warm compiled the
-    * plans but left full-page materialization, real-dim fetches and
-    * gold-counter lookups to the first client requests — SOAK measured
-    * those first REAL requests as the early-tail latency outliers even
-    * with plans warm. Real-id warms also PRIME the result cache, so the
-    * first production request on a warmed route is a hit. Stores with
-    * empty tables fall back to synthetic ids (the 404 still compiles and
-    * executes the route's plan). */
+  /** The production-shape prewarm set, generated from the route table:
+    * every data route at the DEFAULT page size, plus the first keyset
+    * page of every route that serves one, with the store's HOTTEST real
+    * ids (QueryService.hotIds) in the path. A synthetic-id or
+    * page_size=1 warm compiles the plans but leaves full-page
+    * materialization, real-dim fetches and gold-counter lookups to the
+    * first client requests — SOAK measured those first REAL requests as
+    * the early-tail latency outliers even with plans warm. Real-id warms
+    * also PRIME the result cache, so the first production request on a
+    * warmed route is a hit. Stores with empty tables fall back to
+    * synthetic ids (the 404 still compiles and executes the route's
+    * plan). */
   def productionPrewarmPaths(): Seq[String] = {
     val hot =
       try qs.hotIds
       catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] }
     val acct = hot.getOrElse("account", "prewarm.synthetic.near")
-    val donor = hot.getOrElse("donor", acct)
-    val pot = hot.getOrElse("pot", "prewarm.pot.near")
-    val list = hot.getOrElse("list", "1")
-    Seq(
-      "/v1/stats",
-      "/v1/donors", "/v1/donors?after=",
-      "/v1/accounts", "/v1/accounts?after=",
-      s"/v1/accounts/$acct",
-      s"/v1/accounts/$acct/active_pots",
-      s"/v1/accounts/$acct/pot_applications",
-      s"/v1/accounts/$acct/donations_received",
-      s"/v1/accounts/$acct/donations_received?after=",
-      s"/v1/accounts/$donor/donations_sent",
-      s"/v1/accounts/$acct/payouts_received",
-      s"/v1/accounts/$acct/list-registrations",
-      "/v1/lists", s"/v1/lists/$list", s"/v1/lists/$list/registrations",
-      s"/v1/lists/$list/random_registration",
-      "/v1/pots", "/v1/pots?after=",
-      s"/v1/pots/$pot", s"/v1/pots/$pot/applications",
-      s"/v1/pots/$pot/donations", s"/v1/pots/$pot/sponsors",
-      s"/v1/pots/$pot/payouts",
-      "/v1/potfactories", "/v1/donate_contract_config")
+    val ids = Map("account" -> acct, "donor" -> hot.getOrElse("donor", acct),
+      "pot" -> hot.getOrElse("pot", "prewarm.pot.near"),
+      "list" -> hot.getOrElse("list", "1"))
+    QueryServer.routes.flatMap { r =>
+      val p = r.path.replaceAll("\\{[^}]+\\}", ids.getOrElse(r.warm, ""))
+      r.serves match {
+        case QueryServer.Pages(_, false) => Seq(p, p + "?after=")
+        case _ => Seq(p)
+      }
+    }
   }
 
+  /** Pre-warm the serve plane BEFORE the socket opens (the gunicorn
+    * `preload_app`/warmup analog): one request per path through the full
+    * [[handle]] path, paid while the box is quiet. First-touch costs —
+    * Catalyst plan compilation, codegen, JIT, parquet footer reads, the
+    * memoized loader's table builds — land here instead of on the first
+    * client request, which in the deployment shape (serving resident
+    * next to a live ingest) would otherwise race the opening micro-batch
+    * for task slots: SOAK measured that race at 37-54 s on a handful of
+    * early-tail requests (FAIR scheduling and GC both tried and
+    * exonerated). Failures are swallowed: a missing optional table must
+    * not block startup. Returns (path, status, ms) per warmed path for
+    * the caller's log. */
   def prewarm(paths: Seq[String] = productionPrewarmPaths())
       : Seq[(String, Int, Double)] =
     paths.map { p =>
@@ -753,13 +508,7 @@ final class QueryServer(
         case -1 => (p, "")
         case i => (p.take(i), p.drop(i + 1))
       }
-      val params = query.split('&').toSeq.filter(_.nonEmpty).map { kv =>
-        val i = kv.indexOf('=')
-        val k = if (i < 0) kv else kv.take(i)
-        val v = if (i < 0) "" else kv.drop(i + 1)
-        java.net.URLDecoder.decode(k, "UTF-8") ->
-          java.net.URLDecoder.decode(v, "UTF-8")
-      }.toMap
+      val params = QueryServer.parseQuery(query)
       val t0 = System.nanoTime()
       val r =
         try handle("GET", path, params, client = "prewarm")
@@ -785,16 +534,8 @@ final class QueryServer(
         try {
           val uri = exchange.getRequestURI
           val params =
-            try {
-              Option(uri.getRawQuery).toSeq
-                .flatMap(_.split('&').toSeq).filter(_.nonEmpty).map { kv =>
-                  val i = kv.indexOf('=')
-                  val k = if (i < 0) kv else kv.take(i)
-                  val v = if (i < 0) "" else kv.drop(i + 1)
-                  java.net.URLDecoder.decode(k, "UTF-8") ->
-                    java.net.URLDecoder.decode(v, "UTF-8")
-                }.toMap
-            } catch {
+            try QueryServer.parseQuery(Option(uri.getRawQuery).getOrElse(""))
+            catch {
               // Malformed percent-encoding (?page=%zz, a trailing '%')
               // is CLIENT input, not a server fault: 400, not 500.
               case _: IllegalArgumentException =>
@@ -1007,14 +748,205 @@ object QueryServer {
   private[queries] final class MalformedQueryException
     extends RuntimeException("Malformed query string.")
 
-  // ------------------------------------------ keyset cursor codecs
+  // ------------------------------------------------------ route table
+  /** What a route's functions see of one request: the service and gold
+    * counters it is served by, the request clock, the path's id (an
+    * integer id in its parsed form) and the decoded query params. */
+  private[queries] final case class Call(qs: QueryService,
+      gold: Option[graft.gold.GoldCounts], nowMs: () => Long, id: String,
+      params: Map[String, String]) {
+    def status: Option[String] = params.get("status")
+  }
+
+  /** A response entity: its OpenAPI components/schemas name (None for the
+    * free-form config blob) and the DRF-parity serializer its rows
+    * render through, which yields one `json` column. */
+  private[queries] final case class Entity(name: Option[String],
+      render: QueryService => DataFrame => DataFrame)
+  private def entity(name: String)(render: DataFrame => DataFrame) =
+    Entity(Some(name), _ => render)
+  private val AccountE = entity("Account")(Serializers.accountJson)
+  private val DonationE = entity("Donation")(Serializers.donationJson)
+  private val PotE = entity("Pot")(Serializers.potJson)
+  private val PayoutE = entity("PotPayout")(Serializers.potPayoutJson)
+  private val ListE = entity("List")(Serializers.listJson)
+  private val FactoryE = entity("PotFactory")(Serializers.potFactoryJson)
+  private val StatsE = entity("Stats")(Serializers.statsJson)
+  /** PotApplicationSerializer over a BOUNDED page: pot + applicant embeds
+    * on the ≤ pageSize rows (QueryService.potApplicationExpanded). */
+  private val ApplicationE = Entity(Some("PotApplication"), qs => df =>
+    Serializers.potApplicationJson(qs.potApplicationExpanded(df)))
+  /** ListRegistrationSerializer over a BOUNDED page: full list object +
+    * registrant/registered_by embeds (QueryService.listRegistrationExpanded). */
+  private val RegistrationE = Entity(Some("ListRegistration"), qs => df =>
+    Serializers.listRegistrationJson(qs.listRegistrationExpanded(df)))
+  /** The chain contract's own config document, served verbatim. */
+  private val ConfigE = Entity(None, _ => _.select(col("config").as("json")))
+
+  /** What a data route serves. */
+  private[queries] sealed trait Serves
+  /** A paginated route: its rows as one QueryService.Listing, served as
+    * `page`/`page_size` pages and, unless `pageOnly`, as `?after=` keyset
+    * pages. */
+  private[queries] final case class Pages(listing: Call => QueryService.Listing,
+      pageOnly: Boolean = false) extends Serves
+  /** A one-document route: the frame whose first row is the body
+    * (Left = the route's 400 message), and the 404 message when it has
+    * none. */
+  private[queries] final case class Document(
+      rows: Call => Either[String, DataFrame],
+      missing: Call => String) extends Serves
+
+  /** One data route, declared once. `path` is its pattern under /api
+    * (`{name}` binds one segment; [[IntegerIds]] must parse as integers);
+    * `tables` are the swap-marker uids that key its cache freshness
+    * (over-listing a table only invalidates more eagerly); `query` are
+    * its own query params for the OpenAPI document; `warm` names the
+    * QueryService.hotIds family whose busiest id the prewarm binds. */
+  private[queries] final case class Route(path: String, summary: String,
+      tables: Seq[String], entity: Entity, serves: Serves,
+      query: Seq[String] = Nil, warm: String = "") {
+    private val pattern = path.split('/').filter(_.nonEmpty).toList
+
+    /** The path id when `segs` (the request path under /api) is this
+      * route: "" for a route without one. */
+    def bind(segs: List[String]): Option[String] =
+      if (segs.length != pattern.length) None
+      else pattern.zip(segs).foldLeft(Option("")) {
+        case (id, (p, s)) if p.startsWith("{") =>
+          if (!IntegerIds(p)) id.map(_ => s)
+          else id.flatMap(_ => scala.util.Try(s.toLong).toOption.map(_.toString))
+        case (id, (p, s)) => id.filter(_ => p == s)
+      }
+  }
+
+  /** Path params that must parse as integers (OpenAPI `integer`). */
+  private[queries] val IntegerIds = Set("{list_id}")
+
+  // Source tables per route family. Serializer embeds widen the read
+  // set: application bodies embed the full pot object + applicant
+  // account, list/factory bodies embed owner/admins accounts.
+  private val donationT = Seq("donations", "donations_enriched", "accounts",
+    "account_stats", "tokens", "pots", "pot_stats")
+  private val accountT = Seq("accounts", "account_stats")
+  private val potT = Seq("pots", "pot_stats", "accounts", "account_stats")
+  private val payoutT = Seq("pot_payouts")
+  private val regT = Seq("list_registrations", "lists", "accounts",
+    "account_stats")
+  private val applicationT = Seq("pot_applications") ++ potT
+  private val listT = Seq("lists", "accounts", "account_stats")
+  private val factoryT = Seq("pot_factories", "accounts", "account_stats")
+
+  private def notFound(entity: String): Call => String =
+    c => QueryService.notFoundMessage(entity, c.id)
+
+  /** The 22 data routes of api/urls.py:49-132, in declaration order: the
+    * one place a route is declared. [[QueryServer.route]] dispatches both
+    * pagination forms from it, and the OpenAPI document and the prewarm
+    * set are generated from it. */
+  private[queries] val routes: Seq[Route] = Seq(
+    Route("/v1/accounts", "List accounts", accountT, AccountE,
+      Pages(_.qs.accountsListing)),
+    Route("/v1/accounts/{account_id}", "Account detail", accountT, AccountE,
+      Document(c => Right(c.qs.accountDetail(c.id)), notFound("Account")),
+      warm = "account"),
+    // ?status=live (accounts/api.py:163-217). `now` is request time, so
+    // live-filtered responses cache only within the TTL window — the
+    // filter is over ROUND BOUNDS (hours-long), TTL is 300 s.
+    Route("/v1/accounts/{account_id}/active_pots",
+      "Pots with an approved application from the account",
+      potT ++ Seq("pot_applications"), PotE,
+      Pages(c => c.qs.accountActivePotsListing(c.id, c.status.contains("live"),
+        new java.sql.Timestamp(c.nowMs())), pageOnly = true),
+      query = Seq("status"), warm = "account"),
+    Route("/v1/accounts/{account_id}/pot_applications",
+      "The account's pot applications", applicationT, ApplicationE,
+      Pages(c => c.qs.accountPotApplicationsListing(c.id, c.status)),
+      query = Seq("status"), warm = "account"),
+    // The three hot FK-filtered donation routes and donors price `count`
+    // from the gold counters when gold is provably current with silver.
+    Route("/v1/accounts/{account_id}/donations_received",
+      "Donations to the account", donationT, DonationE,
+      Pages(c => c.qs.accountDonationsReceivedListing(c.id,
+        c.gold.flatMap(_.donationsReceived(c.id)))), warm = "account"),
+    Route("/v1/accounts/{account_id}/donations_sent",
+      "Donations from the account", donationT, DonationE,
+      Pages(c => c.qs.accountDonationsSentListing(c.id,
+        c.gold.flatMap(_.donationsSent(c.id)))), warm = "donor"),
+    Route("/v1/accounts/{account_id}/payouts_received",
+      "Paid pot payouts to the account", payoutT, PayoutE,
+      Pages(c => c.qs.accountPayoutsReceivedListing(c.id)), warm = "account"),
+    Route("/v1/accounts/{account_id}/list-registrations",
+      "The account's list registrations", regT, RegistrationE,
+      Pages(c => c.qs.accountListRegistrationsListing(c.id, c.status)),
+      query = Seq("status"), warm = "account"),
+    Route("/v1/donate_contract_config", "Donate contract configuration",
+      Seq("donate_contract_config"), ConfigE,
+      Document(c => Right(c.qs.donateContractConfig()), _ => "Config not found.")),
+    Route("/v1/donors", "Accounts that have donated",
+      accountT ++ Seq("donations", "global_stats"), AccountE,
+      Pages(c => c.qs.donorsListing(
+        c.params.get("sort").contains("most_donated_usd"),
+        c.gold.flatMap(_.totalDonors()))),
+      query = Seq("sort")),
+    Route("/v1/lists", "List lists", listT, ListE, Pages(_.qs.listsListing)),
+    Route("/v1/lists/{list_id}", "List detail", listT, ListE,
+      Document(c => Right(c.qs.listDetail(c.id.toLong)), notFound("List")),
+      warm = "list"),
+    Route("/v1/lists/{list_id}/registrations", "Registrations on the list",
+      regT, RegistrationE,
+      Pages(c => c.qs.listRegistrationsListing(c.id.toLong, c.status,
+        c.params.get("category"))),
+      query = Seq("status", "category"), warm = "list"),
+    // Deterministic seeded pick (O5) — cacheable like any route; the
+    // reference re-rolls per request, ours re-rolls per table merge
+    // (documented deviation, q_o5's replayability contract).
+    Route("/v1/lists/{list_id}/random_registration",
+      "A random registration from the list", regT, RegistrationE,
+      Document(c => c.qs.randomRegistration(c.id.toLong, c.status),
+        notFound("Registration for list")),
+      query = Seq("status"), warm = "list"),
+    Route("/v1/pots", "List pots", potT, PotE, Pages(_.qs.potsListing)),
+    Route("/v1/pots/{pot_id}", "Pot detail", potT, PotE,
+      Document(c => Right(c.qs.potDetail(c.id)), notFound("Pot")),
+      warm = "pot"),
+    Route("/v1/pots/{pot_id}/applications", "Applications to the pot",
+      applicationT, ApplicationE,
+      Pages(c => c.qs.potApplicationsListing(c.id)), warm = "pot"),
+    Route("/v1/pots/{pot_id}/donations", "Donations to the pot", donationT,
+      DonationE, Pages(c => c.qs.potDonationsListing(c.id,
+        c.gold.flatMap(_.potDonations(c.id)))), warm = "pot"),
+    Route("/v1/pots/{pot_id}/sponsors",
+      "Distinct matching-pool donors to the pot", donationT, AccountE,
+      Pages(c => c.qs.potSponsorsListing(c.id)), warm = "pot"),
+    Route("/v1/pots/{pot_id}/payouts", "Payouts of the pot", payoutT, PayoutE,
+      Pages(c => c.qs.potPayoutsListing(c.id)), warm = "pot"),
+    Route("/v1/potfactories", "List pot factories", factoryT, FactoryE,
+      Pages(_.qs.potFactoriesListing)),
+    Route("/v1/stats", "Global protocol statistics", Seq("global_stats"),
+      StatsE, Document(c => Right(c.qs.stats()), _ => "Stats not found.")))
+
+  /** Split and decode a raw `k=v&…` query string (a key without `=` maps
+    * to ""). Throws IllegalArgumentException on malformed
+    * percent-encoding. */
+  private[queries] def parseQuery(raw: String): Map[String, String] =
+    raw.split('&').toSeq.filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      val k = if (i < 0) kv else kv.take(i)
+      val v = if (i < 0) "" else kv.drop(i + 1)
+      java.net.URLDecoder.decode(k, "UTF-8") ->
+        java.net.URLDecoder.decode(v, "UTF-8")
+    }.toMap
+
+  // ------------------------------------------------ keyset cursor codec
   // The ?after= cursor is the sort-key tuple of the previous page's last
   // row, comma-joined: timestamps as MICROS since epoch (TimestampType's
   // native precision — a millis encoding could re-include or skip the
-  // boundary row on sub-ms data), ids verbatim ("null" for a null
-  // timestamp: unpaid pot payouts sort last and remain continuable).
-  // Account/pot ids cannot contain ',' (NEAR account grammar), so the
-  // join is unambiguous.
+  // boundary row on sub-ms data), other values verbatim, "null" for a
+  // null (unpaid pot payouts sort last and remain continuable; a null
+  // donor stat continues the leaderboard). Account/pot ids cannot contain
+  // ',' (NEAR account grammar), so the join is unambiguous; a one-key
+  // cursor is the whole value. Decoding follows each key's declared type.
   private[queries] def tsCursor(t: java.sql.Timestamp): String =
     (Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L).toString
   private[queries] def cursorTs(s: String): Option[java.sql.Timestamp] =
@@ -1024,40 +956,50 @@ object QueryServer {
       t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
       t
     }
-  private[queries] def afterString(s: String): Option[String] = Some(s)
-  private[queries] def afterLong(s: String): Option[Long] = s.toLongOption
-  private[queries] def afterTsLong(
-      s: String): Option[(java.sql.Timestamp, Long)] =
-    s.split(",", -1) match {
-      case Array(a, b) =>
-        for { ts <- cursorTs(a); id <- b.toLongOption } yield (ts, id)
-      case _ => None
+
+  /** The cursor of row `last`: its `keys` values. */
+  private[queries] def encodeCursor(keys: Seq[QueryService.Key],
+      last: org.apache.spark.sql.Row): String =
+    keys.map { k =>
+      last.getAs[Any](k.name) match {
+        case null => "null"
+        case t: java.sql.Timestamp => tsCursor(t)
+        case v => String.valueOf(v)
+      }
+    }.mkString(",")
+
+  /** The sort-key values of a non-empty cursor, None when it is not one
+    * value per key of the key's type. */
+  private[queries] def decodeCursor(keys: Seq[QueryService.Key],
+      s: String): Option[Seq[Any]] = {
+    val parts = if (keys.length == 1) Seq(s) else s.split(",", -1).toSeq
+    if (parts.length != keys.length) None
+    else parts.zip(keys).foldRight(Option(List.empty[Any])) {
+      case ((p, k), rest) => for (v <- decodeKey(k.tpe, p); vs <- rest) yield v :: vs
     }
-  private[queries] def afterDecString(
-      s: String): Option[(java.math.BigDecimal, String)] =
-    s.split(",", -1) match {
-      case Array(a, b) if b.nonEmpty =>
-        if (a == "null") Some((null, b))
-        else scala.util.Try(new java.math.BigDecimal(a)).toOption
-          // Bounds checked BEFORE setScale: rescaling a huge-negative-
-          // scale cursor (?after=1e20000000,x) would compute a 10^N
-          // BigInteger first — seconds of CPU per 10-char request, an
-          // attacker-priced allocation. scale ≤ 2 (no extra fractional
-          // digits to round away) and ≤ 18 integer digits keep the
-          // rescaled value inside the stat column's decimal(20,2), so
-          // the setScale below is a cheap exact widening and Catalyst's
-          // lit() can never throw. Engine-issued cursors (toString of a
-          // (20,2) value) always pass.
-          .filter(bd => bd.scale <= 2 && bd.precision - bd.scale <= 18)
-          .map(bd => (bd.setScale(2), b))
-      case _ => None
-    }
-  private[queries] def afterTsString(
-      s: String): Option[(java.sql.Timestamp, String)] =
-    s.split(",", -1) match {
-      case Array(a, b) if b.nonEmpty => cursorTs(a).map((_, b))
-      case _ => None
-    }
+  }
+
+  private def decodeKey(tpe: org.apache.spark.sql.types.DataType,
+      s: String): Option[Any] = tpe match {
+    case org.apache.spark.sql.types.TimestampType => cursorTs(s)
+    case org.apache.spark.sql.types.LongType => s.toLongOption
+    case d: org.apache.spark.sql.types.DecimalType =>
+      if (s == "null") Some(null)
+      else scala.util.Try(new java.math.BigDecimal(s)).toOption
+        // Bounds checked BEFORE setScale: rescaling a huge-negative-
+        // scale cursor (?after=1e20000000,x) would compute a 10^N
+        // BigInteger first — seconds of CPU per 10-char request, an
+        // attacker-priced allocation. No more fractional digits than the
+        // column's scale (none to round away) and no more integer digits
+        // than its precision leaves keep the rescaled value inside the
+        // column's decimal type, so the setScale below is a cheap exact
+        // widening and Catalyst's lit() can never throw. Engine-issued
+        // cursors (toString of a column value) always pass.
+        .filter(bd => bd.scale <= d.scale &&
+          bd.precision - bd.scale <= d.precision - d.scale)
+        .map(_.setScale(d.scale))
+    case _ => Some(s).filter(_.nonEmpty)
+  }
 
   /** The physical table a serving read of `name` actually touches —
     * ONE definition shared by the loader and its memo, so the memo can

@@ -2,13 +2,17 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StringType,
+  TimestampType}
 
 import graft.ingest.Schemas
 import graft.operators.Relational
 
 /** The read-side query plane: every REST route of the reference
   * (api/urls.py:37-132, SURVEY §2.11) as a DataFrame query with the same
-  * filter → join → sort → paginate → nested-serialize shape.
+  * filter → join → sort → paginate → nested-serialize shape. Each list
+  * route is one [[QueryService.Listing]] (its `…Listing` method); the
+  * page-number method beside it is that listing's [[Listing.page]].
   *
   * Pagination envelope matches the reference
   * ({count, next, previous, results}; api/pagination.py:8-24, default page
@@ -83,6 +87,35 @@ object QueryService {
     def toJsonRows(): Array[String] = results.toJSON.collect()
   }
 
+  /** One sort key of a list route: a column, its declared type (the
+    * keyset cursor codec reads it, QueryServer.decodeCursor) and its
+    * direction. A bare `desc` is desc_nulls_last, the null placement
+    * keysetSlice's continuation predicate assumes. */
+  final case class Key(name: String, tpe: DataType, asc: Boolean = true) {
+    def order: Column = if (asc) col(name).asc else col(name).desc
+  }
+
+  /** One list route, declared once: its rows (filter, joins), its sort
+    * keys (a total order, unique tie-break last), how a page-number
+    * request prices its count and slices its page, and, on routes that
+    * validate a status enum, the reference's 400 message for an invalid
+    * one. Both paginations run off this one value, so a keyset walk
+    * enumerates exactly the offset pages:
+    *  - [[page]]: `page`/`page_size`, the reference's envelope;
+    *  - [[after]]: the keyset continuation past `cursor`, the previous
+    *    page's last sort-key values (None = the first page).
+    * Building a Listing runs no Spark job and plans nothing; the rows are
+    * built by the first page or continuation asked of it. Callers check
+    * [[invalid]] first: an invalid status filter matches no rows. */
+  final class Listing private[queries] (val keys: Seq[Key],
+      val invalid: Option[String],
+      pageOf: (Int, Int) => Page,
+      afterOf: (Option[Seq[Any]], Int) => DataFrame) {
+    def page(page: Int, pageSize: Int): Page = pageOf(page, pageSize)
+    def after(cursor: Option[Seq[Any]], pageSize: Int): DataFrame =
+      afterOf(cursor, pageSize)
+  }
+
   /** The reference's 400 enum-validation message, byte-for-byte
     * (`{"message": f"Invalid status value: {status_param}"}` —
     * accounts/api.py:267,438; lists/api.py:154,211). Rendered through
@@ -110,7 +143,7 @@ object QueryService {
 }
 
 final class QueryService(t0: String => DataFrame) {
-  import QueryService.{DefaultPageSize, Page}
+  import QueryService.{DefaultPageSize, Key, Listing, Page}
 
   /** Table loader, hardened against physical-layout leakage: the silver
     * store's synthetic partition columns (__pdate/__pbucket) are dropped
@@ -123,8 +156,41 @@ final class QueryService(t0: String => DataFrame) {
       .fold(df)(df.drop)
   }
 
-  private def paginate(df: DataFrame, order: Seq[Column], page: Int, pageSize: Int): Page =
-    paginateWith(df, order, page, pageSize, df.count())
+  /** A route's page-number strategy over its rows and their order. */
+  private type PageOf = (DataFrame, Seq[Column], Int, Int) => Page
+
+  /** The [[Listing]] of `rows` sorted by `keys`. `pageOf` is the route's
+    * page-number strategy, by default [[paginateWith]] priced by the rows'
+    * own count; `expand` runs on each keyset page (the donation routes'
+    * post-slice embeds). */
+  private def listing(keys: Key*)(rows: => DataFrame,
+      pageOf: PageOf = (df, order, page, size) =>
+        paginateWith(df, order, page, size, df.count()),
+      expand: DataFrame => DataFrame = identity,
+      invalid: Option[String] = None): Listing = {
+    lazy val df = rows
+    new Listing(keys, invalid,
+      (page, size) => pageOf(df, keys.map(_.order), page, size),
+      (after, size) => expand(Relational.keysetSlice(df,
+        keys.map(k => (col(k.name), k.asc)), after, size)))
+  }
+
+  /** [[paginateWith]] priced by `count` instead of the rows' own count. */
+  private def countedBy(count: => Long): PageOf =
+    (df, order, page, size) => paginateWith(df, order, page, size, count)
+
+  /** The reference's 400 message for a status outside the route's enum. */
+  private def badStatus(status: Option[String],
+      allowed: Seq[String]): Option[String] =
+    status.filterNot(allowed.contains).map(QueryService.invalidStatusMessage)
+
+  private def byStatus(df: DataFrame, status: Option[String]): DataFrame =
+    status.fold(df)(s => df.filter(col("status") === s))
+
+  /** A status-validated route's page: Left(its 400 message) on a bad enum. */
+  private def checkedPage(l: Listing, page: Int,
+      pageSize: Int): Either[String, Page] =
+    l.invalid.toLeft(l.page(page, pageSize))
 
   /** Count job ∥ slice+materialize — the donation routes' request shape
     * (paginateDonations) extended to every paginate route: the envelope
@@ -591,13 +657,14 @@ final class QueryService(t0: String => DataFrame) {
 
   // Donation routes never expand pre-slice anymore: filters hit the raw
   // donor-bucketed scan, the slice bounds the rows, and embeds run only
-  // on the surviving page (paginateDonations / donationKeyset /
+  // on the surviving page (paginateDonations / donationListing /
   // expandDonationPage below) — the expanded struct's id IS the raw FK
   // by construction, so raw-column filtering is semantically identical
   // to filtering the struct field after expansion.
 
-  private val donationOrder =
-    Seq(col("donated_at").desc, col("on_chain_id").asc)
+  private val donationKeys =
+    Seq(Key("donated_at", TimestampType, asc = false), Key("on_chain_id", LongType))
+  private val donationOrder = donationKeys.map(_.order)
 
   /** Embed expansion for a BOUNDED page of donation rows: account
     * embeds through [[expandAccountBounded]] (dim pruned to the page's
@@ -680,10 +747,8 @@ final class QueryService(t0: String => DataFrame) {
     *    ≤ pageSize surviving rows — so the dimension joins never see
     *    the fact table, and the account dim is never broadcast
     *    unbounded (the 100 TB OOM the pre-slice expansion would hit). */
-  private def paginateDonations(pre: DataFrame => DataFrame,
-      page: Int, pageSize: Int,
-      countOverride: => Option[Long] = None): Page = {
-    val raw = pre(donations)
+  private def paginateDonations(raw: DataFrame, page: Int, pageSize: Int,
+      countOverride: => Option[Long]): Page = {
     // countOverride (BY-NAME): the serving tier can price the envelope
     // count from the gold counter states (recv_pairs/donor_state/
     // pot_state) instead of a per-request count job — at 100 TB the
@@ -727,14 +792,15 @@ final class QueryService(t0: String => DataFrame) {
     Page(Await.result(fCount, Duration.Inf), pg, pageSize, results)
   }
 
-  /** Keyset donation route body: continuation slice on the raw facts,
-    * embeds on the surviving page (same contract as
-    * [[paginateDonations]]). */
-  private def donationKeyset(pre: DataFrame => DataFrame,
-      after: Option[Seq[Any]], pageSize: Int): DataFrame =
-    expandDonationPage(Relational.keysetSlice(pre(donations),
-      Seq((col("donated_at"), false), (col("on_chain_id"), true)),
-      after, pageSize))
+  /** A donation route's listing: the facts matching `filter`, both
+    * paginations slicing the raw facts and embedding only the surviving
+    * page ([[paginateDonations]]; the keyset page through
+    * [[expandDonationPage]]). */
+  private def donationListing(filter: Column,
+      countOverride: => Option[Long]): Listing =
+    listing(donationKeys: _*)(donations.filter(filter),
+      (raw, _, page, size) => paginateDonations(raw, page, size, countOverride),
+      expandDonationPage)
 
   /** List embed for registration rows (ListRegistrationSerializer
     * declares `list = ListSerializer()`, lists/serializers.py:52): the
@@ -849,27 +915,12 @@ final class QueryService(t0: String => DataFrame) {
     * accountDim), never raw silver columns: the raw frame carries ingest
     * seq columns that must not leak into API JSON, and the reference
     * guarantees the four stat fields on every account row
-    * (accounts/serializers.py:55-66). */
+    * (accounts/serializers.py:55-66). Its keyset form is the 100 TB
+    * pagination path: a pushed-down range predicate plus
+    * TakeOrderedAndProject instead of an offset scan. */
+  def accountsListing: Listing = listing(Key("id", StringType))(accountDim)
   def accountsList(page: Int = 1, pageSize: Int = DefaultPageSize): Page =
-    paginate(accountDim, Seq(col("id").asc), page, pageSize)
-
-  /** GET /v1/accounts, keyset variant (?after=<last id>): the 100 TB
-    * pagination path — same rows as the page-number form, but the
-    * continuation is a pushed-down range predicate plus
-    * TakeOrderedAndProject instead of a global row_number window; the
-    * `count` field comes from gold cached counts at scale
-    * (SURVEY §7.4-6). */
-  def accountsListKeyset(after: Option[String],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    Relational.keysetSlice(accountDim, Seq((col("id"), true)),
-      after.map(Seq(_)), pageSize)
-
-  /** Keyset form of a donations feed (donated_at DESC, on_chain_id ASC
-    * tie-break) — shows the multi-key descending continuation. */
-  def donationsFeedKeyset(after: Option[(java.sql.Timestamp, Long)],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    donationKeyset(identity,
-      after.map { case (ts, id) => Seq(ts, id) }, pageSize)
+    accountsListing.page(page, pageSize)
 
   /** GET /v1/accounts/{id} (accounts/api.py:126-160): one
     * AccountSerializer-shaped row. */
@@ -878,171 +929,112 @@ final class QueryService(t0: String => DataFrame) {
 
   /** GET /v1/accounts/{id}/active_pots [?status=live]
     * (accounts/api.py:163-217): approved applications → pots, optional
-    * live-interval filter (J3 + P6). */
+    * live-interval filter (J3 + P6). Page-number only at the serving
+    * tier: rows filtered on request-time liveness have no cursor that
+    * stays valid across requests. */
+  def accountActivePotsListing(id: String, live: Boolean,
+      now: java.sql.Timestamp): Listing =
+    listing(Key("account", StringType)) {
+      val approvedPots = t("pot_applications")
+        .filter(col("applicant") === id && col("status") === "Approved")
+        .select(col("pot").as("account"))
+      val p = potDim
+      val base = Relational.semiJoin(p, approvedPots,
+        p("account") === approvedPots("account"))
+      if (live)
+        base.filter(col("matching_round_start") <= lit(now) &&
+          col("matching_round_end") >= lit(now))
+      else base
+    }
   def accountActivePots(id: String, live: Boolean,
-      now: java.sql.Timestamp, page: Int = 1, pageSize: Int = DefaultPageSize): Page = {
-    val approvedPots = t("pot_applications")
-      .filter(col("applicant") === id && col("status") === "Approved")
-      .select(col("pot").as("account"))
-    val p = potDim
-    val base = Relational.semiJoin(p, approvedPots,
-      p("account") === approvedPots("account"))
-    val filtered = if (live)
-      base.filter(col("matching_round_start") <= lit(now) &&
-        col("matching_round_end") >= lit(now))
-    else base
-    paginate(filtered, Seq(col("account").asc), page, pageSize)
-  }
+      now: java.sql.Timestamp, page: Int = 1, pageSize: Int = DefaultPageSize): Page =
+    accountActivePotsListing(id, live, now).page(page, pageSize)
 
   /** GET /v1/accounts/{id}/pot_applications [?status]
     * (accounts/api.py:220-272): P3 enum validation then filter. */
+  def accountPotApplicationsListing(id: String, status: Option[String]): Listing =
+    listing(Key("submitted_at", TimestampType, asc = false), Key("pot", StringType))(
+      byStatus(t("pot_applications").filter(col("applicant") === id), status),
+      invalid = badStatus(status, Schemas.applicationStatuses))
   def accountPotApplications(id: String, status: Option[String],
       page: Int = 1, pageSize: Int = DefaultPageSize): Either[String, Page] =
-    status.filterNot(Schemas.applicationStatuses.contains) match {
-      case Some(bad) => Left(QueryService.invalidStatusMessage(bad))
-      case None =>
-        val base = t("pot_applications").filter(col("applicant") === id)
-        val f = status.map(s => base.filter(col("status") === s)).getOrElse(base)
-        Right(paginate(f, Seq(col("submitted_at").desc, col("pot").asc), page, pageSize))
-    }
-
-  /** Keyset form of [[accountPotApplications]]
-    * (?after=<submitted_at,pot>). */
-  def accountPotApplicationsKeyset(id: String, status: Option[String],
-      after: Option[(java.sql.Timestamp, String)],
-      pageSize: Int = DefaultPageSize): Either[String, DataFrame] =
-    status.filterNot(Schemas.applicationStatuses.contains) match {
-      case Some(bad) => Left(QueryService.invalidStatusMessage(bad))
-      case None =>
-        val base = t("pot_applications").filter(col("applicant") === id)
-        val f = status.map(s => base.filter(col("status") === s)).getOrElse(base)
-        Right(Relational.keysetSlice(f,
-          Seq((col("submitted_at"), false), (col("pot"), true)),
-          after.map { case (ts, p) => Seq(ts, p) }, pageSize))
-    }
+    checkedPage(accountPotApplicationsListing(id, status), page, pageSize)
 
   /** GET /v1/accounts/{id}/donations_received (accounts/api.py:275-313). */
+  def accountDonationsReceivedListing(id: String,
+      countOverride: => Option[Long] = None): Listing =
+    donationListing(col("recipient") === id, countOverride)
   def accountDonationsReceived(id: String, page: Int = 1,
       pageSize: Int = DefaultPageSize,
       countOverride: => Option[Long] = None): Page =
-    paginateDonations(_.filter(col("recipient") === id), page, pageSize,
-      countOverride)
-
-  /** Keyset form of [[accountDonationsReceived]]
-    * (?after=<donated_at,on_chain_id>). */
-  def accountDonationsReceivedKeyset(id: String,
-      after: Option[(java.sql.Timestamp, Long)],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    donationKeyset(_.filter(col("recipient") === id),
-      after.map { case (ts, oid) => Seq(ts, oid) }, pageSize)
+    accountDonationsReceivedListing(id, countOverride).page(page, pageSize)
 
   /** GET /v1/accounts/{id}/donations_sent (accounts/api.py:316-354). */
+  def accountDonationsSentListing(id: String,
+      countOverride: => Option[Long] = None): Listing =
+    donationListing(col("donor") === id, countOverride)
   def accountDonationsSent(id: String, page: Int = 1,
       pageSize: Int = DefaultPageSize,
       countOverride: => Option[Long] = None): Page =
-    paginateDonations(_.filter(col("donor") === id), page, pageSize,
-      countOverride)
-
-  /** Keyset form of [[accountDonationsSent]]
-    * (?after=<donated_at,on_chain_id>). */
-  def accountDonationsSentKeyset(id: String,
-      after: Option[(java.sql.Timestamp, Long)],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    donationKeyset(_.filter(col("donor") === id),
-      after.map { case (ts, oid) => Seq(ts, oid) }, pageSize)
+    accountDonationsSentListing(id, countOverride).page(page, pageSize)
 
   /** GET /v1/accounts/{id}/payouts_received (accounts/api.py:357-395):
     * P4 null predicate on paid_at. */
+  def accountPayoutsReceivedListing(id: String): Listing =
+    listing(Key("paid_at", TimestampType, asc = false), Key("pot", StringType))(
+      t("pot_payouts").filter(col("recipient") === id && col("paid_at").isNotNull))
   def accountPayoutsReceived(id: String, page: Int = 1,
       pageSize: Int = DefaultPageSize): Page =
-    paginate(
-      t("pot_payouts").filter(col("recipient") === id && col("paid_at").isNotNull),
-      Seq(col("paid_at").desc, col("pot").asc), page, pageSize)
-
-  /** Keyset form of [[accountPayoutsReceived]] (?after=<paid_at,pot>). */
-  def accountPayoutsReceivedKeyset(id: String,
-      after: Option[(java.sql.Timestamp, String)],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    Relational.keysetSlice(
-      t("pot_payouts").filter(col("recipient") === id && col("paid_at").isNotNull),
-      Seq((col("paid_at"), false), (col("pot"), true)),
-      after.map { case (ts, p) => Seq(ts, p) }, pageSize)
+    accountPayoutsReceivedListing(id).page(page, pageSize)
 
   /** GET /v1/accounts/{id}/list-registrations [?status]
     * (accounts/api.py:398-443). */
+  def accountListRegistrationsListing(id: String, status: Option[String]): Listing =
+    listing(registrationKeys: _*)(
+      byStatus(t("list_registrations").filter(col("registrant") === id), status),
+      invalid = badStatus(status, Schemas.registrationStatuses))
   def accountListRegistrations(id: String, status: Option[String],
       page: Int = 1, pageSize: Int = DefaultPageSize): Either[String, Page] =
-    status.filterNot(Schemas.registrationStatuses.contains) match {
-      case Some(bad) => Left(QueryService.invalidStatusMessage(bad))
-      case None =>
-        val base = t("list_registrations").filter(col("registrant") === id)
-        val f = status.map(s => base.filter(col("status") === s)).getOrElse(base)
-        Right(paginate(f, Seq(col("submitted_at").desc, col("on_chain_id").asc),
-          page, pageSize))
-    }
+    checkedPage(accountListRegistrationsListing(id, status), page, pageSize)
 
-  /** Keyset form of [[accountListRegistrations]]
-    * (?after=<submitted_at,on_chain_id>). */
-  def accountListRegistrationsKeyset(id: String, status: Option[String],
-      after: Option[(java.sql.Timestamp, Long)],
-      pageSize: Int = DefaultPageSize): Either[String, DataFrame] =
-    status.filterNot(Schemas.registrationStatuses.contains) match {
-      case Some(bad) => Left(QueryService.invalidStatusMessage(bad))
-      case None =>
-        val base = t("list_registrations").filter(col("registrant") === id)
-        val f = status.map(s => base.filter(col("status") === s)).getOrElse(base)
-        Right(Relational.keysetSlice(f,
-          Seq((col("submitted_at"), false), (col("on_chain_id"), true)),
-          after.map { case (ts, oid) => Seq(ts, oid) }, pageSize))
-    }
-
-  /** Shared base of the two donors forms: accounts with ≥1 outgoing
-    * donation (J2 semi-join). accountDim already carries
-    * total_donations_out_usd (null-typed when the gold table has not
-    * been built yet — the route must not 500 on a fresh deployment
-    * where the beat has never run). ONE definition of rows and sort
-    * keys, so the keyset walk can never desynchronize from the offset
-    * pages it must enumerate identically. */
-  private def donorRows: DataFrame = {
-    val a = accountDim
-    val d = donations
-    Relational.semiJoin(a, d, a("id") === d("donor"))
-  }
-  private def donorOrderKeys(sortMostDonated: Boolean): Seq[(Column, Boolean)] =
-    if (sortMostDonated)
-      Seq((col("total_donations_out_usd"), false), (col("id"), true))
-    else Seq((col("id"), true))
+  private val registrationKeys =
+    Seq(Key("submitted_at", TimestampType, asc = false), Key("on_chain_id", LongType))
 
   /** GET /v1/donors [?sort=most_donated_usd] (accounts/api.py:50-92):
-    * J2 semi-join + optional O2 sort over the gold account_stats. */
+    * J2 semi-join (accounts with ≥1 outgoing donation) + optional O2
+    * sort over the gold account_stats. accountDim already carries
+    * total_donations_out_usd (null-typed when the gold table has not been
+    * built yet — the route must not 500 on a fresh deployment where the
+    * beat has never run). The keyset form is the leaderboard deep-walk:
+    * its stat cursor is stable BETWEEN gold beats exactly as the offset
+    * pages' frontiers are — a refresh mid-walk can shift the frontier
+    * either way; the reference's offset pages carry the same anomaly.
+    * `countOverride`: same contract as the donation routes — the serving
+    * tier can price the envelope count from gold (global_stats
+    * total_donors_count) instead of a per-request semi-join count. The
+    * page slice stays lazy: its zero-exchange bucketed plan is a pinned
+    * artifact (BucketedSilverSpec). */
+  def donorsListing(sortMostDonated: Boolean,
+      countOverride: => Option[Long] = None): Listing = {
+    val id = Key("id", StringType)
+    val keys =
+      if (sortMostDonated)
+        Seq(Key("total_donations_out_usd", DecimalType(20, 2), asc = false), id)
+      else Seq(id)
+    listing(keys: _*)({
+      val a = accountDim
+      val d = donations
+      Relational.semiJoin(a, d, a("id") === d("donor"))
+    }, (rows, order, page, size) => {
+      val c = countOverride.getOrElse(rows.count())
+      val pg = QueryService.resolveLast(c, page, size)
+      Page(c, pg, size, sliceOrEmpty(rows, order, pg, size))
+    })
+  }
   def donors(sortMostDonated: Boolean, page: Int = 1,
       pageSize: Int = DefaultPageSize,
-      countOverride: => Option[Long] = None): Page = {
-    val withStats = donorRows
-    // Spark's bare desc ≡ desc_nulls_last — the same null placement
-    // keysetSlice's continuation predicate assumes.
-    val order = donorOrderKeys(sortMostDonated).map {
-      case (c, asc) => if (asc) c.asc else c.desc
-    }
-    // countOverride: same contract as the donation routes — the serving
-    // tier can price the envelope count from gold (global_stats
-    // total_donors_count) instead of a per-request semi-join count.
-    val c = countOverride.getOrElse(withStats.count())
-    val pg = QueryService.resolveLast(c, page, pageSize)
-    Page(c, pg, pageSize, sliceOrEmpty(withStats, order, pg, pageSize))
-  }
-
-  /** Keyset form of [[donors]] — the leaderboard deep-walk. Cursor is
-    * `(total_donations_out_usd, id)` under ?sort=most_donated_usd (the
-    * derived stat leads, null stat cursors continue correctly), plain
-    * `id` otherwise. The stat cursor is stable BETWEEN gold beats
-    * exactly as the offset variant's page frontiers are — a refresh
-    * mid-walk can shift the frontier either way; the reference's offset
-    * pages carry the same anomaly. */
-  def donorsKeyset(sortMostDonated: Boolean, after: Option[Seq[Any]],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    Relational.keysetSlice(donorRows, donorOrderKeys(sortMostDonated),
-      after, pageSize)
+      countOverride: => Option[Long] = None): Page =
+    donorsListing(sortMostDonated, countOverride).page(page, pageSize)
 
   // ---------------------------------------------------- lists routes
 
@@ -1072,68 +1064,43 @@ final class QueryService(t0: String => DataFrame) {
   /** GET /v1/lists (lists/api.py:33-61): ListSerializer shape — count on
     * the raw lists table, slice over [[listDim]] (key-unique LEFT joins
     * only, the potsList contract). */
+  def listsListing: Listing =
+    listing(Key("on_chain_id", LongType))(listDim, countedBy(t("lists").count()))
   def listsList(page: Int = 1, pageSize: Int = DefaultPageSize): Page =
-    paginateWith(listDim, Seq(col("on_chain_id").asc), page, pageSize,
-      t("lists").count())
-
-  /** Keyset form of [[listsList]] (?after=<last on_chain_id>). */
-  def listsListKeyset(after: Option[Long],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    Relational.keysetSlice(listDim, Seq((col("on_chain_id"), true)),
-      after.map(Seq(_)), pageSize)
+    listsListing.page(page, pageSize)
 
   /** GET /v1/lists/{id} (lists/api.py:64-98). */
   def listDetail(id: Long): DataFrame =
     listDim.filter(col("on_chain_id") === id)
 
   /** GET /v1/lists/{id}/registrations [?status][?category]
-    * (lists/api.py:101-164): P3 enum validation + P7 regex-over-JSON
-    * through the registrant join. */
+    * (lists/api.py:101-164): P3 enum validation, list scoping, status
+    * filter, and the P7 category iregex over the registrant's social
+    * profile. */
+  def listRegistrationsListing(listId: Long, status: Option[String],
+      category: Option[String]): Listing =
+    listing(registrationKeys: _*)({
+      val st = byStatus(
+        t("list_registrations").filter(col("list_id") === listId), status)
+      category match {
+        case Some(c) =>
+          // registrant.near_social_profile_data.plCategories iregex
+          // '\[.*?"{cat}".*?\]' (lists/api.py:157-161)
+          val joined = st.join(
+            broadcast(accounts.select(col("id").as("__rid"),
+              col("near_social_profile_data"))),
+            col("registrant") === col("__rid"), "left")
+          joined.filter(regexp_like(
+            get_json_object(col("near_social_profile_data"), "$.plCategories"),
+            lit("(?i)\\[.*?\"" + java.util.regex.Pattern.quote(c) + "\".*?\\]")))
+            .drop("__rid", "near_social_profile_data")
+        case None => st
+      }
+    }, invalid = badStatus(status, Schemas.registrationStatuses))
   def listRegistrations(listId: Long, status: Option[String],
       category: Option[String], page: Int = 1,
       pageSize: Int = DefaultPageSize): Either[String, Page] =
-    listRegistrationsFiltered(listId, status, category).map(cat =>
-      paginate(cat, Seq(col("submitted_at").desc, col("on_chain_id").asc),
-        page, pageSize))
-
-  /** Keyset form of [[listRegistrations]] (?after=<submitted_at,on_chain_id
-    * of the previous page's last row>) — same rows, same order, but the
-    * continuation is a pushed-down predicate + TakeOrderedAndProject
-    * instead of the offset scan. */
-  def listRegistrationsKeyset(listId: Long, status: Option[String],
-      category: Option[String], after: Option[(java.sql.Timestamp, Long)],
-      pageSize: Int = DefaultPageSize): Either[String, DataFrame] =
-    listRegistrationsFiltered(listId, status, category).map(cat =>
-      Relational.keysetSlice(cat,
-        Seq((col("submitted_at"), false), (col("on_chain_id"), true)),
-        after.map { case (ts, id) => Seq(ts, id) }, pageSize))
-
-  /** Shared filter chain of the two listRegistrations forms: enum
-    * validation, list scoping, status filter, category iregex over the
-    * registrant's social profile. */
-  private def listRegistrationsFiltered(listId: Long, status: Option[String],
-      category: Option[String]): Either[String, DataFrame] =
-    status.filterNot(Schemas.registrationStatuses.contains) match {
-      case Some(bad) => Left(QueryService.invalidStatusMessage(bad))
-      case None =>
-        val base = t("list_registrations").filter(col("list_id") === listId)
-        val st = status.map(s => base.filter(col("status") === s)).getOrElse(base)
-        val cat = category match {
-          case Some(c) =>
-            // registrant.near_social_profile_data.plCategories iregex
-            // '\[.*?"{cat}".*?\]' (lists/api.py:157-161)
-            val joined = st.join(
-              broadcast(accounts.select(col("id").as("__rid"),
-                col("near_social_profile_data"))),
-              col("registrant") === col("__rid"), "left")
-            joined.filter(regexp_like(
-              get_json_object(col("near_social_profile_data"), "$.plCategories"),
-              lit("(?i)\\[.*?\"" + java.util.regex.Pattern.quote(c) + "\".*?\\]")))
-              .drop("__rid", "near_social_profile_data")
-          case None => st
-        }
-        Right(cat)
-    }
+    checkedPage(listRegistrationsListing(listId, status, category), page, pageSize)
 
   /** GET /v1/lists/{id}/random_registration [?status]
     * (lists/api.py:167-225): O5 — deterministic seeded pick (rand() in the
@@ -1143,34 +1110,24 @@ final class QueryService(t0: String => DataFrame) {
     * returning an empty pick. */
   def randomRegistration(listId: Long,
       status: Option[String]): Either[String, DataFrame] =
-    status.filterNot(Schemas.registrationStatuses.contains) match {
-      case Some(bad) => Left(QueryService.invalidStatusMessage(bad))
-      case None =>
-        val base = t("list_registrations").filter(col("list_id") === listId)
-        val f = status.map(s => base.filter(col("status") === s)).getOrElse(base)
-        Right(f.orderBy(
-          md5(col("on_chain_id").cast("string").cast("binary")).asc,
+    badStatus(status, Schemas.registrationStatuses).toLeft(
+      byStatus(t("list_registrations").filter(col("list_id") === listId), status)
+        .orderBy(md5(col("on_chain_id").cast("string").cast("binary")).asc,
           col("on_chain_id").asc).limit(1))
-    }
 
   // ---------------------------------------------------- pots routes
 
   /** GET /v1/pots (pots/api.py:48-75): PotSerializer shape — account
     * objects embedded for deployer/owner/chef/admins
-    * (pots/serializers.py:55-58). */
+    * (pots/serializers.py:55-58). Count on the raw pots table: potDim
+    * only adds key-unique LEFT joins (gold stats by account;
+    * deployer/owner/chef account embeds by id) — same
+    * count-before-serialize contract as the donation routes
+    * (paginateDonations). */
+  def potsListing: Listing =
+    listing(Key("account", StringType))(potDim, countedBy(pots.count()))
   def potsList(page: Int = 1, pageSize: Int = DefaultPageSize): Page =
-    // Count on the raw pots table: potDim only adds key-unique LEFT
-    // joins (gold stats by account; deployer/owner/chef account embeds
-    // by id) — same count-before-serialize contract as the donation
-    // routes (paginateDonations).
-    paginateWith(potDim, Seq(col("account").asc), page, pageSize,
-      pots.count())
-
-  /** Keyset form of [[potsList]] (?after=<last account id>). */
-  def potsListKeyset(after: Option[String],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    Relational.keysetSlice(potDim, Seq((col("account"), true)),
-      after.map(Seq(_)), pageSize)
+    potsListing.page(page, pageSize)
 
   /** Pot-factory dimension in full PotFactorySerializer shape and field
     * order (pots/serializers.py:61-80): owner/protocol_fee_recipient
@@ -1199,90 +1156,56 @@ final class QueryService(t0: String => DataFrame) {
 
   /** GET /v1/potfactories (pots/api.py:78-105): PotFactorySerializer
     * shape — count on the raw table, slice over [[potFactoryDim]]. */
+  def potFactoriesListing: Listing =
+    listing(Key("account", StringType))(potFactoryDim,
+      countedBy(t("pot_factories").count()))
   def potFactoriesList(page: Int = 1, pageSize: Int = DefaultPageSize): Page =
-    paginateWith(potFactoryDim, Seq(col("account").asc), page, pageSize,
-      t("pot_factories").count())
-
-  /** Keyset form of [[potFactoriesList]] (?after=<last account id>). */
-  def potFactoriesListKeyset(after: Option[String],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    Relational.keysetSlice(potFactoryDim, Seq((col("account"), true)),
-      after.map(Seq(_)), pageSize)
+    potFactoriesListing.page(page, pageSize)
 
   /** GET /v1/pots/{id} (pots/api.py:108-139). */
   def potDetail(id: String): DataFrame =
     potDim.filter(col("account") === id)
 
   /** GET /v1/pots/{id}/applications (pots/api.py:142-177). */
+  def potApplicationsListing(potId: String): Listing =
+    listing(Key("submitted_at", TimestampType, asc = false), Key("applicant", StringType))(
+      t("pot_applications").filter(col("pot") === potId))
   def potApplications(potId: String, page: Int = 1,
       pageSize: Int = DefaultPageSize): Page =
-    paginate(t("pot_applications").filter(col("pot") === potId),
-      Seq(col("submitted_at").desc, col("applicant").asc), page, pageSize)
-
-  /** Keyset form of [[potApplications]]
-    * (?after=<submitted_at,applicant>). */
-  def potApplicationsKeyset(potId: String,
-      after: Option[(java.sql.Timestamp, String)],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    Relational.keysetSlice(t("pot_applications").filter(col("pot") === potId),
-      Seq((col("submitted_at"), false), (col("applicant"), true)),
-      after.map { case (ts, a) => Seq(ts, a) }, pageSize)
+    potApplicationsListing(potId).page(page, pageSize)
 
   /** GET /v1/pots/{id}/donations (pots/api.py:180-215). */
+  def potDonationsListing(potId: String,
+      countOverride: => Option[Long] = None): Listing =
+    donationListing(col("pot") === potId, countOverride)
   def potDonations(potId: String, page: Int = 1,
       pageSize: Int = DefaultPageSize,
       countOverride: => Option[Long] = None): Page =
-    paginateDonations(_.filter(col("pot") === potId), page, pageSize,
-      countOverride)
-
-  /** Keyset form of [[potDonations]] (?after=<donated_at,on_chain_id>). */
-  def potDonationsKeyset(potId: String,
-      after: Option[(java.sql.Timestamp, Long)],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    donationKeyset(_.filter(col("pot") === potId),
-      after.map { case (ts, id) => Seq(ts, id) }, pageSize)
+    potDonationsListing(potId, countOverride).page(page, pageSize)
 
   /** GET /v1/pots/{id}/sponsors (pots/api.py:218-258): J4 distinct
     * matching-pool donors → accounts. */
+  def potSponsorsListing(potId: String): Listing =
+    listing(Key("id", StringType)) {
+      val sponsorIds = donations
+        .filter(col("pot") === potId && col("matching_pool"))
+        .select(col("donor")).distinct()
+      val a = accountDim
+      Relational.semiJoin(a, sponsorIds, a("id") === sponsorIds("donor"))
+    }
   def potSponsors(potId: String, page: Int = 1,
-      pageSize: Int = DefaultPageSize): Page = {
-    val sponsorIds = donations
-      .filter(col("pot") === potId && col("matching_pool"))
-      .select(col("donor")).distinct()
-    val a = accountDim
-    paginate(
-      Relational.semiJoin(a, sponsorIds, a("id") === sponsorIds("donor")),
-      Seq(col("id").asc), page, pageSize)
-  }
+      pageSize: Int = DefaultPageSize): Page =
+    potSponsorsListing(potId).page(page, pageSize)
 
-  /** Keyset form of [[potSponsors]] (?after=<last account id>). */
-  def potSponsorsKeyset(potId: String, after: Option[String],
-      pageSize: Int = DefaultPageSize): DataFrame = {
-    val sponsorIds = donations
-      .filter(col("pot") === potId && col("matching_pool"))
-      .select(col("donor")).distinct()
-    val a = accountDim
-    Relational.keysetSlice(
-      Relational.semiJoin(a, sponsorIds, a("id") === sponsorIds("donor")),
-      Seq((col("id"), true)), after.map(Seq(_)), pageSize)
-  }
-
-  /** GET /v1/pots/{id}/payouts (pots/api.py:261-296). */
+  /** GET /v1/pots/{id}/payouts (pots/api.py:261-296). A null paid_at
+    * continues correctly through keysetSlice's null-aware lexicographic
+    * predicate — unpaid payouts sort last on the descending key. */
+  def potPayoutsListing(potId: String): Listing =
+    listing(Key("paid_at", TimestampType, asc = false), Key("recipient", StringType))(
+      t("pot_payouts").filter(col("pot") === potId))
   def potPayouts(potId: String, page: Int = 1,
       pageSize: Int = DefaultPageSize): Page =
-    paginate(t("pot_payouts").filter(col("pot") === potId),
-      Seq(col("paid_at").desc_nulls_last, col("recipient").asc), page, pageSize)
-
-  /** Keyset form of [[potPayouts]] (?after=<paid_at,recipient>; a null
-    * paid_at in `after` continues correctly through keysetSlice's
-    * null-aware lexicographic predicate — unpaid payouts sort last on
-    * the descending key). */
-  def potPayoutsKeyset(potId: String,
-      after: Option[(java.sql.Timestamp, String)],
-      pageSize: Int = DefaultPageSize): DataFrame =
-    Relational.keysetSlice(t("pot_payouts").filter(col("pot") === potId),
-      Seq((col("paid_at"), false), (col("recipient"), true)),
-      after.map { case (ts, r) => Seq(ts, r) }, pageSize)
+    potPayoutsListing(potId).page(page, pageSize)
 
   // ---------------------------------------------------- misc routes
 
@@ -1314,8 +1237,4 @@ final class QueryService(t0: String => DataFrame) {
   /** GET /v1/stats (base/api.py:29-89): reads the gold global_stats table
     * (A1), refreshed by gold.Stats. */
   def stats(): DataFrame = t("global_stats")
-
-  /** GET /api/schema (api/urls.py:38-47): the OpenAPI 3 document for this
-    * surface, generated from the route table. */
-  def openApiSchema(): String = OpenApi.schemaJson
 }

@@ -20,8 +20,7 @@ package graft.queries
   *    returns "" for it and such routes refresh only at TTL.
   *
   * A marker ROTATION on an entry still inside TTL serves
-  * STALE-WHILE-REVALIDATE (when enabled, the production default): the
-  * pre-swap body goes out and a single-flight background recompute
+  * STALE-WHILE-REVALIDATE: the pre-swap body goes out and a single-flight background recompute
   * replaces it — so a beat's table swap never turns every client of the
   * route into a convoy of recomputes racing the beat's own Spark stages
   * (the round-14 soak measured that convoy at 8-39 s). Bodies lag a
@@ -46,8 +45,7 @@ package graft.queries
 final class ResultCache(
     ttlMs: Long = 5 * 60 * 1000L,
     maxEntries: Int = 4096,
-    now: () => Long = () => System.currentTimeMillis(),
-    staleWhileRevalidate: Boolean = true) {
+    now: () => Long = () => System.currentTimeMillis()) {
 
   private final case class Entry(uids: Seq[String], atMs: Long, value: AnyRef)
 
@@ -115,7 +113,7 @@ final class ResultCache(
     // mismatched fingerprint and the next request revalidates again —
     // convergent, never stale-forever.
     stale match {
-      case Some(v) if staleWhileRevalidate =>
+      case Some(v) =>
         if (inFlight.add(key)) {
           revalidationCount.incrementAndGet(): Unit
           missCount.incrementAndGet(): Unit
@@ -141,7 +139,7 @@ final class ResultCache(
           })
         } else hitCount.incrementAndGet(): Unit
         v
-      case _ =>
+      case None =>
         // Compute OUTSIDE the lock (a slow route must not serialize the
         // whole plane); a concurrent miss on the same key double-computes,
         // which is the standard cache-stampede trade at this tier.

@@ -140,6 +140,35 @@ class MergeWriterSpec extends SparkSpec {
     assert(healed.contains(s""""__swap_uid":"$markerUid""""))
   }
 
+  test("a merge after a crashed whole-table swap keeps the table's rows") {
+    // A whole-table swap that died between moving the live table aside
+    // and moving its tmp copy in leaves the live dir missing. The next
+    // merge must roll that swap forward, not take the table for a new one
+    // and rebuild it from its own batch (vacuum would then delete the
+    // aside that still held the old rows).
+    val path = tmpDir("crashed-swap") + "/t"
+    val b1 = Seq(("k1", 1L, "v1"), ("k2", 1L, "v2")).toDF("key", "seqno", "value")
+    MergeWriter.merge(spark, b1, path, Seq("key"), Seq("seqno"))
+    // SwapRecoveryRaceSpec.mkCrashedState's shape with real payloads: the
+    // live table moved aside, its successor complete under the same uid.
+    val uid = "crash1"
+    spark.read.parquet(path).write.parquet(TableSwap.tmpPath(path, uid))
+    MergeWriter.io.atomicMove(path, s"$path.old-$uid")
+    val b2 = Seq(("k3", 1L, "v3")).toDF("key", "seqno", "value")
+    assert(MergeWriter.merge(spark, b2, path, Seq("key"), Seq("seqno")) == 3)
+    assert(spark.read.parquet(path).select("key").as[String].collect().sorted
+      .toSeq == Seq("k1", "k2", "k3"))
+    assert(!Files.exists(Paths.get(s"$path.old-$uid")))
+    assert(!Files.exists(Paths.get(TableSwap.tmpPath(path, uid))))
+    // No complete payload to roll forward: the merge refuses rather than
+    // write over the only copy of the rows.
+    MergeWriter.io.atomicMove(path, s"$path.old-crash2")
+    intercept[IllegalStateException](
+      MergeWriter.merge(spark, b2, path, Seq("key"), Seq("seqno")))
+    assert(!Files.exists(Paths.get(path)))
+    assert(Files.exists(Paths.get(s"$path.old-crash2")))
+  }
+
   test("a plain merge into a bucketed-partitioned table is refused (layout-mix guard, both directions)") {
     val path = tmpDir("pbmix") + "/t"
     val b = Seq(("k1", "2024-06-01", 1L, "v1")).toDF("key", "day", "seqno", "value")

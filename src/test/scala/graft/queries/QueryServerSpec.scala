@@ -319,6 +319,119 @@ class QueryServerSpec extends SparkSpec {
     val t = new java.sql.Timestamp(1718000000123L)
     t.setNanos(123456000)
     assert(QueryServer.cursorTs(QueryServer.tsCursor(t)) == Some(t))
+
+    // Every keyset-capable route of the route table, walked at
+    // page_size=1 by following `next` from the first keyset page, serves
+    // exactly the rows of its offset pages in the same order. The
+    // fixture gives each route ≥ 2 rows, with sort-key ties and a null
+    // paid_at, so every continuation predicate runs.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types._
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    def local(df: DataFrame): DataFrame =
+      spark.createDataFrame(df.collectAsList(), df.schema)
+    val ts = (0 to 2).map(d => java.sql.Timestamp.valueOf(s"2024-06-1$d 00:00:00"))
+    val accounts = Seq("donor1.near", "donor2.near", "proj1.near")
+      .map((_, null.asInstanceOf[String])).toDF("id", "near_social_profile_data")
+    val dons = local((1 to 5).map { i =>
+      tables("donations").limit(1)
+        .withColumn("on_chain_id", lit(i.toLong))
+        .withColumn("donor", lit(if (i % 2 == 0) "donor2.near" else "donor1.near"))
+        .withColumn("pot", lit("pot1.near"))
+        .withColumn("matching_pool", lit(i <= 2))
+        .withColumn("donated_at", lit(ts(i / 2)))
+    }.reduce(_ union _))
+    val payouts = Seq(("pot1.near", "proj1.near", ts(0)),
+      ("pot1.near", "proj2.near", null.asInstanceOf[java.sql.Timestamp]),
+      ("pot1.near", "proj3.near", ts(1)), ("pot2.near", "proj1.near", ts(2)))
+      .toDF("pot", "recipient", "paid_at")
+      .withColumn("amount_paid_usd", lit(null).cast("decimal(20,2)"))
+      .withColumn("amount", lit(null).cast("string"))
+      .withColumn("ft", lit(null).cast("string"))
+      .withColumn("tx_hash", lit(null).cast("string"))
+    val rich = tables ++ Map(
+      "accounts" -> accounts,
+      "donations" -> dons,
+      "pot_payouts" -> payouts,
+      "lists" -> Seq(5L, 6L, 7L).map((_, "owner.near")).toDF("on_chain_id", "owner"),
+      "list_registrations" -> Seq((11L, "proj1.near", ts(0)),
+        (12L, "proj1.near", ts(1)), (13L, "proj2.near", ts(1)))
+        .toDF("on_chain_id", "registrant", "submitted_at")
+        .withColumn("list_id", lit(5L))
+        .withColumn("registered_by", lit("owner.near"))
+        .withColumn("status", lit("Approved"))
+        .withColumn("updated_at", col("submitted_at"))
+        .withColumn("registrant_notes", lit(null).cast("string"))
+        .withColumn("admin_notes", lit(null).cast("string"))
+        .withColumn("tx_hash", lit("txr")),
+      "pots" -> Seq("pot1.near", "pot2.near", "pot3.near")
+        .map((_, "v1.factory.near")).toDF("account", "pot_factory"),
+      "pot_applications" -> Seq(("pot1.near", "proj1.near", ts(0)),
+        ("pot1.near", "proj2.near", ts(0)), ("pot2.near", "proj1.near", ts(1)))
+        .toDF("pot", "applicant", "submitted_at")
+        .withColumn("message", lit("please"))
+        .withColumn("status", lit("Pending"))
+        .withColumn("updated_at", col("submitted_at"))
+        .withColumn("tx_hash", lit("tx1")),
+      "pot_factories" -> Seq("f1.near", "f2.near").toDF("account"),
+      "account_stats" -> Stats.accountStats(accounts, dons, payouts),
+      "global_stats" -> Stats.globalStats(dons, payouts))
+    val rqs = new QueryService(rich(_))
+    val rs = new QueryServer(rqs, silverDir)
+    val fixtureIds = Map("account" -> "proj1.near", "donor" -> "donor1.near",
+      "pot" -> "pot1.near", "list" -> "5")
+    def results(body: String) =
+      om.readTree(body).get("results").elements().asScala.toSeq
+    def get(path: String, params: Map[String, String]) = {
+      val r = rs.handle("GET", path, params)
+      assert(r.status == 200, s"$path $params -> ${r.status} ${r.body.take(200)}")
+      r.body
+    }
+    // The one-string-key cursor is the whole value (ids are free text),
+    // so no non-empty value is garbage there; every other shape 400s.
+    val garbage: Map[Seq[DataType], (String, Int)] = Map(
+      Seq(StringType) -> (("not,a,cursor", 200)),
+      Seq(LongType) -> (("abc", 400)),
+      Seq(TimestampType, LongType) -> (("1718000000000000,abc", 400)),
+      Seq(TimestampType, StringType) -> (("abc,proj1.near", 400)),
+      Seq(DecimalType(20, 2), StringType) -> (("abc,donor1.near", 400)))
+    val walked = for {
+      route <- QueryServer.routes
+      listing <- Seq(route.serves).collect { case QueryServer.Pages(l, false) => l }
+      extra <- Map.empty[String, String] +: route.query.filter(_ == "sort")
+        .map(k => Map(k -> "most_donated_usd"))
+    } yield {
+      val id = fixtureIds.getOrElse(route.warm, "")
+      val path = "/api" + route.path.replaceAll("\\{[^}]+\\}", id)
+      val shape = listing(QueryServer.Call(rqs, None, () => 0L, id, extra))
+        .keys.map(_.tpe)
+      val offset = {
+        val first = get(path, extra + ("page_size" -> "1"))
+        val n = om.readTree(first).get("count").asLong
+        results(first) ++ (2L to n).flatMap(pg =>
+          results(get(path, extra ++ Map("page_size" -> "1", "page" -> pg.toString))))
+      }
+      var url: Option[String] = Some(path + "?after=&page_size=1")
+      val keyset = scala.collection.mutable.ArrayBuffer.empty[com.fasterxml.jackson.databind.JsonNode]
+      var hops = 0
+      while (url.nonEmpty && hops <= offset.size) {
+        hops += 1
+        val Array(p, q) = url.get.split("\\?", 2)
+        val body = get(p, QueryServer.parseQuery(q) ++ extra)
+        keyset ++= results(body)
+        url = Option(om.readTree(body).get("next")).filterNot(_.isNull).map(_.asText)
+      }
+      assert(offset.size >= 2, s"$path $extra: fixture gives ${offset.size} rows")
+      assert(keyset.toSeq == offset,
+        s"$path $extra: keyset walk ${keyset.size} rows != offset ${offset.size}")
+      val (bad, status) = garbage(shape)
+      val r = rs.handle("GET", path, extra + ("after" -> bad))
+      assert(r.status == status, s"$path after=$bad -> ${r.status}")
+      if (status == 400) assert(r.body == """{"message": "Invalid after cursor."}""")
+      shape
+    }
+    assert(walked.size == 16, s"walked ${walked.size} route forms")
+    assert(walked.toSet == garbage.keySet, s"cursor shapes walked: ${walked.toSet}")
   }
 
   test("donors keyset: leaderboard deep-walk cursor under both sort modes") {
@@ -372,7 +485,7 @@ class QueryServerSpec extends SparkSpec {
     // input — harmless, and impossible on a real file scan whose maxRows
     // is unknown). The bounded-top-k claim needs the limit to survive.
     for (sortMost <- Seq(true, false)) {
-      val plan = qs.donorsKeyset(sortMost, None, pageSize = 1)
+      val plan = qs.donorsListing(sortMost).after(None, pageSize = 1)
         .queryExecution.executedPlan.toString
       assert(plan.contains("TakeOrderedAndProject"),
         s"sortMost=$sortMost:\n${plan.take(500)}")

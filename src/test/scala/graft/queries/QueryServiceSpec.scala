@@ -152,16 +152,14 @@ class QueryServiceSpec extends SparkSpec {
     // rendered by Serializers.errorJson from the route's Left.
     val golden = """{"message": "Invalid status value: NotAStatus"}"""
     val lefts = Seq(
-      qs.accountPotApplications("proj1.near", Some("NotAStatus")).left,
-      qs.accountListRegistrations("proj1.near", Some("NotAStatus")).left,
-      qs.listRegistrations(5L, Some("NotAStatus"), None).left,
-      qs.accountPotApplicationsKeyset("proj1.near", Some("NotAStatus"),
-        None).left,
-      qs.accountListRegistrationsKeyset("proj1.near", Some("NotAStatus"),
-        None).left,
-      qs.listRegistrationsKeyset(5L, Some("NotAStatus"), None, None).left)
+      qs.accountPotApplications("proj1.near", Some("NotAStatus")).left.toOption,
+      qs.accountListRegistrations("proj1.near", Some("NotAStatus")).left.toOption,
+      qs.listRegistrations(5L, Some("NotAStatus"), None).left.toOption,
+      qs.accountPotApplicationsListing("proj1.near", Some("NotAStatus")).invalid,
+      qs.accountListRegistrationsListing("proj1.near", Some("NotAStatus")).invalid,
+      qs.listRegistrationsListing(5L, Some("NotAStatus"), None).invalid)
     lefts.foreach { l =>
-      val body = Serializers.errorJson(l.toOption.get)
+      val body = Serializers.errorJson(l.get)
       assert(body == golden, body)
     }
     // A VALID status must never produce the error shape.
@@ -793,71 +791,72 @@ class QueryServiceSpec extends SparkSpec {
 
   test("keyset pagination: page-number parity, no global window (O3 scale path)") {
     // Walk all three keyset pages and compare against the page-number form.
-    val k1 = qs.accountsListKeyset(None, 2).select("id").collect().map(_.getString(0))
-    val k2 = qs.accountsListKeyset(Some(k1.last), 2).select("id").collect().map(_.getString(0))
-    val k3 = qs.accountsListKeyset(Some(k2.last), 2).select("id").collect().map(_.getString(0))
+    val accts = qs.accountsListing
+    val k1 = accts.after(None, 2).select("id").collect().map(_.getString(0))
+    val k2 = accts.after(Some(Seq(k1.last)), 2).select("id").collect().map(_.getString(0))
+    val k3 = accts.after(Some(Seq(k2.last)), 2).select("id").collect().map(_.getString(0))
     val paged = (1 to 3).flatMap(p => qs.accountsList(p, 2).results
       .select("id").collect().map(_.getString(0)))
     assert((k1 ++ k2 ++ k3).toSeq == paged)
 
     // Physical plan: no Window operator, TakeOrderedAndProject instead.
-    val plan = qs.accountsListKeyset(Some("a"), 2).queryExecution.executedPlan.toString
+    val plan = accts.after(Some(Seq("a")), 2).queryExecution.executedPlan.toString
     assert(!plan.contains("Window"))
     assert(plan.contains("TakeOrderedAndProject"))
 
     // Multi-key descending continuation: donated_at DESC, on_chain_id ASC.
-    val f1 = qs.donationsFeedKeyset(None, 2)
-      .select("donated_at", "on_chain_id").collect()
-    val last = (f1.last.getTimestamp(0), f1.last.getLong(1))
-    val f2 = qs.donationsFeedKeyset(Some(last), 2)
+    val feed = qs.accountDonationsSentListing("donor1.near")
+    val f1 = feed.after(None, 1).select("donated_at", "on_chain_id").collect()
+    val last = Seq(f1.last.getTimestamp(0), f1.last.getLong(1))
+    val f2 = feed.after(Some(last), 1)
       .select("on_chain_id").collect().map(_.getLong(0))
-    assert(f1.map(_.getLong(1)).toSeq == Seq(1L, 2L) && f2.toSeq == Seq(3L))
+    assert(f1.map(_.getLong(1)).toSeq == Seq(1L) && f2.toSeq == Seq(2L))
   }
 
   test("keyset variants on every paginated route: offset parity + plan shape") {
     val ts0 = java.sql.Timestamp.valueOf("2024-06-10 00:00:00")
 
     // lists: single page
-    assert(qs.listsListKeyset(None, 10).select("on_chain_id")
+    assert(qs.listsListing.after(None, 10).select("on_chain_id")
       .collect().map(_.getLong(0)).toSeq == Seq(5L))
-    assert(qs.listsListKeyset(Some(5L), 10).count() == 0)
+    assert(qs.listsListing.after(Some(Seq(5L)), 10).count() == 0)
 
     // list registrations: walk size-2 keyset pages, compare to offset form
-    val r1 = qs.listRegistrationsKeyset(5L, None, None, None, 2)
-      .toOption.get.select("submitted_at", "on_chain_id").collect()
-    val rAfter = (r1.last.getTimestamp(0), r1.last.getLong(1))
-    val r2 = qs.listRegistrationsKeyset(5L, None, None, Some(rAfter), 2)
-      .toOption.get.select("on_chain_id").collect().map(_.getLong(0))
+    val regs = qs.listRegistrationsListing(5L, None, None)
+    val r1 = regs.after(None, 2).select("submitted_at", "on_chain_id").collect()
+    val rAfter = Seq(r1.last.getTimestamp(0), r1.last.getLong(1))
+    val r2 = regs.after(Some(rAfter), 2)
+      .select("on_chain_id").collect().map(_.getLong(0))
     val rPaged = (1 to 2).flatMap(p =>
       qs.listRegistrations(5L, None, None, p, 2).toOption.get.results
         .select("on_chain_id").collect().map(_.getLong(0)))
     assert((r1.map(_.getLong(1)) ++ r2).toSeq == rPaged)
-    assert(qs.listRegistrationsKeyset(5L, Some("Bogus"), None, None).isLeft)
+    assert(qs.listRegistrationsListing(5L, Some("Bogus"), None).invalid.nonEmpty)
 
     // pots / factories / sponsors: account-keyed ascending
-    assert(qs.potsListKeyset(None).select("account")
+    val size = QueryService.DefaultPageSize
+    assert(qs.potsListing.after(None, size).select("account")
       .collect().map(_.getString(0)).toSeq == Seq("pot1.pot.near"))
-    assert(qs.potsListKeyset(Some("pot1.pot.near")).count() == 0)
-    assert(qs.potFactoriesListKeyset(None).select("account")
+    assert(qs.potsListing.after(Some(Seq("pot1.pot.near")), size).count() == 0)
+    assert(qs.potFactoriesListing.after(None, size).select("account")
       .collect().map(_.getString(0)).toSeq == Seq("f1.near"))
-    assert(qs.potSponsorsKeyset("pot1.pot.near", None).select("id")
+    assert(qs.potSponsorsListing("pot1.pot.near").after(None, size).select("id")
       .collect().map(_.getString(0)).toSeq == Seq("donor1.near"))
-    assert(qs.potSponsorsKeyset("pot1.pot.near", Some("donor1.near")).count() == 0)
+    assert(qs.potSponsorsListing("pot1.pot.near")
+      .after(Some(Seq("donor1.near")), size).count() == 0)
 
     // pot applications: (submitted_at DESC, applicant ASC) continuation
-    val a1 = qs.potApplicationsKeyset("pot1.pot.near", None, 1)
-      .select("submitted_at", "applicant").collect()
+    val apps = qs.potApplicationsListing("pot1.pot.near")
+    val a1 = apps.after(None, 1).select("submitted_at", "applicant").collect()
     assert(a1.map(_.getString(1)).toSeq == Seq("proj1.near"))
-    val a2 = qs.potApplicationsKeyset("pot1.pot.near",
-      Some((a1.last.getTimestamp(0), a1.last.getString(1))), 1)
+    val a2 = apps.after(Some(Seq(a1.last.getTimestamp(0), a1.last.getString(1))), 1)
       .select("applicant").collect().map(_.getString(0))
     assert(a2.toSeq == Seq("proj2.near"))
 
     // pot donations: parity with the offset form, expanded shape intact
-    val d1 = qs.potDonationsKeyset("pot1.pot.near", None, 1)
-      .select("donated_at", "on_chain_id").collect()
-    val d2 = qs.potDonationsKeyset("pot1.pot.near",
-      Some((d1.last.getTimestamp(0), d1.last.getLong(1))), 1)
+    val dons = qs.potDonationsListing("pot1.pot.near")
+    val d1 = dons.after(None, 1).select("donated_at", "on_chain_id").collect()
+    val d2 = dons.after(Some(Seq(d1.last.getTimestamp(0), d1.last.getLong(1))), 1)
       .select("on_chain_id").collect().map(_.getLong(0))
     val dPaged = (1 to 2).flatMap(p =>
       qs.potDonations("pot1.pot.near", p, 1).results
@@ -866,34 +865,33 @@ class QueryServiceSpec extends SparkSpec {
 
     // pot payouts: the NULL paid_at row must survive the descending
     // continuation (sorts last; strict < alone would drop it)
-    val p1 = qs.potPayoutsKeyset("pot1.pot.near", None, 1)
-      .select("paid_at", "recipient").collect()
+    val pays = qs.potPayoutsListing("pot1.pot.near")
+    val p1 = pays.after(None, 1).select("paid_at", "recipient").collect()
     assert(p1.map(_.getString(1)).toSeq == Seq("proj1.near"))
-    val p2 = qs.potPayoutsKeyset("pot1.pot.near",
-      Some((p1.last.getTimestamp(0), p1.last.getString(1))), 1)
+    val p2 = pays.after(Some(Seq(p1.last.getTimestamp(0), p1.last.getString(1))), 1)
       .select("recipient", "paid_at").collect()
     assert(p2.map(_.getString(0)).toSeq == Seq("proj2.near"))
     assert(p2.head.isNullAt(1))
 
     // account-scoped keyset forms
-    assert(qs.accountPotApplicationsKeyset("proj1.near", None, None)
-      .toOption.get.select("pot").collect().map(_.getString(0)).toSeq ==
+    assert(qs.accountPotApplicationsListing("proj1.near", None).after(None, size)
+      .select("pot").collect().map(_.getString(0)).toSeq ==
       Seq("pot1.pot.near"))
-    assert(qs.accountPotApplicationsKeyset("x", Some("Nope"), None).isLeft)
-    val dr = qs.accountDonationsReceivedKeyset("proj1.near", None, 1)
+    assert(qs.accountPotApplicationsListing("x", Some("Nope")).invalid.nonEmpty)
+    val recv = qs.accountDonationsReceivedListing("proj1.near")
+    val dr = recv.after(None, 1).select("on_chain_id").collect().map(_.getLong(0))
+    val dr2 = recv.after(Some(Seq(ts0, dr.last)), 1)
       .select("on_chain_id").collect().map(_.getLong(0))
-    val dr2 = qs.accountDonationsReceivedKeyset("proj1.near",
-      Some((ts0, dr.last)), 1).select("on_chain_id").collect().map(_.getLong(0))
     assert(dr.toSeq == Seq(1L) && dr2.toSeq == Seq(3L))
-    assert(qs.accountDonationsSentKeyset("donor1.near", None, 10)
+    assert(qs.accountDonationsSentListing("donor1.near").after(None, 10)
       .select("on_chain_id").collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
-    assert(qs.accountPayoutsReceivedKeyset("proj1.near", None)
+    assert(qs.accountPayoutsReceivedListing("proj1.near").after(None, size)
       .select("recipient").collect().map(_.getString(0)).toSeq ==
       Seq("proj1.near"))
-    assert(qs.accountListRegistrationsKeyset("proj1.near", None, None)
-      .toOption.get.select("on_chain_id").collect().map(_.getLong(0)).toSeq ==
-      Seq(11L))
-    assert(qs.accountListRegistrationsKeyset("proj1.near", Some("Bad"), None).isLeft)
+    assert(qs.accountListRegistrationsListing("proj1.near", None).after(None, size)
+      .select("on_chain_id").collect().map(_.getLong(0)).toSeq == Seq(11L))
+    assert(qs.accountListRegistrationsListing("proj1.near", Some("Bad"))
+      .invalid.nonEmpty)
 
     // Plan shape on a continuation page: pushed-down predicate +
     // TakeOrderedAndProject, never a global row_number window. The
@@ -906,8 +904,8 @@ class QueryServiceSpec extends SparkSpec {
       tables(n).write.mode("overwrite").parquet(s"$pdir/$n"))
     val qp = new QueryService(n => spark.read.parquet(s"$pdir/$n"))
     Seq(
-      qp.potPayoutsKeyset("pot1.pot.near", Some((ts0, "a")), 2),
-      qp.listRegistrationsKeyset(5L, None, None, Some((ts0, 11L)), 2).toOption.get
+      qp.potPayoutsListing("pot1.pot.near").after(Some(Seq(ts0, "a")), 2),
+      qp.listRegistrationsListing(5L, None, None).after(Some(Seq(ts0, 11L)), 2)
     ).foreach { df =>
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("Window"))
@@ -937,7 +935,7 @@ class QueryServiceSpec extends SparkSpec {
 
   test("OpenAPI schema document covers every route with its parameters") {
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val doc = m.readTree(qs.openApiSchema())
+    val doc = m.readTree(OpenApi.schemaJson)
     assert(doc.get("openapi").asText().startsWith("3."))
     val paths = doc.get("paths")
     assert(paths.size() == 22)

@@ -38,17 +38,6 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(cache.revalidations == 1)
   }
 
-  test("staleWhileRevalidate=false keeps the synchronous rotation recompute") {
-    val cache = new ResultCache(ttlMs = 300000, staleWhileRevalidate = false)
-    var computes = 0
-    val k = ResultCache.routeKey("/v1/donations", "page" -> 1)
-    cache.memo(k, Seq("u1")) { computes += 1; "v1" }
-    val v = cache.memo(k, Seq("u2")) { computes += 1; "v2" }
-    assert(computes == 2 && v == "v2")
-    assert(cache.memo(k, Seq("u2")) { computes += 1; "v3" } == "v2")
-    assert(computes == 2)
-  }
-
   test("TTL expiry recomputes even with unchanged uids (300 s contract)") {
     val (now, set) = fixedClock(1000000L)
     val cache = new ResultCache(ttlMs = 300000, now = now)
