@@ -20,8 +20,8 @@ package graft.queries
   *    returns "" for it and such routes refresh only at TTL.
   *
   * A marker ROTATION on an entry still inside TTL serves
-  * STALE-WHILE-REVALIDATE: the pre-swap body goes out and a single-flight background recompute
-  * replaces it — so a beat's table swap never turns every client of the
+  * STALE-WHILE-REVALIDATE: the pre-swap body goes out and a
+  * single-flight background recompute replaces it — so a beat's table swap never turns every client of the
   * route into a convoy of recomputes racing the beat's own Spark stages
   * (the round-14 soak measured that convoy at 8-39 s). Bodies lag a
   * swap by one background recompute (seconds); the absolute staleness
